@@ -29,8 +29,9 @@ object Caches {
     * already forced under AQE). Callers re-wrap the plan per invocation
     * (GraftBridge.ofRows), so every call gets a fresh QueryExecution —
     * optimization, physical planning, AQE and execution re-run under the
-    * current conf. Entries hold no storage: dropping one loses only
-    * analysis work.
+    * current conf. Conf that analysis bakes into the plan must be part of
+    * `key` (Q adds time zone, ANSI mode and case sensitivity). Entries hold
+    * no storage: dropping one loses only analysis work.
     */
   def preparedPlan(key: String)(mk: => DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
@@ -135,32 +136,45 @@ object Caches {
 
   private val fingerprints = TrieMap.empty[String, (String, String)]
 
-  /** [[fingerprint]] memoized per (session, dir) behind a single stat of the
-    * root directory (mtime+len), mirroring Tables.schemaMemo: the full
-    * recursive listing re-runs only when the root dir's own entry changes.
-    * Rationale (r16 ADVICE): Q computes a fingerprint per query
-    * CONSTRUCTION — a recursive listing 165+ times per suite pass is a new
-    * per-query driver fixed cost of exactly the kind the memo was built to
-    * remove. Staleness contract: whole-directory replacement (what every
-    * writer in this repo does — overwrite replaces the dir) bumps the root
-    * stat and re-lists; an in-place rewrite of a file inside a partition
-    * subdirectory does not, and such a caller must invalidate via
-    * [[clear]]. No engine path performs in-place sub-partition rewrites.
+  /** First-level stamp of a path: one driver-side `listStatus` giving the
+    * name, modification time and length of each direct child (of the file
+    * itself when the path is a file), name-sorted. No recursion and no
+    * Spark job. What it catches: any change to a direct child, including a
+    * file added, removed or replaced inside a child directory, because
+    * that bumps the child directory's mtime (a rewritten `activity_id=…`
+    * partition, a new partition, an overwrite or an append). What it does
+    * not catch: a change two or more levels down, whose bump stops at a
+    * grandchild. `None` when the path cannot be listed (e.g. missing).
     */
-  def fingerprintCached(spark: SparkSession, dir: String): String = {
-    val statKey = try {
-      val p = new org.apache.hadoop.fs.Path(dir)
+  def stamp(spark: SparkSession, path: String): Option[String] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch { case _: Exception => return fingerprint(spark, dir) }
-    val mapKey = s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}:$dir"
-    fingerprints.get(mapKey) match {
-      case Some((k, fp)) if k == statKey => fp
-      case _ =>
-        val fp = fingerprint(spark, dir)
-        fingerprints.put(mapKey, (statKey, fp))
-        fp
+      Some(fs.listStatus(p)
+        .map(st => s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
+        .sorted.mkString("|"))
+    } catch { case _: Exception => None }
+
+  /** [[fingerprint]] memoized per (session, dir) behind the dir's [[stamp]]:
+    * the full recursive listing re-runs only when the stamp changes, so a
+    * hit costs one `listStatus`. Rationale (r16 ADVICE): Q computes a
+    * fingerprint per query CONSTRUCTION, and a recursive listing 165+ times
+    * per suite pass is a per-query driver fixed cost of exactly the kind
+    * the memo was built to remove. Staleness contract: the stamp's. A
+    * table file replaced in `dir`, or a file or partition added, removed or
+    * replaced inside a table directory one level down, re-lists. A rewrite
+    * inside a partition of a partitioned table (two levels down) does not,
+    * and such a caller must invalidate via [[clear]].
+    */
+  def fingerprintCached(spark: SparkSession, dir: String): String =
+    stamp(spark, dir).fold(fingerprint(spark, dir)) { st =>
+      val mapKey = s"${org.apache.spark.sql.GraftBridge.sessionUUID(spark)}:$dir"
+      fingerprints.get(mapKey) match {
+        case Some((seen, fp)) if seen == st => fp
+        case _ =>
+          val fp = fingerprint(spark, dir)
+          fingerprints.put(mapKey, (st, fp))
+          fp
+      }
     }
-  }
 }

@@ -19,33 +19,31 @@ object Tables {
     * measured 25-35 ms per table per query construction (ProfileQ r16:
     * 2-5 such jobs per query = a fixed ~0.1 s tax on all 165 bench
     * queries). A table's schema is a property of its files, so it is
-    * inferred ONCE per (app, path, mtime, len) and passed back explicitly;
-    * the mtime+len key re-infers when a path is rewritten in-session.
-    * Staleness contract (r16 ADVICE, documented): the key is the table
-    * root's OWN stat, so only whole-path replacement invalidates — every
-    * writer in this repo overwrites the table root (mode("overwrite")
-    * replaces the dir), which bumps it. An in-place rewrite of files
-    * inside a partition subdirectory would NOT bump the root; no engine
-    * path does that, and a session that did must call Caches.clear() and
-    * use a fresh path or app. One stat call replaces one job.
+    * inferred ONCE per (app, path, [[Caches.stamp]]) and passed back
+    * explicitly; the stamp re-infers when a path is rewritten in-session.
+    * Staleness contract: the stamp's. A single-file table is its own stamp
+    * (name, mtime, length); a directory table re-infers when a file or
+    * partition directory is added, removed or replaced directly in it, or
+    * when a file inside one of its partition directories is. A change two
+    * levels below the table path is not seen; a session that makes one must
+    * call Caches.clear() and use a fresh path or app. One `listStatus`
+    * replaces one job.
     */
   private val schemaMemo =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      s"${spark.sparkContext.applicationId}:$path:${st.getModificationTime}:${st.getLen}"
-    } catch { case _: Exception =>
-      // missing/unstattable path: fall through to the plain read so the
+    Caches.stamp(spark, path) match {
+      // missing/unlistable path: fall through to the plain read so the
       // caller sees the standard PATH_NOT_FOUND, not a memo artifact
-      return spark.read.parquet(path)
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val schema = schemaMemo.getOrElseUpdate(
+          s"${spark.sparkContext.applicationId}:$path:$st",
+          spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
     }
-    val schema = schemaMemo.getOrElseUpdate(key, spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
   }
 
   /** Normalize `events.ts` to session-zoned TimestampType. The testdata

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.concurrent.TrieMap
+
 /** Typed façade mirroring the reference's tool surface
   * (docs/mcp-tools-reference.md) over the silver tables: one method per
   * analytical tool family, each a thin shaping layer over the operator /
@@ -20,10 +22,39 @@ import org.apache.spark.sql.functions._
   * ingest_activity/catch_up_ingest -> sources.GarminJson +
   * streaming.Streams.catchUp; save/get profile + reviews -> plain
   * SilverWriter.upsertByPartition round trips; export -> SilverWriter.export.
+  *
+  * Table resolution: [[table]] resolves each `root/<table>` once per façade
+  * instance and hands the same DataFrame back while the table's
+  * [[graft.Caches.stamp]] (one `listStatus` of its direct children, no
+  * Spark job) is unchanged, so a hot read neither re-lists partitions nor
+  * re-infers the schema. The stamp catches any write that adds, removes or
+  * replaces a direct child or a file inside one: a rewritten or new
+  * `activity_id` partition, an overwrite or an append. It does not catch a
+  * change two or more levels below the table root. A DataFrame a caller
+  * built before a write keeps the files it resolved and is not refreshed;
+  * only the next [[table]] call sees the write. The map lives and dies with
+  * this instance: two façades over one root resolve independently.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
-  def table(name: String): DataFrame = spark.read.parquet(s"$root/$name")
+  private val resolved = TrieMap.empty[String, (String, DataFrame)]
+
+  def table(name: String): DataFrame = {
+    val path = s"$root/$name"
+    graft.Caches.stamp(spark, path) match {
+      // missing path: the plain read raises the AnalysisException callers catch
+      case None => spark.read.parquet(path)
+      case Some(st) => resolved.get(name) match {
+        case Some((seen, df)) if seen == st => df
+        case _ =>
+          // stamped before the read: a write racing it leaves the entry
+          // with an older stamp, so the next call re-resolves
+          val df = spark.read.parquet(path)
+          resolved.put(name, (st, df))
+          df
+      }
+    }
+  }
 
   /** Validate-then-select column allowlist (reference
     * readers/metadata.py:18-35): caller-supplied column names are checked

@@ -1,0 +1,118 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.api.Graft
+import graft.ingest.SilverWriter
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The façade resolves each silver table once and reuses it while the
+  * table's first-level stamp holds. These specs pin both halves: one
+  * `Graft` instance sees every write the engine makes on its next read,
+  * and a repeated read of an unchanged table starts no Spark job. Each
+  * test builds its own root (not the shared ApiFixture), since it writes.
+  */
+class ApiFreshnessSpec extends SparkSpec {
+
+  private def newRoot(): String =
+    Files.createTempDirectory("graft-api-fresh").toString
+
+  private def splitRows(ids: Seq[Long], hr: Double): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Schemas.conform(
+      ids.flatMap(id => (1 to 3).map(i => (id, i, hr + i))).toDF(
+        "activity_id", "split_index", "heart_rate"),
+      "splits")
+  }
+
+  test("a rewritten partition and a new partition are seen on the next read") {
+    val root = newRoot()
+    val path = s"$root/splits"
+    SilverWriter.upsertByPartition(splitRows(Seq(1L, 2L), 140.0), path)
+    val g = new Graft(spark, root)
+    def maxHr(id: Long): Double =
+      g.splits.paceHr(id).agg(max("heart_rate")).head().getDouble(0)
+    assert(maxHr(1L) === 143.0)
+    assert(maxHr(2L) === 143.0)
+
+    SilverWriter.upsertByPartition(splitRows(Seq(1L), 150.0), path)
+    assert(maxHr(1L) === 153.0)
+    assert(maxHr(2L) === 143.0)
+
+    SilverWriter.upsertByPartition(splitRows(Seq(3L), 160.0), path)
+    assert(maxHr(3L) === 163.0)
+    assert(g.table("splits").select("activity_id").distinct().count() === 3L)
+  }
+
+  test("profile: a missing table, then its first write, then an overwrite") {
+    val g = new Graft(spark, newRoot())
+    val s = spark
+    import s.implicits._
+    def profile(day: Int): DataFrame =
+      Seq(("default", day)).toDF("user_id", "week_start_day")
+    assert(g.weekStartDay() === 0) // athlete_profile not written yet
+    g.athlete.saveProfile(profile(3))
+    assert(g.weekStartDay() === 3)
+    g.athlete.saveProfile(profile(5))
+    assert(g.weekStartDay() === 5)
+    assert(g.table("athlete_profile").count() === 1L)
+  }
+
+  test("weekly reviews: each append is seen on the next read") {
+    val g = new Graft(spark, newRoot())
+    val s = spark
+    import s.implicits._
+    def review(id: Int, createdAt: String): DataFrame =
+      Seq((id, "default", java.sql.Date.valueOf("2026-06-01"),
+        java.sql.Timestamp.valueOf(createdAt), s"rev $id"))
+        .toDF("review_id", "user_id", "week_start_date", "created_at",
+          "review_data")
+    g.athlete.saveWeeklyReview(review(1, "2026-06-08 10:00:00"))
+    assert(g.table("weekly_reviews").count() === 1L)
+    g.athlete.saveWeeklyReview(review(2, "2026-06-09 10:00:00"))
+    assert(g.table("weekly_reviews").count() === 2L)
+    val latest = g.athlete.latestReviews().collect()
+    assert(latest.map(_.getAs[Int]("review_id")).toSeq === Seq(2))
+  }
+
+  test("a repeated read of an unchanged partitioned table starts no job") {
+    val root = newRoot()
+    // 40 partitions: above Spark's parallel-listing threshold (32), so a
+    // fresh resolution lists them with a job of its own
+    SilverWriter.upsertByPartition(splitRows((1L to 40L), 140.0),
+      s"$root/splits")
+    val g = new Graft(spark, root)
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.tag") == tag)
+          jobs.incrementAndGet()
+    }
+    def jobsToBuild(): Int = {
+      ListenerBusDrain(sc)
+      jobs.set(0)
+      g.table("splits").where(col("activity_id") === 7L)
+      ListenerBusDrain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      assert(jobsToBuild() >= 1)
+      assert(jobsToBuild() === 0)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    // the reused frame still prunes to the one partition and reads it
+    assert(g.table("splits").where(col("activity_id") === 7L).count() === 3L)
+  }
+}

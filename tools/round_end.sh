@@ -5,16 +5,17 @@
 # snapshot time) becomes a tooling guarantee instead of a discipline one.
 #
 #   tools/round_end.sh            # test + verify/oracle(sf0.01) + bench(sf0.1)
+#                                 # + traced api_serve
 #   SCALE_DIRS="target/sf1 target/sf2" tools/round_end.sh   # + scale gates
 #
 # Developer tooling only — the engine itself is the Scala library.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/4 sbt test (includes shuffle-budget, BNL, window, pruning nets)"
+echo "== 1/5 sbt test (includes shuffle-budget, BNL, window, pruning nets)"
 sbt -batch test
 
-echo "== 2/4 Verify + type-strict oracle at sf0.01 (the driver's gate)"
+echo "== 2/5 Verify + type-strict oracle at sf0.01 (the driver's gate)"
 OUT=${OUT:-/tmp/verify_round_end}
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
@@ -22,7 +23,7 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
 # equality of decimals cannot prove driver-hash equality (r11 q_ivf_train).
 GRAFT_ORACLE_STRICT=1 python3 tools/check_oracle.py /root/testdata/sf0.01 "$OUT"
 
-echo "== 3/4 contract bench at sf0.1 (refreshes the committed BENCH_FULL.json)"
+echo "== 3/5 contract bench at sf0.1 (refreshes the committed BENCH_FULL.json)"
 # Refreshing the committed artifact is an EXPLICIT act: Bench's default
 # output is a timestamped file under target/bench/, so ad-hoc runs can
 # never clobber this one (r13 verdict #3).
@@ -30,7 +31,17 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_OUT=BENCH_FULL.json \
   sbt -batch "runMain graft.Bench" \
   | grep '"metric"' | sed 's/^\[info\] //'
 
-echo "== 4/4 scale-aware shuffle gates (set SCALE_DIRS to enable)"
+echo "== 4/5 traced api_serve: correct, no failed op, no file listing on a hot read"
+python3 perfbench/run.py --workload api_serve --seed 1 --seconds 10 --trace 1 \
+  | tail -n 1 | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+listed = r["metrics"]["api.files_listed_per_call"]["value"]
+print("api_serve: correct=%s failed=%s files_listed_per_call=%s"
+      % (r["correct"], r["failed"], listed))
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 and listed == 0 else 1)'
+
+echo "== 5/5 scale-aware shuffle gates (set SCALE_DIRS to enable)"
 for d in ${SCALE_DIRS:-}; do
   sf=$(basename "$d")
   blessed="src/test/resources/shuffle_blessed_${sf}.tsv"
