@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Per-query ShuffleExchange counts for an arbitrary sf directory — the
   * CLI twin of PlanAuditSpec's shuffle-budget test, for diffing the
   * committed budget (recorded at test scale) against the plans Catalyst
@@ -8,12 +11,8 @@ package graft
   * (broadcast → SMJ being the canonical one) that the fixed-scale
   * budget can't see.
   *
-  * `runMain graft.ShuffleCount <sfDir>` → TSV on stdout (query \t count),
-  * same canonical warm-cache state as the spec: every query constructed
-  * (registers the memoized shared frames), registry force-materialized,
-  * then counts taken on the PREPARED plan with AQE off for the planning
-  * pass (AdaptiveSparkPlanExec hides its unfinalized subtree from
-  * collect). Nothing executes in the counting pass.
+  * `runMain graft.ShuffleCount <sfDir>` → TSV on stdout (query \t count)
+  * from [[counts]], the routine the spec's budget test calls too.
   *
   * `runMain graft.ShuffleCount <sfDir> <budget.tsv> [blessed.tsv]` is the
   * SCALE-AWARE gate: diffs the counts against the committed test-scale
@@ -23,6 +22,33 @@ package graft
   * AGAIN is drift too: blessing pins the at-scale count, not a wildcard.
   */
 object ShuffleCount {
+  /** `(query, ShuffleExchange count)` for every registered query, sorted by
+    * name, in the canonical warm-cache state. Shuffle counts depend on
+    * whether the Caches-memoized shared frames are MATERIALIZED: a
+    * materialized InMemoryRelation reports its actual cached-batch size
+    * instead of the child-plan estimate, which flips downstream SMJ <->
+    * broadcast decisions. So every query is constructed first (registering
+    * its frames) and the registry is force-materialized. Exchanges are
+    * inserted by EnsureRequirements, so the count is taken on the PREPARED
+    * plan, with AQE off for the planning pass because AdaptiveSparkPlanExec
+    * hides its unfinalized subtree from collect. Nothing executes in the
+    * counting pass itself.
+    */
+  def counts(spark: SparkSession, sfDir: String): Seq[(String, Int)] = {
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    queries.foreach { case (_, fn) => fn(spark, sfDir) }
+    Caches.warm()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      queries.map { case (name, fn) =>
+        name -> fn(spark, sfDir).queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e
+        }.size
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val budget: Map[String, Int] = args.lift(1).map { p =>
@@ -36,17 +62,7 @@ object ShuffleCount {
     }.getOrElse(Map.empty)
     val spark = GraftSession.build("graft-shufflecount")
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      fn(spark, sfDir) }
-    Caches.warm()
-    val counts = try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> fn(spark, sfDir).queryExecution.executedPlan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.size
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val counts = this.counts(spark, sfDir)
     counts.foreach { case (name, c) => println(s"$name\t$c") }
     spark.stop()
     if (budget.nonEmpty) {

@@ -134,27 +134,24 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Session factory used by Bench and tests (Verify builds its own per the
-  * driver contract). AQE on; shuffle partitions sized for local[32] — on a
-  * real cluster this would be `spark.sql.adaptive.coalescePartitions` doing
-  * the sizing from runtime stats.
+/** The one session factory: Bench, Verify, the dev mains and the test suite
+  * all run under this config, so the plans the oracle and the plan nets
+  * check are the plans that are timed. AQE and partition coalescing are on
+  * (Spark 4 defaults).
   */
 object GraftSession {
-  def build(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle width = core count. Measured r16 (hot-22 subset, floor 64k):
-    // 2×cores REGRESSED wall 19.5 -> 26.8 s and executor CPU 229 -> 363 k
-    // ms — per-task fixed cost dominates at bench scale, so extra width
-    // buys contention, not parallelism. Env-overridable for A/Bs; derived
-    // from cores, never a fixed local constant.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
+  /** `cpus` defaults to `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def build(appName: String = "graft",
+            cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+              Runtime.getRuntime.availableProcessors.toString)): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      // Shuffle width = core count. Measured r16 (hot-22 subset, floor 64k):
+      // 2×cores REGRESSED wall 19.5 -> 26.8 s and executor CPU 229 -> 363 k
+      // ms — per-task fixed cost dominates at bench scale, so extra width
+      // buys contention, not parallelism.
+      .config("spark.sql.shuffle.partitions", cpus)
       // AQE coalesced-partition floor, r16-measured (OPTIMIZATION_r16.md):
       // tasks under ~0.5 MiB of shuffle input carry more fixed per-task
       // cost than compute — sweeping 16k/64k/128k/256k/512k/1m/2m on the
@@ -169,30 +166,31 @@ object GraftSession {
       // production scale the 64 MiB advisory target dominates and the
       // floor never binds.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "512k"))
-      // Scan-split open cost: LEFT AT THE 4 MiB DEFAULT (r17, measured).
+        "512k")
+      // Scan-split open cost: the 4 MiB default, measured (r17).
       // Splitting the 2-16 MiB bench tables into 32 scan tasks (openCost
       // 256 KiB) parallelized single-task scan stages but regressed the
       // 12-query probe subset 5.8 -> 6.4 s: at this input size ~30 extra
       // tasks per stage cost more in per-task fixed overhead than the
       // parallelism returns — the same width-vs-contention tradeoff as
-      // the r16 AQE-floor sweep. Env seam kept for future A/Bs.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      // let persisted frames KEEP their output partitioning (off by
-      // default under AQE): the memoized shared frames are deliberately
-      // persisted pre-partitioned on their join keys, and with this off
-      // every cache consumer re-shuffled what the build already placed
+      // the r16 AQE-floor sweep.
+      .config("spark.sql.files.openCostInBytes", "4194304")
+      // Lets AQE re-plan (coalesce) the build plans of persisted frames,
+      // at the price Spark documents: a cached frame then no longer
+      // promises its output partitioning, so a consumer keyed on it may
+      // re-shuffle. Measured on the committed shuffle budget (sf0.001,
+      // 4 cores), turning it on moves five plans: q_doc_chunks,
+      // q_dsir_weight, q_text_clf_score and q_text_repetition gain one
+      // exchange (1 -> 2) and q_vocab_growth loses one (4 -> 3). The value
+      // is the one Bench has always timed.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       // Generated-class cache (static conf, default 100 entries): a
       // 165-query engine cycles ~several hundred distinct generated
       // sources per suite, so the default LRU thrashes and stages pay
       // Janino recompiles all run long. Sized to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-  }
 }

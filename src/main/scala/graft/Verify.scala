@@ -1,114 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{
-  Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Sort}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * [[GraftSession]], the config Bench times.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_ONLY=q_a,q_b : dev-only subset dump (scale-rung
-    // re-checks of individual queries); unset = the driver's full dump.
+    // GRAFT_VERIFY_ONLY=q_a,q_b : dev-only subset dump (single-query parity
+    // checks); unset = the driver's full dump.
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Dev-only scale-rung seams (unset on the driver's path, behavior
-    // identical): GRAFT_VERIFY_RESUME=1 skips any query whose dump already
-    // committed (_SUCCESS present) — a multi-hour ×300 dump can survive a
-    // restart instead of redoing finished queries. GRAFT_VERIFY_NO_COALESCE
-    // =1 keeps the final stage parallel: coalesce(1) funnels each query's
-    // last stage through ONE task, which is fine at sf0.01 but makes the
-    // 200M+-row pair dumps single-threaded at ×300. Order stays comparable
-    // either way — every registered query ends in a total global sort
-    // (SortTotalitySpec), so the range-partitioned part files read back in
-    // filename order ARE the sorted sequence.
-    val resume = sys.env.get("GRAFT_VERIFY_RESUME").exists(_ == "1")
-    val noCoalesce = sys.env.get("GRAFT_VERIFY_NO_COALESCE").exists(_ == "1")
-    // Resume identity (r13 ADVICE): a _SUCCESS left by a run against a
-    // DIFFERENT sfDir or query set must not be silently reused — the gate
-    // would validate stale results. First run writes the identity; a
-    // resume against a mismatching outDir refuses instead.
-    val fingerprint = s"sfDir=$sfDir queries=" +
-      SparkEntry.queries.keys.toSeq.sorted.mkString(",").hashCode.toHexString
-    val fpPath = Paths.get(s"$outDir/.verify_fingerprint")
-    if (resume && Files.exists(fpPath)) {
-      val prior = Files.readString(fpPath)
-      require(prior == fingerprint,
-        s"[verify] resume refused: $outDir was dumped as <$prior>, this " +
-          s"run is <$fingerprint> — use a fresh outDir per build/sfDir")
-    } else if (!resume && Files.exists(fpPath)
-               && Files.readString(fpPath) != fingerprint) {
-      // Non-resume run into an outDir dumped under a DIFFERENT identity:
-      // stamping the new fingerprint over stale dumps would let an
-      // interrupted run + later RESUME=1 silently validate them (r14
-      // ADVICE). Stripping only _SUCCESS is not enough either — the gate
-      // reads {outDir}/{name}/*.parquet without checking the marker, so a
-      // gate racing an interrupted re-dump could still compare the prior
-      // identity's DATA for not-yet-redumped queries (r15 ADVICE). Delete
-      // the whole per-query dump dirs so stale rows cannot be read at all.
-      SparkEntry.queries.keys.foreach { name =>
-        val dir = Paths.get(s"$outDir/$name")
-        if (Files.exists(dir)) {
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-        }
-      }
-    }
-    Files.writeString(fpPath, fingerprint)
-    writeOracleJson(outDir, only) // before the dumps: a gate tailing the
-    // dump dir (scale rungs) needs the SQL as soon as results land
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .filter { case (name, _) =>
-        val done = resume &&
-          Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
-        if (done) System.err.println(s"[verify] $name: resumed (skip)")
-        !done
-      }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // noCoalesce order-comparability rests on a final global Sort
-        // (range-partitioned part files read back in filename order ARE
-        // the sorted sequence) — SortTotalitySpec tolerates unsorted
-        // one-row queries, so a future unsorted MULTI-row query would
-        // dump partition-order-dependent files and fail the gate flakily.
-        // Catch it here, loudly, at dump time (r13 ADVICE).
-        if (noCoalesce && !orderComparable(df.queryExecution.analyzed))
-          System.err.println(s"[verify] WARNING $name: no final global " +
-            "Sort — parallel part files are NOT order-comparable; gate " +
-            "mismatches on this query are a dump-order artifact")
-        (if (noCoalesce) df else df.coalesce(1))
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    new java.io.File(outDir).mkdirs()
+    writeOracleJson(outDir, only)
+    dump(spark, sfDir, outDir, SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) })
     spark.stop()
   }
 
-  /** True when a parallel (noCoalesce) dump of this plan reads back in a
-    * deterministic order: a topmost global Sort (through the projection /
-    * limit wrappers, SortTotalitySpec's finalSort shape) or a grand
-    * aggregate (one row — nothing to order).
+  /** Writes each query's result to `outDir/<name>` as one parquet file.
+    * The query's previous dump is deleted before the query is built, so a
+    * query that fails leaves no rows behind: the oracle reads every parquet
+    * file under `<name>` without a `_SUCCESS` check and must see "missing",
+    * never an older run's result. A failure is logged and the dump goes on.
     */
-  private def orderComparable(p: LogicalPlan): Boolean = p match {
-    case s: Sort if s.global => true
-    case a: Aggregate if a.groupingExpressions.isEmpty => true
-    case pr: Project => orderComparable(pr.child)
-    case l: GlobalLimit => orderComparable(l.child)
-    case l: LocalLimit => orderComparable(l.child)
-    case o: Offset => orderComparable(o.child) // .offset(n).limit(k) paging
-    case _ => false
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Iterable[(String, (SparkSession, String) => DataFrame)])
+      : Unit = queries.foreach { case (name, fn) =>
+    val dir = Paths.get(outDir, name)
+    if (Files.exists(dir)) Files.walk(dir)
+      .sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    try {
+      fn(spark, sfDir).coalesce(1).write.parquet(dir.toString)
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    }
   }
 
   private def writeOracleJson(outDir: String,

@@ -179,30 +179,10 @@ class PlanAuditSpec extends SparkSpec {
     //   SHUFFLE_BUDGET_RECORD=1 sbt "testOnly graft.PlanAuditSpec"
     // and the diff lands in review like any other code change.
     val path = java.nio.file.Paths.get("src/test/resources/shuffle_budget.tsv")
-    // Canonical cache state first: shuffle counts depend on whether the
-    // Caches-memoized shared frames are MATERIALIZED — a materialized
-    // InMemoryRelation reports its actual cached-batch size instead of the
-    // child-plan estimate, which flips downstream SMJ <-> broadcast
-    // decisions (observed: 11 queries lose 1-2 shuffles when another suite
-    // has executed the shared frames first). Pin the WARM state — the
-    // state Bench times and a long-lived session converges to — by
-    // registering every frame (a construction pass) and force-
-    // materializing the registry before counting.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      fn(spark, sfDir) }
-    graft.Caches.warm()
-    // exchanges are inserted by EnsureRequirements, so count on the
-    // PREPARED plan (executedPlan) — with AQE off for the planning pass,
-    // because AdaptiveSparkPlanExec hides its unfinalized subtree from
-    // collect. Nothing executes in the counting pass itself.
-    val counts = try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> fn(spark, sfDir).queryExecution.executedPlan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.size
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // Counted in the WARM cache state — the state Bench times and a
+    // long-lived session converges to (observed: 11 queries lose 1-2
+    // shuffles when another suite has executed the shared frames first).
+    val counts = ShuffleCount.counts(spark, sfDir)
     val rendered = counts.map { case (n, c) => s"$n\t$c" }
       .mkString("", "\n", "\n")
     if (!java.nio.file.Files.exists(path) ||
@@ -260,7 +240,8 @@ class PlanAuditSpec extends SparkSpec {
         java.nio.file.Paths.get("src/test/resources/shuffle_budget.tsv")))
       .asScala.filter(_.nonEmpty)
       .map { l => val Array(n, c) = l.split("\t"); n -> c.toInt }.toMap
-    val blessedFiles = Seq("shuffle_blessed_sf1.tsv", "shuffle_blessed_sf2.tsv")
+    val blessedFiles = Seq("shuffle_blessed_sf1.tsv", "shuffle_blessed_sf2.tsv",
+      "shuffle_blessed_sf10.tsv")
       .map(f => java.nio.file.Paths.get(s"src/test/resources/$f"))
     blessedFiles.foreach { blessedPath =>
       assert(java.nio.file.Files.exists(blessedPath), s"$blessedPath missing")

@@ -4,16 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session startup dominates test wall-clock otherwise).
+  * session startup dominates test wall-clock otherwise), built by the same
+  * factory and config Bench times, at a fixed 4 cores.
   */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build("graft-test", cpus = "4")
 
   val sfDir = "/root/testdata/sf0.001"
 }

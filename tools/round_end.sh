@@ -15,13 +15,17 @@ cd "$(dirname "$0")/.."
 echo "== 1/5 sbt test (includes shuffle-budget, BNL, window, pruning nets)"
 sbt -batch test
 
-echo "== 2/5 Verify + type-strict oracle at sf0.01 (the driver's gate)"
-OUT=${OUT:-/tmp/verify_round_end}
-rm -rf "$OUT"
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
-# STRICT: also fail decimal/hugeint-typed output columns — value-level
-# equality of decimals cannot prove driver-hash equality (r11 q_ivf_train).
-GRAFT_ORACLE_STRICT=1 python3 tools/check_oracle.py /root/testdata/sf0.01 "$OUT"
+echo "== 2/5 Verify + type-strict oracle at sf0.01, at 4 and at 32 cores"
+# Results must not depend on the core count: Verify runs under the timed
+# GraftSession config, whose shuffle width and task count follow the cores.
+for cpus in 4 32; do
+  out=${OUT:-/tmp/verify_round_end}_c$cpus
+  rm -rf "$out"
+  SPARK_GRAFT_CPUS=$cpus sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out"
+  # STRICT: also fail decimal/hugeint-typed output columns — value-level
+  # equality of decimals cannot prove driver-hash equality (r11 q_ivf_train).
+  GRAFT_ORACLE_STRICT=1 python3 tools/check_oracle.py /root/testdata/sf0.01 "$out"
+done
 
 echo "== 3/5 contract bench at sf0.1 (refreshes the committed BENCH_FULL.json)"
 # Refreshing the committed artifact is an EXPLICIT act: Bench's default
