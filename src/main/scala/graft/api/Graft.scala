@@ -3,7 +3,7 @@ package graft.api
 import graft.domain._
 import graft.ingest.SilverWriter
 import graft.operators.Aggregates
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,12 +39,17 @@ final class Graft(val spark: SparkSession, root: String) {
 
   private val resolved = TrieMap.empty[String, (String, DataFrame)]
 
-  def table(name: String): DataFrame = {
+  // missing path: the plain read raises Spark's AnalysisException
+  def table(name: String): DataFrame =
+    optionalTable(name).getOrElse(spark.read.parquet(s"$root/$name"))
+
+  /** The table, or `None` when its path is missing: the stamp already
+    * answers that, so an optional table costs no failed read.
+    */
+  private def optionalTable(name: String): Option[DataFrame] = {
     val path = s"$root/$name"
-    graft.Caches.stamp(spark, path) match {
-      // missing path: the plain read raises the AnalysisException callers catch
-      case None => spark.read.parquet(path)
-      case Some(st) => resolved.get(name) match {
+    graft.Caches.stamp(spark, path).map { st =>
+      resolved.get(name) match {
         case Some((seen, df)) if seen == st => df
         case _ =>
           // stamped before the read: a write racing it leaves the entry
@@ -55,6 +60,14 @@ final class Graft(val spark: SparkSession, root: String) {
       }
     }
   }
+
+  /** Collects `df` and sorts it on the driver by `key`, ascending with
+    * nulls first as `orderBy` does: a read that collects every row anyway
+    * needs no range exchange.
+    */
+  private def collectSorted[K](df: DataFrame, key: String)(
+      implicit ord: Ordering[K]): Seq[Row] =
+    df.collect().toSeq.sortBy(r => Option(r.getAs[K](key)))
 
   /** Validate-then-select column allowlist (reference
     * readers/metadata.py:18-35): caller-supplied column names are checked
@@ -98,7 +111,8 @@ final class Graft(val spark: SparkSession, root: String) {
     private def group(activityId: Long, cols: Seq[String],
         statisticsOnly: Boolean): DataFrame = {
       val df = splitsOf(activityId).select(cols.map(col): _*)
-      if (!statisticsOnly) df.orderBy("split_index")
+      // one activity's laps: sorted in one partition, no range exchange
+      if (!statisticsOnly) df.coalesce(1).sortWithinPartitions("split_index")
       else Aggregates.statsBlock(df.drop("split_index"), Seq.empty,
         cols.filterNot(c => c == "split_index" || c == "hr_zone" || c == "terrain_type"))
     }
@@ -115,13 +129,12 @@ final class Graft(val spark: SparkSession, root: String) {
 
     /** get_interval_analysis: segments + rep fatigue + recovery rates. */
     def intervalAnalysis(activityId: Long): Seq[Performance.Segment] = {
-      val rows = splitsOf(activityId)
-        .orderBy("split_index")
-        .select("intensity_type", "duration_seconds", "heart_rate",
-          "pace_seconds_per_km", "ground_contact_time")
-        .collect()
+      val rows = collectSorted[java.lang.Integer](splitsOf(activityId)
+        .select("split_index", "intensity_type", "duration_seconds",
+          "heart_rate", "pace_seconds_per_km", "ground_contact_time"),
+        "split_index")
       var t = 0.0
-      rows.toSeq.map { r =>
+      rows.map { r =>
         val dur = Option(r.getAs[java.lang.Double]("duration_seconds"))
           .map(_.doubleValue).getOrElse(0.0)
         val seg = Performance.Segment(
@@ -169,12 +182,10 @@ final class Graft(val spark: SparkSession, root: String) {
   object physiology {
     /** get_recovery_status from the daily_wellness frame (date-ascending). */
     def recoveryStatus(): String = {
-      val rows = table("daily_wellness")
-        .orderBy("date")
-        .select("resting_hr", "hrv_overnight", "hrv_baseline_low",
-          "readiness", "sleep_score")
-        .collect()
-      val nights = rows.toSeq.map { r =>
+      val rows = collectSorted[java.sql.Date](table("daily_wellness")
+        .select("date", "resting_hr", "hrv_overnight", "hrv_baseline_low",
+          "readiness", "sleep_score"), "date")
+      val nights = rows.map { r =>
         (Option(r.getAs[java.lang.Double]("hrv_overnight")).map(_.doubleValue),
           Option(r.getAs[java.lang.Double]("hrv_baseline_low")).map(_.doubleValue))
       }
@@ -188,9 +199,9 @@ final class Graft(val spark: SparkSession, root: String) {
 
     /** get_wellness_baseline_deviation for one metric column. */
     def wellnessDeviation(metricCol: String, direction: String): Wellness.MetricBaseline = {
-      val rows = table("daily_wellness").orderBy("date")
-        .select(col(metricCol).cast("double")).collect()
-        .map(r => Option(r.getAs[java.lang.Double](0)).map(_.doubleValue)).toSeq
+      val rows = collectSorted[java.sql.Date](table("daily_wellness")
+        .select(col("date"), col(metricCol).cast("double")), "date")
+        .map(r => Option(r.getAs[java.lang.Double](1)).map(_.doubleValue))
       Wellness.metricBaseline(rows.dropRight(1).takeRight(30),
         rows.lastOption.flatten, metricCol, direction)
     }
@@ -201,9 +212,7 @@ final class Graft(val spark: SparkSession, root: String) {
     def currentFitnessSummary(asOf: java.sql.Date): FitnessAssessor.Assessment =
       FitnessAssessor.assess(spark, table("activities"), asOf,
         weekStartDay = weekStartDay(),
-        vo2max =
-          try Some(table("vo2_max"))
-          catch { case _: org.apache.spark.sql.AnalysisException => None })
+        vo2max = optionalTable("vo2_max"))
 
     /** get_race_readiness: blended predictions per standard distance. */
     def raceReadiness(vdot: Double,
@@ -228,8 +237,8 @@ final class Graft(val spark: SparkSession, root: String) {
     * this façade shares (reference utils/week.py).
     */
   def weekStartDay(userId: String = "default"): Int =
-    try Aggregates.weekStartDayOf(table("athlete_profile"), userId)
-    catch { case _: org.apache.spark.sql.AnalysisException => 0 }
+    optionalTable("athlete_profile")
+      .fold(0)(Aggregates.weekStartDayOf(_, userId))
 
   /** Trend tools (web/queries/trends.py): weekly/monthly volume honouring
     * the configured week start.
@@ -342,12 +351,15 @@ final class Graft(val spark: SparkSession, root: String) {
   /** Heat-adjustment tools (rag/queries/heat_adjustment.py:117-192): the
     * hinge-model fit + climate-neutral trend over a date window. Per-run
     * temperature is the activity's mean air temperature from the time
-    * series; Stats.heatTrend does the fit (one distributed covariance
-    * aggregate + 1-row Cramer solve) and carries the reference's n >= 10
-    * insufficient_data gate.
+    * series, and x3 is the raw day number (days since 1970-01-01): the fit
+    * is shift-invariant in x3, so no base-date join is needed.
+    * Stats.heatTrend does the fit and the neutral-HR trend as ONE
+    * distributed aggregate + 1-row column math, and carries the
+    * reference's n >= 10 insufficient_data gate.
     */
   object heat {
-    private def observations(startDate: String, endDate: String): DataFrame = {
+    private def observations(startDate: String, endDate: String,
+        refTempC: Double): DataFrame = {
       val temps = table("time_series_metrics")
         .groupBy("activity_id")
         .agg(avg("air_temperature").as("temp_c"))
@@ -359,42 +371,36 @@ final class Graft(val spark: SparkSession, root: String) {
           (lit(1000.0) / col("average_speed")).as("x1"))
       acts.join(temps, Seq("activity_id"))
         .where(col("temp_c").isNotNull)
-    }
-
-    private def withDays(obs: DataFrame, refTempC: Double): DataFrame = {
-      val base = obs.agg(min(col("activity_date")).as("base_date"))
-      obs.crossJoin(broadcast(base))
         .withColumn("x2", graft.operators.Stats.heatHinge(col("temp_c"), refTempC))
         .withColumn("x3",
-          datediff(col("activity_date"), col("base_date")).cast("double"))
+          datediff(col("activity_date"), lit("1970-01-01")).cast("double"))
     }
 
     /** get_heat_adjusted_trend's coefficients + neutral-HR time trend
-      * (1 row; status = insufficient_data below the fit gate).
+      * (1 row; status = insufficient_data below the fit gate). `b0` is the
+      * intercept at the window's first observed day.
       */
     def heatTrend(startDate: String, endDate: String,
         refTempC: Double = 15.0, minN: Int = 10): DataFrame =
       graft.operators.Stats.heatTrend(
-        withDays(observations(startDate, endDate), refTempC)
+        observations(startDate, endDate, refTempC)
           .select("y", "x1", "x2", "x3"), minN)
 
     /** The per-run `points` block: {date, temp_c, raw_hr, heat_cost,
       * neutral_hr}, date ascending. Mirrors compute_trend's
       * MIN_FIT_ACTIVITIES gate (heat_adjustment.py:147): below `minN`
       * complete observations the reference returns insufficient_data and
-      * emits NO points, so this frame is empty. The gate is a broadcast
-      * 1-row count semi-gate, not a driver-side collect.
+      * emits NO points, so this frame is empty. The gate is the fit's own
+      * `n`, filtered on the same broadcast 1-row frame that carries b_heat.
       */
     def heatCostPoints(startDate: String, endDate: String,
         refTempC: Double = 15.0, minN: Int = 10): DataFrame = {
-      val f = withDays(observations(startDate, endDate), refTempC)
-      val gate = f.agg(count(lit(1)).as("n_fit"))
-        .where(col("n_fit") >= minN)
+      val f = observations(startDate, endDate, refTempC)
       val betas = graft.operators.Stats.heatBetas(
-        graft.operators.Stats.heatStats(f.select("y", "x1", "x2", "x3")))
+          graft.operators.Stats.heatStats(f.select("y", "x1", "x2", "x3")))
+        .where(col("n") >= minN)
         .select("b_heat")
-      graft.operators.Stats.heatCost(
-          f.crossJoin(broadcast(gate)).drop("n_fit"), betas)
+      graft.operators.Stats.heatCost(f, betas)
         .select(col("activity_date").as("date"), col("temp_c"),
           col("y").as("raw_hr"), col("heat_cost"), col("neutral_hr"))
         .orderBy("date")
@@ -452,11 +458,10 @@ final class Graft(val spark: SparkSession, root: String) {
     def saveProfile(row: DataFrame): Unit = {
       val newRows = conformed(row, "athlete_profile").collect().toSeq
       val ids = newRows.map(_.getAs[String]("user_id")).toSet
-      val others =
-        try conformed(table("athlete_profile"), "athlete_profile")
-          .collect().toSeq
+      val others = optionalTable("athlete_profile").fold(Seq.empty[Row]) { t =>
+        conformed(t, "athlete_profile").collect().toSeq
           .filterNot(r => ids(r.getAs[String]("user_id")))
-        catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
+      }
       spark.createDataFrame(
         spark.sparkContext.parallelize(newRows ++ others),
         graft.Schemas.athleteProfile)
@@ -464,10 +469,9 @@ final class Graft(val spark: SparkSession, root: String) {
         .parquet(s"$root/athlete_profile")
     }
 
-    def profile(userId: String = "default"): Option[org.apache.spark.sql.Row] =
-      try table("athlete_profile").where(col("user_id") === userId)
-        .collect().headOption
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    def profile(userId: String = "default"): Option[Row] =
+      optionalTable("athlete_profile").flatMap(
+        _.where(col("user_id") === userId).collect().headOption)
 
     /** Append a weekly review revision (append-only; latest wins at read). */
     def saveWeeklyReview(review: DataFrame): Unit =

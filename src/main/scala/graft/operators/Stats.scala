@@ -274,7 +274,10 @@ object Stats {
     * columns (y, x1, x2, x3): one aggregate row, 14 doubles, regardless of
     * input size.
     */
-  def heatStats(f: DataFrame): DataFrame = f.agg(
+  def heatStats(f: DataFrame): DataFrame = f.agg(heatStatsCols.head,
+    heatStatsCols.tail: _*)
+
+  private def heatStatsCols: Seq[Column] = Seq(
     covar_pop(col("x1"), col("x1")).as("c11"),
     covar_pop(col("x1"), col("x2")).as("c12"),
     covar_pop(col("x1"), col("x3")).as("c13"),
@@ -318,28 +321,41 @@ object Stats {
     * status='insufficient_data' with the row count, or status='ok' with the
     * coefficients and the time trend (slope + p-value via the native
     * Student-t expression) of the climate-neutral HR.
+    *
+    * One aggregate over `f`: the [[heatStats]] covariances plus
+    * `covar_pop(y, y)` and `min(x3)`. The neutral series y − b_heat·x2 is
+    * never materialized; its trend over x3 follows in closed form from the
+    * same row: slope = (c3y − b·c23) / c33 and
+    * r = (c3y − b·c23) / sqrt((cyy − 2b·c2y + b²·c22) · c33), with b =
+    * b_heat. `b0` is the intercept at the earliest `x3` (the mean is taken
+    * as avg(x3) − min(x3)), so a caller may pass raw day numbers: every
+    * output is invariant to a shift of `x3`. Rows with a null in y, x1, x2
+    * or x3 are dropped first, listwise as an OLS fit does; the façade's
+    * observations carry none.
     */
   def heatTrend(f: DataFrame, minN: Int = 10): DataFrame = {
-    val betas = heatBetas(heatStats(f))
-    val trend = heatCost(f, betas)
-      .groupBy("b_pace", "b_heat", "b_days", "b0", "n")
-      .agg(
-        regr_slope(col("neutral_hr"), col("x3")).as("neutral_hr_slope"),
-        corr(col("neutral_hr"), col("x3")).as("_r"),
-        regr_count(col("neutral_hr"), col("x3")).as("_nn"))
-      .withColumn("neutral_hr_p_value",
-        StudentT.corrPValue(col("_r"), col("_nn")))
-      .drop("_r", "_nn")
+    val fit = f.na.drop(Seq("y", "x1", "x2", "x3"))
+      .agg(heatStatsCols.head, heatStatsCols.tail ++ Seq(
+        covar_pop(col("y"), col("y")).as("cyy"), min("x3").as("x3_min")): _*)
+      .withColumn("m3", col("m3") - col("x3_min"))
+      .select(col("*"), expr(hBPace).as("b_pace"), expr(hBHeat).as("b_heat"),
+        expr(hBDays).as("b_days"), expr(hB0).as("b0"))
+    val b = col("b_heat")
+    val cov = col("c3y") - b * col("c23")
+    val varProduct = (col("cyy") - lit(2.0) * b * col("c2y") +
+      b * b * col("c22")) * col("c33")
     val gate = col("n") >= minN
-    trend.select(
+    fit.select(
       when(gate, lit("ok")).otherwise(lit("insufficient_data")).as("status"),
       col("n"),
       when(gate, col("b_pace")).as("b_pace"),
-      when(gate, col("b_heat")).as("b_heat"),
+      when(gate, b).as("b_heat"),
       when(gate, col("b_days")).as("b_days"),
       when(gate, col("b0")).as("b0"),
-      when(gate, col("neutral_hr_slope")).as("neutral_hr_slope"),
-      when(gate, col("neutral_hr_p_value")).as("neutral_hr_p_value"))
+      when(gate && col("c33") > 0, cov / col("c33")).as("neutral_hr_slope"),
+      when(gate, StudentT.corrPValue(
+        when(varProduct > 0, cov / sqrt(varProduct)), col("n")))
+        .as("neutral_hr_p_value"))
   }
 
   /** Star-schema proxy observations for the heat-chain oracle queries

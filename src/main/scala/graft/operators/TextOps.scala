@@ -1256,8 +1256,11 @@ object TextOps {
           regexp_replace(col("props"), "[0-9]+", "<NUM>").as("masked"),
           size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long")
             .as("n_masked"))
-        // narrow repartition: the range sampler re-ran both regexes over
-        // the props blob — see q_doc_chunks / q_json_extract
+        // hash exchange under the sort, so the range sampler does not
+        // re-run both regexes over the props blob. The exchanged rows carry
+        // the full masked string: this trades the regex re-run for shuffle
+        // bytes, a trade measured as a win at sf0.1 only — see
+        // q_doc_chunks / q_json_extract
         .repartition(col("event_id"))
         .orderBy("event_id")
     },

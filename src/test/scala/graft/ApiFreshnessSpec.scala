@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.api.Graft
 import graft.ingest.SilverWriter
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -87,31 +84,10 @@ class ApiFreshnessSpec extends SparkSpec {
     SilverWriter.upsertByPartition(splitRows((1L to 40L), 140.0),
       s"$root/splits")
     val g = new Graft(spark, root)
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("graft.test.tag") == tag)
-          jobs.incrementAndGet()
-    }
-    def jobsToBuild(): Int = {
-      ListenerBusDrain(sc)
-      jobs.set(0)
-      g.table("splits").where(col("activity_id") === 7L)
-      ListenerBusDrain(sc)
-      jobs.get
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
-      assert(jobsToBuild() >= 1)
-      assert(jobsToBuild() === 0)
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
+    def jobsToBuild(): Int =
+      JobCount.of(spark)(g.table("splits").where(col("activity_id") === 7L))
+    assert(jobsToBuild() >= 1)
+    assert(jobsToBuild() === 0)
     // the reused frame still prunes to the one partition and reads it
     assert(g.table("splits").where(col("activity_id") === 7L).count() === 3L)
   }

@@ -1,0 +1,67 @@
+package graft
+
+import java.nio.file.Files
+
+import graft.api.Graft
+import org.apache.spark.sql.functions._
+
+/** The façade's hot calls run in as few Spark jobs as their result needs:
+  * the heat trend is one aggregate, and a read that collects every row
+  * sorts on the driver or inside one partition instead of running a range
+  * exchange. The order those reads return must not depend on how the rows
+  * sit in the files.
+  */
+class ApiJobsSpec extends SparkSpec {
+
+  private lazy val g = new Graft(spark, ApiFixture.root)
+
+  private def jobs(body: => Any): Int = JobCount.of(spark)(body)
+
+  test("hot façade calls: heat trend <= 4 jobs, recovery status and paceHr 1") {
+    // resolve the tables first: a first read infers the schema in a job
+    g.heat.heatTrend("2026-06-01", "2026-06-30").collect()
+    g.physiology.recoveryStatus()
+    g.splits.paceHr(100L).collect()
+
+    val trend = g.heat.heatTrend("2026-06-01", "2026-06-30")
+    assert(jobs(trend.collect()) <= 4)
+    assert(trend.head().getAs[String]("status") === "ok")
+    assert(jobs(g.physiology.recoveryStatus()) === 1)
+    assert(jobs(g.splits.paceHr(100L).collect()) === 1)
+  }
+
+  test("recovery status and split reads keep date / split order across files written out of order") {
+    val root = Files.createTempDirectory("graft-api-order").toString
+    val s = spark
+    import s.implicits._
+    // HRV sits under baseline on the last two nights only: sorted, that is
+    // under-recovery ("easy"); any other last row reads as "quality"
+    def nights(days: Seq[Int]) = days.map { i =>
+      (java.sql.Date.valueOf(f"2026-06-$i%02d"), 48.0,
+        if (i >= 29) 38.0 else 50.0, 45.0, 80, 80)
+    }.toDF("date", "resting_hr", "hrv_overnight", "hrv_baseline_low",
+      "readiness", "sleep_score")
+    // two files, each written newest first: the later dates land first
+    for (days <- Seq(30 to 16 by -1, 15 to 1 by -1))
+      nights(days).coalesce(1).write.mode("append")
+        .parquet(s"$root/daily_wellness")
+
+    def laps(idx: Seq[Int]) = Schemas.conform(idx.map { i =>
+      (100L, i, if (i % 2 == 0) "INTERVAL" else "RECOVERY", 60.0 * i)
+    }.toDF("activity_id", "split_index", "intensity_type",
+      "duration_seconds"), "splits")
+    for (idx <- Seq(Seq(6, 5, 4), Seq(3, 2, 1)))
+      laps(idx).coalesce(1).write.mode("append").partitionBy("activity_id")
+        .parquet(s"$root/splits")
+
+    val g2 = new Graft(spark, root)
+    assert(spark.read.parquet(s"$root/daily_wellness").inputFiles.length === 2)
+    assert(g2.physiology.recoveryStatus() === "easy")
+    val dev = g2.physiology.wellnessDeviation("hrv_overnight", "low_is_bad")
+    assert(dev.flag === "low" && dev.adverse)
+    assert(g2.splits.paceHr(100L).collect().map(_.getAs[Int]("split_index"))
+      .toSeq === (1 to 6))
+    assert(g2.splits.intervalAnalysis(100L).map(_.startS) ===
+      (1 to 6).scanLeft(0.0)(_ + 60.0 * _).init)
+  }
+}
