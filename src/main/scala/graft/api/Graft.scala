@@ -34,6 +34,18 @@ import scala.collection.concurrent.TrieMap
   * built before a write keeps the files it resolved and is not refreshed;
   * only the next [[table]] call sees the write. The map lives and dies with
   * this instance: two façades over one root resolve independently.
+  *
+  * Plan shape: the façade serves one athlete's store, so its analytical
+  * inputs are bounded by one athlete (the `activities` table, one row per
+  * run) or by one activity (that activity's `splits` or
+  * `time_series_metrics` partition). At that size the fixed cost of a job
+  * and an exchange outweighs any parallelism, so [[onePartition]] reads
+  * such an input in a single partition: the aggregate, window, join or
+  * sort above it then needs no exchange and the call runs as one task per
+  * stage, usually in one job. `timeSeries.formAnomalySummary` (every
+  * activity's samples at once) and the `events` and `pipeline` tiers
+  * (corpus-sized inputs, the registered queries' own plans) do not take
+  * this path.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
@@ -60,6 +72,15 @@ final class Graft(val spark: SparkSession, root: String) {
       }
     }
   }
+
+  /** An athlete-sized input in a single partition (see "Plan shape"). */
+  private def onePartition(df: DataFrame): DataFrame = df.coalesce(1)
+
+  /** `df` in one partition sorted by `cols`: a total order with no range
+    * exchange.
+    */
+  private def sortedInOne(df: DataFrame, cols: String*): DataFrame =
+    onePartition(df).sortWithinPartitions(cols.map(col): _*)
 
   /** Collects `df` and sorts it on the driver by `key`, ascending with
     * nulls first as `orderBy` does: a read that collects every row anyway
@@ -96,6 +117,9 @@ final class Graft(val spark: SparkSession, root: String) {
   private def splitsOf(activityId: Long): DataFrame =
     table("splits").where(col("activity_id") === activityId)
 
+  private def seriesOf(activityId: Long): DataFrame =
+    table("time_series_metrics").where(col("activity_id") === activityId)
+
   /** Splits tools: projection groups with the reference's statistics_only
     * mode (aggregate before collect — the ~80 % output reduction is an API
     * design choice, SURVEY §4.1).
@@ -111,8 +135,7 @@ final class Graft(val spark: SparkSession, root: String) {
     private def group(activityId: Long, cols: Seq[String],
         statisticsOnly: Boolean): DataFrame = {
       val df = splitsOf(activityId).select(cols.map(col): _*)
-      // one activity's laps: sorted in one partition, no range exchange
-      if (!statisticsOnly) df.coalesce(1).sortWithinPartitions("split_index")
+      if (!statisticsOnly) sortedInOne(df, "split_index")
       else Aggregates.statsBlock(df.drop("split_index"), Seq.empty,
         cols.filterNot(c => c == "split_index" || c == "hr_zone" || c == "terrain_type"))
     }
@@ -154,7 +177,7 @@ final class Graft(val spark: SparkSession, root: String) {
   object trainingLoad {
     /** get_acwr over the daily-load frame derived from activities. */
     def acwr(): DataFrame = {
-      val daily = table("activities")
+      val daily = onePartition(table("activities"))
         .groupBy(col("activity_date"))
         .agg(sum("total_distance_km").as("load_km"))
         .withColumn("day_idx", datediff(col("activity_date"), lit("1970-01-01")))
@@ -245,14 +268,13 @@ final class Graft(val spark: SparkSession, root: String) {
     */
   object trends {
     def weeklyVolume(userId: String = "default"): DataFrame =
-      Aggregates.weekBucketCfg(table("activities"), "activity_date",
-        "total_distance_km", weekStartDay(userId))
-        .withColumnRenamed("total_v", "load_km")
-        .orderBy("week_start")
+      sortedInOne(Aggregates.weekBucketCfg(onePartition(table("activities")),
+        "activity_date", "total_distance_km", weekStartDay(userId))
+        .withColumnRenamed("total_v", "load_km"), "week_start")
 
     def monthlyVolume(): DataFrame =
-      Aggregates.monthBucket(table("activities"), "activity_date",
-        "total_distance_km").orderBy("month")
+      sortedInOne(Aggregates.monthBucket(onePartition(table("activities")),
+        "activity_date", "total_distance_km"), "month")
   }
 
   /** compare_similar_runs (rag/queries/comparisons.py): candidate band +
@@ -264,19 +286,24 @@ final class Graft(val spark: SparkSession, root: String) {
   object comparisons {
     def findSimilarWorkouts(activityId: Long, paceTolerance: Double = 0.2,
         distanceTolerance: Double = 0.2, limit: Int = 10): DataFrame = {
-      val acts = table("activities").select(
+      val acts = onePartition(table("activities")).select(
         col("activity_id"), col("activity_date"), col("activity_name"),
         when(col("average_speed") > 0, lit(1000.0) / col("average_speed"))
           .as("avg_pace"),
         col("avg_heart_rate"), col("total_distance_km"),
         coalesce(lower(col("training_type")), lit("unknown")).as("ttype"))
-      val target = broadcast(acts.where(col("activity_id") === activityId)
-        .select(col("avg_pace").as("t_pace"),
-          col("avg_heart_rate").as("t_hr"),
-          col("total_distance_km").as("t_dist"),
-          col("ttype").as("t_type")))
-      acts.where(col("activity_id") =!= activityId)
-        .crossJoin(target)
+      // one aggregate over the one scan gathers the runs and the target's
+      // columns, then explodes the runs back out, each carrying the target
+      // (null when the id is absent, which the band filter then empties)
+      val target = first(when(col("activity_id") === activityId, struct(
+        col("avg_pace").as("t_pace"), col("avg_heart_rate").as("t_hr"),
+        col("total_distance_km").as("t_dist"), col("ttype").as("t_type"))),
+        ignoreNulls = true)
+      acts.agg(collect_list(struct(acts.columns.map(col): _*)).as("runs"),
+          target.as("t"))
+        .select(explode(col("runs")).as("r"), col("t"))
+        .select("r.*", "t.*")
+        .where(col("activity_id") =!= activityId)
         .where(col("avg_pace").between(
             col("t_pace") * (1 - paceTolerance),
             col("t_pace") * (1 + paceTolerance)) &&
@@ -309,35 +336,43 @@ final class Graft(val spark: SparkSession, root: String) {
     * machinery); the façade only selects the window.
     */
   object durability {
-    private def tsCols = table("time_series_metrics").select(
-      "activity_id", "timestamp_s", "heart_rate", "speed",
-      "ground_contact_time", "vertical_oscillation", "vertical_ratio")
+    private val tsCols = Seq("activity_id", "timestamp_s", "heart_rate",
+      "speed", "ground_contact_time", "vertical_oscillation", "vertical_ratio")
 
     /** get_activity_durability: 0-or-1-row frame (empty ≙ the reference's
       * None — no usable HR/speed rows or an empty time span).
       */
     def activityDurability(activityId: Long): DataFrame =
-      Durability.perActivity(tsCols.where(col("activity_id") === activityId))
+      Durability.perActivity(
+        onePartition(seriesOf(activityId).select(tsCols.map(col): _*)))
 
-    /** The qualifying long runs with their per-run durability rows, date
-      * ascending — the `activities` half of get_durability_trend. ONE
-      * distributed plan for the whole window, not a per-id loop.
-      * Default threshold 10.0 km matches the reference
-      * (database/readers/durability.py:221 min_distance_km=10.0).
+    /** The qualifying long runs joined to their per-run durability rows,
+      * unordered. On the activity-partitioned layout the broadcast runs side
+      * prunes the series scan to the runs' partitions (dynamic partition
+      * pruning); an unpartitioned series table is read whole.
       */
-    def longRuns(startDate: String, endDate: String,
-        minDistanceKm: Double = 10.0): DataFrame = {
+    private def runRows(startDate: String, endDate: String,
+        minDistanceKm: Double): DataFrame = {
       val runs = table("activities")
         .where(col("activity_date").between(startDate, endDate) &&
           col("total_distance_km") >= minDistanceKm)
         .select(col("activity_id"), col("activity_date"),
           col("total_distance_km").as("distance_km"))
-      Durability.perActivity(
-          tsCols.join(runs.select("activity_id"), Seq("activity_id"),
-            "left_semi"))
+      Durability.perActivity(onePartition(
+          table("time_series_metrics").select(tsCols.map(col): _*)))
         .join(runs, Seq("activity_id"))
-        .orderBy("activity_date", "activity_id")
     }
+
+    /** The qualifying long runs with their per-run durability rows, date
+      * ascending — the `activities` half of get_durability_trend. ONE
+      * plan for the whole window, not a per-id loop.
+      * Default threshold 10.0 km matches the reference
+      * (database/readers/durability.py:221 min_distance_km=10.0).
+      */
+    def longRuns(startDate: String, endDate: String,
+        minDistanceKm: Double = 10.0): DataFrame =
+      sortedInOne(runRows(startDate, endDate, minDistanceKm),
+        "activity_date", "activity_id")
 
     /** The `trend` half of get_durability_trend: 1-row block with the
       * significance-gated direction, form regression, absolute band and
@@ -345,7 +380,7 @@ final class Graft(val spark: SparkSession, root: String) {
       */
     def durabilityTrend(startDate: String, endDate: String,
         minDistanceKm: Double = 10.0): DataFrame =
-      Durability.trend(longRuns(startDate, endDate, minDistanceKm))
+      Durability.trend(runRows(startDate, endDate, minDistanceKm))
   }
 
   /** Heat-adjustment tools (rag/queries/heat_adjustment.py:117-192): the
@@ -354,13 +389,13 @@ final class Graft(val spark: SparkSession, root: String) {
     * series, and x3 is the raw day number (days since 1970-01-01): the fit
     * is shift-invariant in x3, so no base-date join is needed.
     * Stats.heatTrend does the fit and the neutral-HR trend as ONE
-    * distributed aggregate + 1-row column math, and carries the
+    * aggregate + 1-row column math, and carries the
     * reference's n >= 10 insufficient_data gate.
     */
   object heat {
     private def observations(startDate: String, endDate: String,
         refTempC: Double): DataFrame = {
-      val temps = table("time_series_metrics")
+      val temps = onePartition(table("time_series_metrics"))
         .groupBy("activity_id")
         .agg(avg("air_temperature").as("temp_c"))
       val acts = table("activities")
@@ -400,10 +435,9 @@ final class Graft(val spark: SparkSession, root: String) {
           graft.operators.Stats.heatStats(f.select("y", "x1", "x2", "x3")))
         .where(col("n") >= minN)
         .select("b_heat")
-      graft.operators.Stats.heatCost(f, betas)
+      sortedInOne(graft.operators.Stats.heatCost(f, betas)
         .select(col("activity_date").as("date"), col("temp_c"),
-          col("y").as("raw_hr"), col("heat_cost"), col("neutral_hr"))
-        .orderBy("date")
+          col("y").as("raw_hr"), col("heat_cost"), col("neutral_hr")), "date")
     }
   }
 
@@ -426,9 +460,8 @@ final class Graft(val spark: SparkSession, root: String) {
     /** get_time_range_detail with the reference's half-open convention. */
     def timeRangeStats(activityId: Long, fromS: Int, untilS: Int,
         metric: String): DataFrame =
-      table("time_series_metrics")
-        .where(col("activity_id") === activityId &&
-          col("seq_no") >= fromS && col("seq_no") < untilS)
+      onePartition(seriesOf(activityId))
+        .where(col("seq_no") >= fromS && col("seq_no") < untilS)
         .agg(avg(metric).as("avg_v"), stddev(metric).as("stddev_v"),
           min(metric).as("min_v"), max(metric).as("max_v"),
           count(metric).as("n_rows"))

@@ -2,6 +2,7 @@ package graft.domain
 
 import graft.functions.StudentT
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Long-run durability analytics (reference readers/durability.py:95-215
@@ -10,10 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: the reference loops get_activity_durability one
   * SQLite query per activity id; here EVERY activity's midpoint split is
-  * one distributed plan (two aggregates co-partitioned on activity_id),
-  * and the whole trend block is a second 1-row aggregate — nothing is
-  * per-activity on the driver, so the same code runs a 10-activity window
-  * and a 10-million-activity corpus.
+  * one plan over one clustering on activity_id (a min/max bounds window,
+  * then the halves aggregate), and the whole trend block is a second 1-row
+  * aggregate — nothing is per-activity on the driver, so the same code
+  * runs a 10-activity window and a 10-million-activity corpus.
   */
 object Durability {
 
@@ -29,17 +30,19 @@ object Durability {
     * need HR + speed > 0; form metrics average over the SAME midpoint
     * split but are NOT in the row filter (older devices lack them); an
     * activity drops out (reference: returns None) when any HR/speed half
-    * average is missing or non-positive, or the time span is empty.
+    * average is missing or non-positive, or the time span is empty. The
+    * bounds are a window over the same clustering the halves aggregate
+    * uses, as in [[graft.operators.Aggregates.conditionalHalves]].
     */
   def perActivity(ts: DataFrame): DataFrame = {
-    val base = ts.where(col("heart_rate").isNotNull &&
-      col("speed").isNotNull && col("speed") > 0)
-    val bounds = base.groupBy("activity_id")
-      .agg(min("timestamp_s").as("t0"), max("timestamp_s").as("t1"))
-      .where(col("t1") > col("t0"))
+    val w = Window.partitionBy("activity_id")
     def firstAvg(c: String) = avg(when(col("timestamp_s") < col("mid"), col(c)))
     def secondAvg(c: String) = avg(when(col("timestamp_s") >= col("mid"), col(c)))
-    val halves = base.join(bounds, Seq("activity_id"))
+    val halves = ts.where(col("heart_rate").isNotNull &&
+        col("speed").isNotNull && col("speed") > 0)
+      .withColumn("t0", min("timestamp_s").over(w))
+      .withColumn("t1", max("timestamp_s").over(w))
+      .where(col("t1") > col("t0"))
       .withColumn("mid", (col("t0") + col("t1")) / 2.0)
       .groupBy("activity_id")
       .agg(
@@ -81,18 +84,18 @@ object Durability {
 
   /** The 1-row trend block over per-run rows (activity_id, activity_date,
     * decoupling_pct, gct_fade_pct): decoupling and GCT-fade regressions on
-    * days-since-first-run with the reference's significance gates
+    * the day number with the reference's significance gates
     * (p > 0.05 → stable; < 3 points → insufficient_data; the GCT
     * regression only sees non-null fades), the absolute assessment
     * (recent / exact window median / band / all-strong flag), and the
     * best/worst ranking by (decoupling, date, id) — null under 2 runs.
-    * Exact p-values via the native Student-t expression.
+    * Exact p-values via the native Student-t expression. The day number is
+    * days since 1970-01-01: slope and correlation are invariant to a shift
+    * of x, so the reference's days-since-first-run needs no base-date pass.
     */
   def trend(runs: DataFrame): DataFrame = {
-    val base = runs.agg(min(col("activity_date")).as("base_date"))
-    val pts = runs.crossJoin(broadcast(base))
-      .withColumn("x", datediff(col("activity_date"), col("base_date"))
-        .cast("double"))
+    val pts = runs.withColumn("x",
+      datediff(col("activity_date"), lit("1970-01-01")).cast("double"))
     val agg = pts.agg(
       count(lit(1)).as("n"),
       regr_slope(col("decoupling_pct"), col("x")).as("slope0"),

@@ -6,10 +6,10 @@ import graft.api.Graft
 import org.apache.spark.sql.functions._
 
 /** The façade's hot calls run in as few Spark jobs as their result needs:
-  * the heat trend is one aggregate, and a read that collects every row
-  * sorts on the driver or inside one partition instead of running a range
-  * exchange. The order those reads return must not depend on how the rows
-  * sit in the files.
+  * an athlete-sized read sits in one partition, so the aggregate, window
+  * or sort above it runs no exchange, and a read that collects every row
+  * sorts on the driver or inside that partition. The order those reads
+  * return must not depend on how the rows sit in the files.
   */
 class ApiJobsSpec extends SparkSpec {
 
@@ -28,6 +28,50 @@ class ApiJobsSpec extends SparkSpec {
     assert(trend.head().getAs[String]("status") === "ok")
     assert(jobs(g.physiology.recoveryStatus()) === 1)
     assert(jobs(g.splits.paceHr(100L).collect()) === 1)
+  }
+
+  /** The eight `api_serve` calls (9 jobs: 1.125 per call), then the other
+    * one-partition reads, each at its job count over an activity-partitioned
+    * root. Each count is taken on a freshly built DataFrame: a second action
+    * on one Dataset would reuse its materialized stages.
+    */
+  private lazy val athlete = new Graft(spark, AthleteFixture.root)
+  private lazy val athleteCalls: Seq[(String, Int, () => Any)] = {
+    val a = athlete
+    val (from, to) = ("2026-05-02", "2026-06-15")
+    Seq(
+      ("splits.paceHr", 1, () => a.splits.paceHr(3L).collect()),
+      ("trainingLoad.acwr", 1, () => a.trainingLoad.acwr().collect()),
+      ("physiology.recoveryStatus", 1, () => a.physiology.recoveryStatus()),
+      ("trends.weeklyVolume", 1, () => a.trends.weeklyVolume().collect()),
+      ("comparisons.findSimilarWorkouts", 1,
+        () => a.comparisons.findSimilarWorkouts(4L).collect()),
+      ("durability.activityDurability", 1,
+        () => a.durability.activityDurability(3L).collect()),
+      ("heat.heatTrend", 2, () => a.heat.heatTrend(from, to).collect()),
+      ("timeSeries.timeRangeStats", 1,
+        () => a.timeSeries.timeRangeStats(3L, 5, 30, "heart_rate").collect()),
+      ("trends.monthlyVolume", 1, () => a.trends.monthlyVolume().collect()),
+      ("durability.longRuns", 2, () => a.durability.longRuns(from, to).collect()),
+      ("durability.durabilityTrend", 2,
+        () => a.durability.durabilityTrend(from, to).collect()),
+      ("heat.heatCostPoints", 4, () => a.heat.heatCostPoints(from, to).collect()))
+  }
+
+  test("api_serve calls at their job floor over an activity-partitioned root") {
+    athleteCalls.foreach(_._3()) // resolve every table first
+    val got = athleteCalls.map { case (name, _, run) => name -> jobs(run()) }
+    assert(got === athleteCalls.map { case (name, n, _) => name -> n })
+  }
+
+  test("a one-partition series read keeps its dynamic partition filter") {
+    val (from, to) = ("2026-05-10", "2026-05-20")
+    Seq(athlete.heat.heatTrend(from, to),
+        athlete.durability.durabilityTrend(from, to)).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Coalesce 1"), plan)
+      assert(plan.contains("dynamicpruningexpression(activity_id"), plan)
+    }
   }
 
   test("recovery status and split reads keep date / split order across files written out of order") {

@@ -48,7 +48,7 @@ jobs = r["metrics"]["api.jobs_per_call"]["value"]
 print("api_serve: correct=%s failed=%s files_listed_per_call=%s jobs_per_call=%s"
       % (r["correct"], r["failed"], listed, jobs))
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 and listed == 0
-         and jobs <= 2.625 else 1)'
+         and jobs <= 1.125 else 1)'
 
 echo "== 5/5 scale-aware shuffle gates (set SCALE_DIRS to enable)"
 for d in ${SCALE_DIRS:-}; do
