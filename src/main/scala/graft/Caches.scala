@@ -18,10 +18,10 @@ object Caches {
 
   private val frames = TrieMap.empty[String, DataFrame]
   private val values = TrieMap.empty[String, Any]
-  private val preparedPlans =
-    TrieMap.empty[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+  private[graft] val preparedPlans = TrieMap.empty[String,
+    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
 
-  /** Memoize the ANALYZED LOGICAL PLAN under `key` — the prepared-statement
+  /** Memoize the ANALYZED LOGICAL PLAN in `slot` — the prepared-statement
     * registry Q uses. Only the plan is kept, never a Dataset: a Dataset
     * freezes its lazy QueryExecution/executedPlan at first forcing, which
     * made plan inspection order- and conf-dependent (r16 ADVICE: the
@@ -29,13 +29,21 @@ object Caches {
     * already forced under AQE). Callers re-wrap the plan per invocation
     * (GraftBridge.ofRows), so every call gets a fresh QueryExecution —
     * optimization, physical planning, AQE and execution re-run under the
-    * current conf. Conf that analysis bakes into the plan must be part of
-    * `key` (Q adds time zone, ANSI mode and case sensitivity). Entries hold
-    * no storage: dropping one loses only analysis work.
+    * current conf. A slot holds one plan, for one `version`: the input
+    * fingerprint and the conf that analysis bakes into the plan (Q adds
+    * time zone, ANSI mode and case sensitivity). A new version replaces the
+    * old plan in place, so the map is bounded by the slots in use. Entries
+    * hold no storage: dropping one loses only analysis work.
     */
-  def preparedPlan(key: String)(mk: => DataFrame)
+  def preparedPlan(slot: String, version: String)(mk: => DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    preparedPlans.getOrElseUpdate(key, mk.queryExecution.analyzed)
+    preparedPlans.get(slot) match {
+      case Some((v, plan)) if v == version => plan
+      case _ =>
+        val plan = mk.queryExecution.analyzed
+        preparedPlans.put(slot, (version, plan))
+        plan
+    }
 
   /** Memoize a driver-side computed value (e.g. the exact medians a profile
     * call derives from its persisted histogram) under `key`.

@@ -27,13 +27,14 @@ object Q {
     * order/conf-dependent (r16 ADVICE, fixed r17). Analysis itself bakes
     * some conf into the plan (the session time zone is stamped into every
     * time-zone-aware expression; ANSI mode and case sensitivity shape
-    * resolution and casts), so those keys are part of the memo key: a
-    * change to one re-analyzes. Other conf read only during analysis is
+    * resolution and casts), so those keys are part of the plan's version:
+    * a change to one re-analyzes. Other conf read only during analysis is
     * still frozen at first build. No data, plan statistics or results are
-    * reused; rewritten inputs re-analyze via the fingerprint key (same
-    * staleness contract as [[Caches]]); the key uses sessionUUID (unique
-    * per session — identityHashCode could collide after GC and serve a
-    * frame bound to a stopped context).
+    * reused; rewritten inputs re-analyze via the fingerprint in the version
+    * (same staleness contract as [[Caches]]). The slot is
+    * `q:<name>:<sessionUUID>:<dir>` and keeps only the latest version; it
+    * uses sessionUUID (unique per session — identityHashCode could collide
+    * after GC and serve a frame bound to a stopped context).
     */
   private val analysisConf = Seq("spark.sql.session.timeZone",
     "spark.sql.ansi.enabled", "spark.sql.caseSensitive")
@@ -41,8 +42,8 @@ object Q {
   private def memoized(name: String,
       fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, d) => org.apache.spark.sql.GraftBridge.ofRows(s, Caches.preparedPlan(
-      s"q:$name:${org.apache.spark.sql.GraftBridge.sessionUUID(s)}:$d:" +
-        s"${Caches.fingerprintCached(s, d)}:${analysisConf.map(s.conf.get).mkString(",")}")(
+      s"q:$name:${org.apache.spark.sql.GraftBridge.sessionUUID(s)}:$d",
+      s"${Caches.fingerprintCached(s, d)}:${analysisConf.map(s.conf.get).mkString(",")}")(
       fn(s, d)))
 
   def apply(name: String, oracle: String)(

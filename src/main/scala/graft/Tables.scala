@@ -16,7 +16,7 @@ object Tables {
 
   /** Inferred-schema memo: every `spark.read.parquet(path)` without an
     * explicit schema runs a driver JOB to read footers for inference —
-    * measured 25-35 ms per table per query construction (ProfileQ r16:
+    * measured 25-35 ms per table per query construction (r16 profile:
     * 2-5 such jobs per query = a fixed ~0.1 s tax on all 165 bench
     * queries). A table's schema is a property of its files, so it is
     * inferred ONCE per (app, path, [[Caches.stamp]]) and passed back

@@ -1,0 +1,126 @@
+package graft
+
+import java.util.Properties
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+
+/** Per-block cost records, attributed by Spark job tag rather than by time
+  * window, so blocks on different threads are accounted apart.
+  */
+object Telemetry {
+
+  /** What one tagged block cost. `wallNs` is the body alone; the executor
+    * figures sum over every task of the block's stages; `planMs` sums the
+    * `QueryPlanningTracker` phases (parsing, analysis, optimization,
+    * planning) of its SQL executions.
+    */
+  final case class Record(
+      wallNs: Long,
+      jobs: Int,
+      stages: Int,
+      tasks: Int,
+      cpuNs: Long,
+      gcMs: Long,
+      shuffleReadBytes: Long,
+      shuffleWriteBytes: Long,
+      diskSpillBytes: Long,
+      memorySpillBytes: Long,
+      sqlExecutions: Int,
+      planMs: Long) {
+    def cpuMs: Long = cpuNs / 1000000L
+  }
+
+  /** Sums the events of the jobs whose tag set `counts` accepts. A task is
+    * attributed through its stage, whose submission carries the job tags;
+    * a SQL execution through the tags it started under.
+    */
+  private[graft] final class Recorder(counts: Set[String] => Boolean)
+      extends SparkListener {
+    private val stageIds = mutable.Set.empty[Int]
+    private val executionIds = mutable.Set.empty[Long]
+    private var jobs, tasks = 0
+    private var cpuNs, gcMs, shuffleRead, shuffleWrite, diskSpill, memSpill,
+      planMs = 0L
+
+    // the property SparkContext.addJobTag writes, comma-separated
+    private def tagged(p: Properties): Boolean = counts(
+      Option(p).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .fold(Set.empty[String])(_.split(',').toSet))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (tagged(e.properties)) jobs += 1
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      synchronized {
+        if (tagged(e.properties)) stageIds += e.stageInfo.stageId
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val m = e.taskMetrics
+      if (m != null && stageIds(e.stageId)) {
+        tasks += 1
+        cpuNs += m.executorCpuTime
+        gcMs += m.jvmGCTime
+        shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        diskSpill += m.diskBytesSpilled
+        memSpill += m.memoryBytesSpilled
+      }
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart if counts(s.jobTags) =>
+          executionIds += s.executionId
+        case end: SparkListenerSQLExecutionEnd if executionIds(end.executionId) =>
+          Option(GraftBridge.queryExecution(end)).foreach { qe =>
+            planMs += qe.tracker.phases.values.map(_.durationMs).sum
+          }
+        case _ =>
+      }
+    }
+
+    def record(wallNs: Long): Record = synchronized {
+      Record(wallNs, jobs, stageIds.size, tasks, cpuNs, gcMs, shuffleRead,
+        shuffleWrite, diskSpill, memSpill, executionIds.size, planMs)
+    }
+  }
+
+  private val DrainTimeoutMs = 30000L
+  private val blocks = new AtomicLong
+
+  /** Run `body` under a fresh job tag and return what it cost. The tag is
+    * a thread-local property that the threads Spark starts for the block
+    * (broadcasts, subqueries, AQE stages) inherit, so concurrent blocks on
+    * other threads are never counted. The listener bus is drained before
+    * the record is read; a drain that times out raises, because a record
+    * read then would miss the block's tail. A body that throws rethrows.
+    *
+    * Job-count tests: a second action on the same Dataset reuses its
+    * materialized AQE stages and runs only the result job, so a warm count
+    * must come from a freshly built DataFrame.
+    */
+  def measure(spark: SparkSession, tag: String)(body: => Any): Record = {
+    val sc = spark.sparkContext
+    val jobTag = s"graft-$tag-${blocks.incrementAndGet()}"
+    val recorder = new Recorder(_.contains(jobTag))
+    sc.addJobTag(jobTag)
+    sc.addSparkListener(recorder)
+    try {
+      val t0 = System.nanoTime()
+      body
+      val wallNs = System.nanoTime() - t0
+      GraftBridge.drainListenerBus(sc, DrainTimeoutMs)
+      recorder.record(wallNs)
+    } finally {
+      sc.removeJobTag(jobTag)
+      sc.removeSparkListener(recorder)
+    }
+  }
+}

@@ -1,12 +1,15 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
-/** Column ⇄ Catalyst Expression bridge. Spark 4 moved the pre-4.x
+/** The `private[sql]` / `private[spark]` members this repo needs, exposed
+  * from inside the `sql` package. Spark 4 moved the pre-4.x
   * `new Column(expr)` / `col.expr` surface behind `private[sql]`
-  * (org.apache.spark.sql.classic.ExpressionUtils), so this repo exposes the
-  * two conversions it needs from inside the `sql` package. No Spark
-  * internals are modified.
+  * (org.apache.spark.sql.classic.ExpressionUtils). No Spark internals are
+  * modified.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -28,4 +31,13 @@ object GraftBridge {
     */
   def sessionUUID(session: SparkSession): String =
     session.asInstanceOf[classic.SparkSession].sessionUUID
+
+  /** Wait until every listener has seen every event posted so far; throws
+    * `TimeoutException` after `timeoutMs`.
+    */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** The execution an end event reports on (null when none is attached). */
+  def queryExecution(e: SparkListenerSQLExecutionEnd): QueryExecution = e.qe
 }

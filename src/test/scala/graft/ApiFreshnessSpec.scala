@@ -85,7 +85,8 @@ class ApiFreshnessSpec extends SparkSpec {
       s"$root/splits")
     val g = new Graft(spark, root)
     def jobsToBuild(): Int =
-      JobCount.of(spark)(g.table("splits").where(col("activity_id") === 7L))
+      Telemetry.measure(spark, "table-build")(
+        g.table("splits").where(col("activity_id") === 7L)).jobs
     assert(jobsToBuild() >= 1)
     assert(jobsToBuild() === 0)
     // the reused frame still prunes to the one partition and reads it

@@ -15,7 +15,8 @@ class ApiJobsSpec extends SparkSpec {
 
   private lazy val g = new Graft(spark, ApiFixture.root)
 
-  private def jobs(body: => Any): Int = JobCount.of(spark)(body)
+  private def jobs(body: => Any): Int =
+    Telemetry.measure(spark, "api-jobs")(body).jobs
 
   test("hot façade calls: heat trend <= 4 jobs, recovery status and paceHr 1") {
     // resolve the tables first: a first read infers the schema in a job

@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Freshness of the driver-side memos: the fingerprint behind Q's plan
-  * memo follows a write one level below the data dir, and a Q built under
-  * one session time zone re-analyzes under the next.
+  * memo follows a write one level below the data dir, a Q built under one
+  * session time zone re-analyzes under the next, and a rewritten data dir
+  * replaces a Q's plan instead of adding one.
   */
 class MemoFreshnessSpec extends SparkSpec {
 
@@ -39,5 +40,22 @@ class MemoFreshnessSpec extends SparkSpec {
       spark.conf.set(key, "UTC")
       assert(q.fn(spark, d).head().getString(0) === "1970-01-01 00:00")
     } finally spark.conf.set(key, original)
+  }
+
+  test("a rewritten data dir replaces the Q's prepared plan in its slot") {
+    val s = spark
+    import s.implicits._
+    val q = Q.noOracle("q_test_memo_rewrite") { (s, d) =>
+      s.read.parquet(s"$d/t.parquet")
+    }
+    val d = Files.createTempDirectory("graft-memo-slot").toString
+    def slots =
+      Caches.preparedPlans.keys.filter(_.startsWith("q:q_test_memo_rewrite:"))
+    Seq(1, 2, 3).toDF("x").write.parquet(s"$d/t.parquet")
+    assert(q.fn(spark, d).count() === 3L)
+    Seq(4, 5, 6, 7, 8).toDF("x").write.mode("overwrite")
+      .parquet(s"$d/t.parquet")
+    assert(q.fn(spark, d).as[Int].collect().sorted.toSeq === (4 to 8))
+    assert(slots.size === 1)
   }
 }
