@@ -187,10 +187,9 @@ object ScaleUp {
         }
       }.reduce(_ unionAll _)
       // Events is the stream table, and a 100 TB stream table IS
-      // date-partitioned — so the replicas are too, BY DEFAULT (round-13;
-      // the r12 PruneAudit proved the pruning path on a one-off rewrite;
-      // making it the generated layout means every date-range query at
-      // every scale rung exercises partition pruning continuously).
+      // date-partitioned — so the replicas are too, BY DEFAULT: every
+      // date-range query at every scale rung exercises partition pruning
+      // (PlanAuditSpec pins the pruning and the flat-layout parity).
       // Tables presents the identical flat schema either way, and
       // eventsInRange derives the PartitionFilters. One repartition(date)
       // shuffle for this table only — one file per day dir, tight ts

@@ -77,7 +77,8 @@ object Tables {
 
   /** Hive-style partition column surfaced when events is stored as a
     * date-partitioned directory (events.parquet/event_date=YYYY-MM-DD/…,
-    * the layout a 100 TB event log actually has — see PartitionEvents).
+    * the layout a 100 TB event log actually has, and the one
+    * `ScaleUp` writes).
     * Loaders drop it so both layouts present the identical 6-column
     * schema to every operator; eventsInRange turns it into a partition
     * filter FIRST, so date-range scans list only the in-range day dirs.
@@ -106,7 +107,7 @@ object Tables {
       java.time.LocalDateTime.parse(ts.replace(' ', 'T'))
     val raw = table(s, d, "events")
     // Derived partition predicate: when the layout is date-partitioned,
-    // event_date == date(ts) by construction (PartitionEvents), so the ts
+    // event_date == date(ts) by construction (ScaleUp), so the ts
     // range implies event_date ∈ [date(from), date(last in-range instant)].
     // The redundant bound is what Catalyst turns into PartitionFilters —
     // the scan then LISTS only the in-range day directories, the file-level

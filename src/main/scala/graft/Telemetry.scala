@@ -7,6 +7,9 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Per-block cost records, attributed by Spark job tag rather than by time
@@ -17,7 +20,8 @@ object Telemetry {
   /** What one tagged block cost. `wallNs` is the body alone; the executor
     * figures sum over every task of the block's stages; `planMs` sums the
     * `QueryPlanningTracker` phases (parsing, analysis, optimization,
-    * planning) of its SQL executions.
+    * planning) of its SQL executions; `exchanges` counts the shuffle
+    * exchanges in their final physical plans (see [[shuffleExchanges]]).
     */
   final case class Record(
       wallNs: Long,
@@ -31,9 +35,20 @@ object Telemetry {
       diskSpillBytes: Long,
       memorySpillBytes: Long,
       sqlExecutions: Int,
-      planMs: Long) {
+      planMs: Long,
+      exchanges: Int) {
     def cpuMs: Long = cpuNs / 1000000L
   }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Shuffle exchanges in `plan` and its subqueries. The walk descends into
+    * AQE's final plan and into each query stage, so a stage and the
+    * exchange it wraps count once; a reused exchange shuffles nothing new
+    * and is not counted.
+    */
+  private def shuffleExchanges(plan: SparkPlan): Int =
+    PlanWalk.collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }.size
 
   /** Sums the events of the jobs whose tag set `counts` accepts. A task is
     * attributed through its stage, whose submission carries the job tags;
@@ -46,6 +61,7 @@ object Telemetry {
     private var jobs, tasks = 0
     private var cpuNs, gcMs, shuffleRead, shuffleWrite, diskSpill, memSpill,
       planMs = 0L
+    private var exchanges = 0
 
     // the property SparkContext.addJobTag writes, comma-separated
     private def tagged(p: Properties): Boolean = counts(
@@ -81,6 +97,10 @@ object Telemetry {
         case end: SparkListenerSQLExecutionEnd if executionIds(end.executionId) =>
           Option(GraftBridge.queryExecution(end)).foreach { qe =>
             planMs += qe.tracker.phases.values.map(_.durationMs).sum
+            // a failed execution may never have planned; planning it here
+            // would run on the listener thread
+            if (!GraftBridge.executionFailed(end))
+              exchanges += shuffleExchanges(qe.executedPlan)
           }
         case _ =>
       }
@@ -88,7 +108,7 @@ object Telemetry {
 
     def record(wallNs: Long): Record = synchronized {
       Record(wallNs, jobs, stageIds.size, tasks, cpuNs, gcMs, shuffleRead,
-        shuffleWrite, diskSpill, memSpill, executionIds.size, planMs)
+        shuffleWrite, diskSpill, memSpill, executionIds.size, planMs, exchanges)
     }
   }
 

@@ -181,7 +181,11 @@ final class Graft(val spark: SparkSession, root: String) {
         .groupBy(col("activity_date"))
         .agg(sum("total_distance_km").as("load_km"))
         .withColumn("day_idx", datediff(col("activity_date"), lit("1970-01-01")))
-        .withColumn("athlete", lit("default"))
+        // One athlete per root, but no literal key: the optimizer drops a
+        // foldable window key, and a keyless window warns on every call.
+        // The key is true on every dated row; an undated row's range frames
+        // see only undated rows either way, and it still sorts first.
+        .withColumn("athlete", col("day_idx").isNotNull)
       graft.operators.Stats.acwr(daily, "athlete", "day_idx", "load_km")
         .drop("athlete")
     }

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.domain.Performance
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,31 +13,16 @@ import org.apache.spark.sql.functions._
   */
 object SilverTables {
 
-  /** performance_trends: one row per activity. The drift rule is
-    * sequential over ordered laps -> per-activity flatMapGroups (same
-    * placement as the intensity estimator); pace consistency is the
-    * fragment-robust CV over run laps (laps below 0.5x the median distance
-    * are GPS fragments).
+  /** performance_trends: one row per activity, from one clustering of the
+    * laps on activity_id: a window gives each lap its activity's median run
+    * distance, then one aggregate carries the pace CVs, the phase-wide
+    * stats and the ordered lap list the sequential drift rule folds over.
+    * Pace consistency is the fragment-robust CV over run laps (laps below
+    * 0.5x the median distance are GPS fragments).
     */
   def performanceTrends(spark: SparkSession, splits: DataFrame): DataFrame = {
-    import spark.implicits._
-    val drift = splits
-      .select(col("activity_id"), col("split_index"), col("intensity_type"),
-        col("pace_seconds_per_km"), col("heart_rate"))
-      .as[(Long, Int, Option[String], Option[Double], Option[Double])]
-      .groupByKey(_._1)
-      .mapGroups { (aid, it) =>
-        val laps = it.toSeq.sortBy(_._2)
-          .map(l => Performance.Lap(l._3, l._4, l._5))
-        (aid, Performance.classifyWorkoutStructure(laps),
-          Performance.hrDrift(laps))
-      }
-      .toDF("activity_id", "workout_structure", "hr_drift_percentage")
-
-    val run = splits.where(
-      upper(col("intensity_type")).isin(Performance.WorkIntensities.toSeq: _*))
-    val med = run.groupBy("activity_id")
-      .agg(median(col("distance")).as("med_dist"))
+    val isRun =
+      upper(col("intensity_type")).isin(Performance.WorkIntensities.toSeq: _*)
     // _cv semantics (performance_trends.py:62-73): None on no paces, 0.0 on
     // a single pace, stdev/mean otherwise (None when mean <= 0). The
     // representative set (py:76-104) needs pace AND distance non-null and
@@ -45,33 +30,45 @@ object SilverTables {
     // distance at all (med_dist null makes is_rep null→false) — fall back
     // to the CV over ALL run paces (ADVICE r1 medium).
     val pace = col("pace_seconds_per_km")
-    val isRep = pace.isNotNull && col("distance").isNotNull &&
-      col("distance") >= col("med_dist") * 0.5
+    val runPace = when(isRun, pace)
+    val repPace = when(isRun && pace.isNotNull && col("distance").isNotNull &&
+      col("distance") >= col("med_dist") * 0.5, pace)
     def cvOf(n: Column, sd: Column, mean: Column): Column =
       when(n === 0, lit(null).cast("double"))
         .when(n === 1, lit(0.0))
         .when(mean <= 0.0, lit(null).cast("double"))
         .otherwise(sd / mean)
-    val cvs = run.join(broadcast(med), "activity_id")
+    val allCv = cvOf(col("n_all"), col("all_sd"), col("all_mean"))
+    val drift = udf { laps: Seq[Row] =>
+      val ls = laps.map(l => Performance.Lap(Option(l.getString(1)),
+        SplitsEnrich.optDouble(l, 2), SplitsEnrich.optDouble(l, 3)))
+      (Performance.classifyWorkoutStructure(ls), Performance.hrDrift(ls))
+    }
+    val aggs = Seq(
+      count(repPace).as("n_rep"), stddev(repPace).as("rep_sd"),
+      avg(repPace).as("rep_mean"),
+      count(runPace).as("n_all"), stddev(runPace).as("all_sd"),
+      avg(runPace).as("all_mean"),
+      sort_array(collect_list(struct(col("split_index"), col("intensity_type"),
+        pace.cast("double"), col("heart_rate").cast("double")))).as("laps")) ++
+      phaseWide
+    val perActivity = splits
+      .withColumn("med_dist",
+        median(when(isRun, col("distance"))).over(Window.partitionBy("activity_id")))
       .groupBy("activity_id")
-      .agg(
-        count(when(isRep, lit(1))).as("n_rep"),
-        stddev(when(isRep, pace)).as("rep_sd"),
-        avg(when(isRep, pace)).as("rep_mean"),
-        count(pace).as("n_all"),
-        stddev(pace).as("all_sd"),
-        avg(pace).as("all_mean"))
-      .select(col("activity_id"),
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("drift", drift(col("laps")))
+    graft.Schemas.conform(
+      perActivity.select(col("*") +:
+        col("drift._1").as("workout_structure") +:
+        col("drift._2").as("hr_drift_percentage") +:
         when(col("n_rep") >= 2,
           cvOf(col("n_rep"), col("rep_sd"), col("rep_mean")))
-          .otherwise(cvOf(col("n_all"), col("all_sd"), col("all_mean")))
-          .as("pace_consistency"),
-        cvOf(col("n_all"), col("all_sd"), col("all_mean"))
-          .as("pace_consistency_full"))
-
-    graft.Schemas.conform(
-      drift.join(cvs, Seq("activity_id"), "left")
-        .join(phaseWide(splits), Seq("activity_id"), "left")
+          .otherwise(allCv).as("pace_consistency") +:
+        allCv.as("pace_consistency_full") +:
+        Phases.map { p =>
+          paceStr(col(s"${p}_avg_pace_seconds_per_km")).as(s"${p}_avg_pace_str")
+        }: _*)
         .transform(withPhaseEvaluations),
       "performance_trends")
   }
@@ -84,18 +81,20 @@ object SilverTables {
   // Python truthiness (`if distance_km and duration:`): non-null, non-zero.
   private def truthy(c: Column): Column = c.isNotNull && c =!= 0.0
 
+  private val Phases = Seq("warmup", "run", "recovery", "cooldown")
+
   /** Per-activity wide phase stats (performance_trends.py:217-330): for each
     * of warmup/run/recovery/cooldown — the lap list, distance-weighted avg
     * pace (= total time / total distance over laps with a valid pace), and
     * time-weighted avg HR / cadence / power (per-time rates weighted by lap
     * duration; plain mean fallback when no lap carries a usable weight). HR
-    * is rounded to 1 dp half-even like the reference's round(). ONE
-    * conditional aggregation — no pivot shuffle per phase.
+    * is rounded to 1 dp half-even like the reference's round(). Conditional
+    * aggregate columns for the per-activity aggregate — no pivot per phase.
     *
     * The reference recomputes phase pace as duration/distance_km rather
     * than reading the lap's averageSpeed-derived pace; mirrored here.
     */
-  def phaseWide(splits: DataFrame): DataFrame = {
+  private def phaseWide: Seq[Column] = {
     val distKm = col("distance") / 1000.0
     val dur = col("duration_seconds")
     val refPace = when(truthy(distKm) && truthy(dur), dur / distKm)
@@ -131,13 +130,7 @@ object SilverTables {
         timeWeighted(col("power")).as(s"${p}_avg_power"))
     }
 
-    val aggs = Seq("warmup", "run", "recovery", "cooldown").flatMap(phase)
-    splits.groupBy("activity_id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("*") +: Seq("warmup", "run", "recovery", "cooldown").map {
-        p => paceStr(col(s"${p}_avg_pace_seconds_per_km"))
-          .as(s"${p}_avg_pace_str")
-      }: _*)
+    Phases.flatMap(phase)
   }
 
   /** Phase evaluation strings + the reference's fixed cadence/fatigue
@@ -353,9 +346,9 @@ object SilverTables {
     * (0.0 for a single lap, like statistics.stdev guarded at py:311),
     * star rating + evaluation text on the average, gct_variability =
     * std/avg·100 when both are truthy, and the vo_trend consistency
-    * narrative (py:171-242) from the ordered split series. Two aggregations
-    * total (stats + vo halves), both keyed on activity_id — one shuffle
-    * each, no per-activity loops.
+    * narrative (py:171-242) from the ordered split series. One clustering
+    * on activity_id: a window ranks each lap among its activity's non-null
+    * VO rows, then one aggregate holds the stats and both VO halves.
     */
   def formEfficiency(splits: DataFrame): DataFrame = {
     def stats(src: String, out: String) = {
@@ -366,33 +359,27 @@ object SilverTables {
         max(v).as(s"${out}_max"),
         when(cnt > 1, stddev_samp(v)).when(cnt === 1, 0.0).as(s"${out}_std"))
     }
+    // vo_trend inputs: the ordered non-null VO series per activity; mid =
+    // n//2, first half = ranks 1..mid, population std for the CV
+    // (py:216-218). A running count of VO is the lap's rank in that series.
+    val vo = col("vertical_oscillation")
+    val w = Window.partitionBy("activity_id").orderBy("split_index")
+    val mid = floor(col("n_vo_lap") / 2)
     val aggs = stats("ground_contact_time", "gct") ++
       stats("vertical_oscillation", "vo") ++
-      stats("vertical_ratio", "vr")
-    val base = splits.groupBy("activity_id").agg(aggs.head, aggs.tail: _*)
-
-    // vo_trend inputs: ordered non-null VO series per activity; mid = n//2,
-    // first half = rows 1..mid, population std for the CV (py:216-218).
-    val voRows = splits.where(col("vertical_oscillation").isNotNull)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy("activity_id").orderBy("split_index")))
-    val voAgg = voRows.groupBy("activity_id").agg(
-      count(lit(1)).as("n_vo"),
-      avg("vertical_oscillation").as("vo_avg"),
-      stddev_pop("vertical_oscillation").as("vo_pstd"))
-    val halves = voRows.join(voAgg, "activity_id")
-      .groupBy("activity_id")
-      .agg(
-        avg(when(col("_rn") <= floor(col("n_vo") / 2),
-          col("vertical_oscillation"))).as("first_avg"),
-        avg(when(col("_rn") > floor(col("n_vo") / 2),
-          col("vertical_oscillation"))).as("second_avg"))
-    val voTrendIn = voAgg.join(halves, "activity_id")
-      .select(col("activity_id"),
-        col("n_vo"), col("vo_avg"),
-        (col("vo_pstd") / col("vo_avg") * 100.0).as("cv"),
-        ((col("second_avg") - col("first_avg")) / col("first_avg") * 100.0)
-          .as("change_pct"))
+      stats("vertical_ratio", "vr") ++ Seq(
+        count(vo).as("n_vo"),
+        stddev_pop(vo).as("vo_pstd"),
+        avg(when(col("vo_rank") <= mid, vo)).as("first_avg"),
+        avg(when(col("vo_rank") > mid, vo)).as("second_avg"))
+    val perActivity = splits
+      .withColumn("vo_rank", count(vo).over(w))
+      .withColumn("n_vo_lap", count(vo).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .groupBy("activity_id").agg(aggs.head, aggs.tail: _*)
+      .withColumn("cv", col("vo_pstd") / col("vo_average") * 100.0)
+      .withColumn("change_pct",
+        (col("second_avg") - col("first_avg")) / col("first_avg") * 100.0)
     val consistency =
       when(col("cv") < 5, "Very stable")
         .when(col("cv") < 10, "Stable")
@@ -402,15 +389,15 @@ object SilverTables {
         .when(col("change_pct") > 0, format_string(
           "increasing (+%s%%, fatigue indicator)", fmt1(col("change_pct"))))
         .otherwise(format_string("decreasing (%s%%)", fmt1(col("change_pct"))))
-    val voTrend = voTrendIn.select(col("activity_id"),
+    // no VO row at all: no trend, not "Insufficient data (0 splits)"
+    val voTrend = when(col("n_vo") > 0,
       when(col("n_vo") < 3,
         format_string("Insufficient data (%d splits)", col("n_vo")))
         .otherwise(format_string("%s (%scm avg, CV=%s%%, %s)",
-          consistency, fmt1(col("vo_avg")), fmt0(col("cv")), trendTxt))
-        .as("vo_trend"))
+          consistency, fmt1(col("vo_average")), fmt0(col("cv")), trendTxt)))
 
     graft.Schemas.conform(
-      base.join(voTrend, Seq("activity_id"), "left")
+      perActivity.withColumn("vo_trend", voTrend)
         .withColumn("gct_variability",
           when(truthy(col("gct_average")) && truthy(col("gct_std")),
             col("gct_std") / col("gct_average") * 100.0))

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *  - `withHrZone`: broadcast join against the 5-rows-per-activity zone
   *    table (never a shuffle of splits);
   *  - `estimateIntensity`: the one genuinely sequential rule (each label
-  *    depends on the previous assigned label) — per-activity
-  *    `collect_list(sorted structs)` + a typed flatMap, ≤ ~40 laps per
-  *    activity, so the group payload is tiny and fully parallel across
-  *    activities (SURVEY.md §7.2).
+  *    depends on the previous assigned label) — one window over
+  *    activity_id carries each lap its activity's sorted lap list, from
+  *    which a UDF folds this lap's label; ≤ ~40 laps per activity, so the
+  *    payload is tiny and fully parallel across activities (SURVEY.md §7.2).
   */
 object SplitsEnrich {
 
@@ -204,32 +204,27 @@ object SplitsEnrich {
     out.toSeq
   }
 
+  /** Field `i` of a lap struct a UDF receives. */
+  private[ingest] def optDouble(r: Row, i: Int): Option[Double] =
+    if (r.isNullAt(i)) None else Some(r.getDouble(i))
+
   /** Fills missing intensity_type per activity using [[estimateIntensity]].
     * Runs only over activities where every split lacks a label (matching
     * the reference, which estimates per-activity when Garmin omits them).
     */
   def withEstimatedIntensity(spark: SparkSession, splits: DataFrame): DataFrame = {
-    import spark.implicits._
-    val needs = splits
-      .groupBy("activity_id")
-      .agg(max(col("intensity_type").isNotNull.cast("int")).as("has_any"))
-      .where(col("has_any") === 0)
-      .select("activity_id")
-    val estimated = splits.join(needs, Seq("activity_id"), "left_semi")
-      .select(col("activity_id"), col("split_index"),
-        col("heart_rate"), col("pace_seconds_per_km"))
-      .as[(Long, Int, Option[Double], Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (aid, it) =>
-        val laps = it.toSeq.sortBy(_._2)
-        val labels = estimateIntensity(laps.map(l => (l._3, l._4)))
-        laps.zip(labels).map { case (l, lab) => (aid, l._2, lab) }
-      }
-      .toDF("activity_id", "split_index", "estimated_type")
-    splits.join(estimated, Seq("activity_id", "split_index"), "left")
-      .withColumn("intensity_type",
-        coalesce(col("intensity_type"), col("estimated_type")))
-      .drop("estimated_type")
+    val label = udf { (laps: Seq[Row], splitIndex: Int) =>
+      val labels = estimateIntensity(laps.map(l => (optDouble(l, 1), optDouble(l, 2))))
+      labels(laps.indexWhere(_.getInt(0) == splitIndex))
+    }
+    val w = Window.partitionBy("activity_id")
+    val laps = sort_array(collect_list(struct(col("split_index"),
+      col("heart_rate").cast("double"),
+      col("pace_seconds_per_km").cast("double"))).over(w))
+    splits.withColumn("intensity_type",
+      coalesce(col("intensity_type"),
+        when(!max(col("intensity_type").isNotNull).over(w),
+          label(laps, col("split_index")))))
   }
 
   /** Full enrichment: all derived columns over bronze splits + zones +

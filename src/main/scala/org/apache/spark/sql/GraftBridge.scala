@@ -40,4 +40,8 @@ object GraftBridge {
 
   /** The execution an end event reports on (null when none is attached). */
   def queryExecution(e: SparkListenerSQLExecutionEnd): QueryExecution = e.qe
+
+  /** Whether the execution an end event reports on raised. */
+  def executionFailed(e: SparkListenerSQLExecutionEnd): Boolean =
+    e.executionFailure.isDefined
 }

@@ -65,6 +65,18 @@ class ApiJobsSpec extends SparkSpec {
     assert(got === athleteCalls.map { case (name, n, _) => name -> n })
   }
 
+  test("acwr windows keep their athlete key") {
+    val acwr = athlete.trainingLoad.acwr()
+    acwr.collect()
+    // the helper walks AQE's final plan and its query stages
+    val windows = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(acwr.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+    assert(windows.nonEmpty)
+    windows.foreach(w => assert(w.partitionSpec.nonEmpty, w.toString))
+  }
+
   test("a one-partition series read keeps its dynamic partition filter") {
     val (from, to) = ("2026-05-10", "2026-05-20")
     Seq(athlete.heat.heatTrend(from, to),

@@ -73,10 +73,11 @@ class PlanAuditSpec extends SparkSpec {
 
   test("date-partitioned events layout: range queries prune day directories") {
     // The pruning seam (Tables.eventsInRange derived partition predicate)
-    // against the layout PartitionEvents writes: a 1-day range over a
+    // against the layout ScaleUp writes: a 1-day range over a
     // multi-day partitioned log must (a) plan non-empty PartitionFilters,
     // (b) actually READ only that day's files, (c) return byte-identical
-    // rows to the flat layout, and (d) present the flat 6-column schema.
+    // rows to the flat layout, (d) present the flat 6-column schema, and
+    // (e) leave q_time_range_stats, which rides the seam, unchanged.
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-prune-").toFile
     try {
@@ -110,6 +111,22 @@ class PlanAuditSpec extends SparkSpec {
       assert(rows.map(_.toString).sorted.toSeq ==
         flat.map(_.toString).sorted.toSeq,
         "partitioned and flat layouts must return identical rows")
+      // avg/stddev are unordered double sums and the layouts feed rows in
+      // a different order: floats at the oracle's 1e-6 relative, the
+      // count exact
+      val Seq(qp, qf) = Seq(dir.getAbsolutePath, sfDir).map(d =>
+        SparkEntry.queries("q_time_range_stats")(spark, d).collect().toSeq)
+      assert(qp.length === qf.length && qf.head.getAs[Long]("n_rows") > 0)
+      qp.zip(qf).foreach { case (a, b) =>
+        (0 until a.length).foreach { i =>
+          (a.get(i), b.get(i)) match {
+            case (x: Double, y: Double) =>
+              assert(math.abs(x - y) <=
+                1e-6 * math.max(1.0, math.max(math.abs(x), math.abs(y))), s"$a vs $b")
+            case (x, y) => assert(x === y, s"$a vs $b")
+          }
+        }
+      }
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** `Telemetry.measure` attributes by job tag: concurrent blocks get
@@ -26,6 +28,19 @@ class TelemetrySpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(w)
   }
 
+  /** Shuffle query stages in an executed plan, walked by hand through
+    * AQE's final plan, each stage's exchange and every subquery.
+    */
+  private def shuffleStages(p: SparkPlan): Int = {
+    val next = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => p.children
+    }
+    val here = p match { case _: ShuffleQueryStageExec => 1; case _ => 0 }
+    here + (next ++ p.subqueries).map(shuffleStages).sum
+  }
+
   test("two queries measured concurrently each get their solo record") {
     val names = Seq("q_market_share", "q_join_agg")
     names.foreach(run) // warm: schemas, plans, codegen
@@ -42,6 +57,7 @@ class TelemetrySpec extends SparkSpec {
     names.indices.foreach { i =>
       assert(got(i).jobs === solo(i).jobs, names(i))
       assert(got(i).tasks === solo(i).tasks, names(i))
+      assert(got(i).exchanges === solo(i).exchanges, names(i))
       assert(got(i).jobs > 1 && got(i).tasks > 0, names(i))
     }
     assert(got.map(_.tasks).sum === all.tasks)
@@ -67,7 +83,7 @@ class TelemetrySpec extends SparkSpec {
         () => SparkEntry.queries("q_ann_brute")(spark, sfDir)))
     cases.foreach { case (_, _, df) => df().collect() } // warm
     Caches.warm()
-    cases.foreach { case (name, planHas, mk) =>
+    val exchanges = cases.map { case (name, planHas, mk) =>
       val df = mk()
       var tagged: Telemetry.Record = null
       val all = window { tagged = Telemetry.measure(spark, name)(df.collect()) }
@@ -76,6 +92,9 @@ class TelemetrySpec extends SparkSpec {
       assert(tagged.cpuNs === all.cpuNs, name)
       assert(tagged.sqlExecutions >= 1, name)
       assert(tagged.planMs >= 0L, name)
+      assert(tagged.exchanges === shuffleStages(df.queryExecution.executedPlan), name)
+      tagged.exchanges
     }
+    assert(exchanges.exists(_ > 0))
   }
 }
