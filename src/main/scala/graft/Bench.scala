@@ -226,12 +226,12 @@ object Bench {
       // cache_warm: per-shared-frame scan seconds measured at the cache
       // barrier (post-build, pre-timing) — near-zero values are the proof
       // the timed passes never paid a shared build. Keys are truncated to
-      // the logical name (the :dir:fingerprint suffix is session noise).
+      // the logical name (the slot's :dir suffix is session noise).
       val cacheQs = obj(cacheWarm.map { case (k, v) =>
         k.takeWhile(_ != ':') -> f3(v) })
       // cache_bytes: each shared frame's materialized storage footprint
       // (root InMemoryRelation stats post-warm) + the registry total — the
-      // measured answer to "how much executor memory do the 39 shared
+      // measured answer to "how much executor memory do the shared
       // frames actually pin", previously only argued from plans.
       val cacheBytes = graft.Caches.bytes()
       val cacheBytesQs = obj(cacheBytes.map { case (k, b) =>

@@ -3,20 +3,29 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Registry for session-scoped persisted frames (the shingle/vector/profile
-  * histograms that several queries reference repeatedly — see the measured
-  * CollapseProject trap notes in operators/Dedup.scala).
+/** Registry for session-scoped persisted frames: the shingle, vector,
+  * model and pair frames that several queries read, and the prepared plans
+  * [[Q]] re-wraps per call. One rule covers every shared frame.
   *
-  * Keys embed a source fingerprint ([[fingerprint]]) so a long-lived session
-  * re-reading a directory whose parquet files were rewritten gets a fresh
-  * frame instead of stale cached data, and [[clear]] unpersists everything —
-  * the lifecycle guard the round-1 ADVICE asked for (TrieMaps that never
-  * invalidate or unpersist).
+  *  - Slot: `name:dir`, one per logical frame over one data dir. Builder
+  *    parameters (a cap, a `k`) belong in `name`.
+  *  - Version: [[fingerprintCached]] of the dir, the same version that
+  *    keys Q's prepared plans, so frames and plans go stale together.
+  *  - Level: `MEMORY_AND_DISK`, applied here once. Under memory pressure
+  *    Spark spills such a frame to disk instead of dropping it.
+  *  - Replacement: a slot holds one frame. A new version first unpersists
+  *    the superseded frame and only then builds and persists the new one.
+  *    Spark's cache matches plans by path, not by file contents, so the
+  *    old entry must go before a rebuilt plan over a rewritten dir can
+  *    read the new files.
+  *
+  * [[clear]] unpersists everything.
   */
 object Caches {
 
-  private val frames = TrieMap.empty[String, DataFrame]
+  private val frames = TrieMap.empty[String, (String, DataFrame)]
   private val values = TrieMap.empty[String, Any]
   private[graft] val preparedPlans = TrieMap.empty[String,
     (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
@@ -51,25 +60,40 @@ object Caches {
   def memo[T](key: String)(mk: => T): T =
     values.getOrElseUpdate(key, mk).asInstanceOf[T]
 
-  /** Test seam: when set, [[getOrElseUpdate]] re-persists each NEWLY built
-    * frame at this level instead of the builder's (builders hardcode their
-    * serving levels). CachesSpec uses DISK_ONLY to prove the registry's
-    * worst eviction case — every byte spilled, zero storage memory — stays
-    * byte-identical and green; production never sets it.
+  /** Test seam: the storage level [[frame]] persists at instead of
+    * `MEMORY_AND_DISK`. CachesSpec sets DISK_ONLY to replay the worst
+    * eviction case (every byte on disk, none in storage memory);
+    * production never sets it.
     */
-  @volatile private[graft] var levelOverride: Option[org.apache.spark.storage.StorageLevel] = None
+  @volatile private[graft] var levelOverride: Option[StorageLevel] = None
 
-  /** Memoize a persisted frame under `key`; the caller's `mk` must already
-    * call `.persist()` (this registry manages lifetime, not storage level).
+  /** The shared frame `name` over data dir `dir`: slot `name:dir`,
+    * versioned by the dir's [[fingerprintCached]]. `build` returns the
+    * frame unpersisted; the registry persists it.
     */
-  def getOrElseUpdate(key: String, mk: => DataFrame): DataFrame =
-    frames.getOrElseUpdate(key, {
-      val df = mk
-      levelOverride.fold(df) { lvl =>
-        df.unpersist(blocking = true) // a level can't change once assigned
-        df.persist(lvl)
+  def frame(s: SparkSession, dir: String, name: String)(build: => DataFrame)
+      : DataFrame =
+    frame(s"$name:$dir", fingerprintCached(s, dir))(build)
+
+  /** The frame in `slot` at `version`, built and persisted on a miss after
+    * the slot's superseded frame is unpersisted. A slot whose name already
+    * identifies its input (a plan's semantic hash) passes a constant
+    * version. Synchronized so a replacement never races a build; builders
+    * that read other slots re-enter on the same thread.
+    */
+  def frame(slot: String, version: String)(build: => DataFrame): DataFrame =
+    synchronized {
+      frames.get(slot) match {
+        case Some((v, df)) if v == version => df
+        case old =>
+          old.foreach { case (_, df) => df.unpersist() }
+          frames.remove(slot)
+          val df = build.persist(
+            levelOverride.getOrElse(StorageLevel.MEMORY_AND_DISK))
+          frames.put(slot, (version, df))
+          df
       }
-    })
+    }
 
   /** Force-materialize every registered frame (full scan via count) and
     * return per-key wall seconds, key-sorted. Bench calls this between its
@@ -80,7 +104,7 @@ object Caches {
     * the returned timings document exactly that in BENCH_FULL.json.
     */
   def warm(): Seq[(String, Double)] = frames.toSeq.sortBy(_._1).map {
-    case (k, df) =>
+    case (k, (_, df)) =>
       val t0 = System.nanoTime()
       try df.count() catch { case _: Exception => () }
       k -> (System.nanoTime() - t0) / 1e9
@@ -94,7 +118,7 @@ object Caches {
     * in the bench artifact instead of a plan-reading argument.
     */
   def bytes(): Seq[(String, Long)] = frames.toSeq.sortBy(_._1).map {
-    case (k, df) =>
+    case (k, (_, df)) =>
       val b = df.queryExecution.withCachedData.collectFirst {
         case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
           r.stats.sizeInBytes.toLong
@@ -107,14 +131,14 @@ object Caches {
     * DROPPED (and rebuilt) under memory pressure; one with it degrades to
     * disk reads. CachesSpec pins useDisk across the registry.
     */
-  def levels(): Seq[(String, org.apache.spark.storage.StorageLevel)] =
-    frames.toSeq.sortBy(_._1).map { case (k, df) => k -> df.storageLevel }
+  def levels(): Seq[(String, StorageLevel)] =
+    frames.toSeq.sortBy(_._1).map { case (k, (_, df)) => k -> df.storageLevel }
 
   /** Unpersist and forget every registered frame (idempotent; safe while
     * queries are not running). Call between runs or before session stop.
     */
   def clear(): Unit = synchronized {
-    frames.foreach { case (_, df) =>
+    frames.foreach { case (_, (_, df)) =>
       try df.unpersist() catch { case _: Exception => () }
     }
     frames.clear()
@@ -123,11 +147,11 @@ object Caches {
     fingerprints.clear()
   }
 
-  /** Cheap content fingerprint of a data directory: file count + max
-    * modification time + total bytes via the Hadoop FileSystem API, so cache
-    * keys change when the underlying parquet is rewritten.
+  /** Content fingerprint of a data directory: file count + max
+    * modification time + total bytes over a recursive Hadoop listing.
+    * Callers go through [[fingerprintCached]].
     */
-  def fingerprint(spark: SparkSession, dir: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, dir: String): String = {
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -165,10 +189,10 @@ object Caches {
 
   /** [[fingerprint]] memoized per (session, dir) behind the dir's [[stamp]]:
     * the full recursive listing re-runs only when the stamp changes, so a
-    * hit costs one `listStatus`. Rationale (r16 ADVICE): Q computes a
-    * fingerprint per query CONSTRUCTION, and a recursive listing 165+ times
-    * per suite pass is a per-query driver fixed cost of exactly the kind
-    * the memo was built to remove. Staleness contract: the stamp's. A
+    * hit costs one `listStatus`. It versions every Q's prepared plan and
+    * every shared [[frame]], so a recursive listing per query construction
+    * or frame access would be a per-call driver fixed cost. Staleness
+    * contract: the stamp's. A
     * table file replaced in `dir`, or a file or partition added, removed or
     * replaced inside a table directory one level down, re-lists. A rewrite
     * inside a partition of a partitioned table (two levels down) does not,

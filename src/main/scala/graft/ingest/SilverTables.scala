@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.domain.Performance
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ object SilverTables {
     * Pace consistency is the fragment-robust CV over run laps (laps below
     * 0.5x the median distance are GPS fragments).
     */
-  def performanceTrends(spark: SparkSession, splits: DataFrame): DataFrame = {
+  def performanceTrends(splits: DataFrame): DataFrame = {
     val isRun =
       upper(col("intensity_type")).isin(Performance.WorkIntensities.toSeq: _*)
     // _cv semantics (performance_trends.py:62-73): None on no paces, 0.0 on

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -212,7 +212,7 @@ object SplitsEnrich {
     * Runs only over activities where every split lacks a label (matching
     * the reference, which estimates per-activity when Garmin omits them).
     */
-  def withEstimatedIntensity(spark: SparkSession, splits: DataFrame): DataFrame = {
+  def withEstimatedIntensity(splits: DataFrame): DataFrame = {
     val label = udf { (laps: Seq[Row], splitIndex: Int) =>
       val labels = estimateIntensity(laps.map(l => (optDouble(l, 1), optDouble(l, 2))))
       labels(laps.indexWhere(_.getInt(0) == splitIndex))
@@ -232,10 +232,10 @@ object SplitsEnrich {
     * weight for W/kg. One broadcast join per small side; splits stay
     * partition-resident.
     */
-  def enrich(spark: SparkSession, splits: DataFrame, hrZones: DataFrame,
+  def enrich(splits: DataFrame, hrZones: DataFrame,
       weather: DataFrame, activities: DataFrame,
       weightKg: Double = 60.0): DataFrame = {
-    val withIntensity = withEstimatedIntensity(spark, splits)
+    val withIntensity = withEstimatedIntensity(splits)
     val zoned = withHrZone(withIntensity, hrZones)
     val joined = zoned
       .join(broadcast(weather), Seq("activity_id"), "left")

@@ -34,10 +34,7 @@ object Curation {
     // rate, the kept-corpus facade and the split assignment all consume
     // the same ~|docs|-row status frame — compute it once (the
     // trained-once discipline the LM model uses)
-    graft.Caches.getOrElseUpdate(
-      s"curation-status:$d:${graft.Caches.fingerprint(s, d)}",
-      statusesUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.Caches.frame(s, d, "curation-status")(statusesUncached(s, d))
 
   private def statusesUncached(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -205,11 +202,9 @@ object Curation {
       // disagree on boundary-row placement once partitions outgrow the
       // boundary sample, corrupting the prefix offsets. One materialized
       // shuffle output serves both jobs. (Twin of q_curriculum's parts.)
-      val parts = graft.Caches.getOrElseUpdate(
-        s"budget-parts:$d:${graft.Caches.fingerprint(s, d)}",
+      val parts = graft.Caches.frame(s, d, "budget-parts")(
         m.repartitionByRange(8, desc("diversity"), asc("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .withColumn("pid", spark_partition_id()))
       // per-partition totals: ≤ #partitions rows — the licensed tiny
       // driver collect (same pattern as the profiler bounds)
       val sums = parts.groupBy("pid").agg(sum("n_tokens").as("psum"))

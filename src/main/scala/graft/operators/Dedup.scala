@@ -38,8 +38,7 @@ object Dedup {
     *    silver table; in-session, MEMORY_AND_DISK caching is its analog.
     */
   private[operators] def shingled(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"shingled:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "shingled")(
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
         .repartition(col("doc_id"))
@@ -47,8 +46,7 @@ object Dedup {
           expr(tokensSpark("text")).as("toks"))
         .withColumn("th", expr(hashArraySpark("toks")))
         .select("doc_id", "lang", "n_chars", "th")
-        .withColumn("hs", expr(shingleHashesSpark("th")))
-        .persist())
+        .withColumn("hs", expr(shingleHashesSpark("th"))))
 
   private val shingledDuck =
     s"""t AS (SELECT doc_id, lang, n_chars, ${tokensDuck("text")} AS toks FROM documents),
@@ -92,12 +90,11 @@ object Dedup {
     */
   private def fcappedPostings(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"fcapped-postings:$d:${graft.Caches.fingerprint(s, d)}:$NgramMaxDfFrac",
+    graft.Caches.frame(s, d, s"fcapped-postings:$NgramMaxDfFrac")(
       cappedPostingsByFrac(
         shingled(s, d).where(size(col("hs")) > 0)
           .select(col("doc_id"), col("hs")),
-        maxDfFrac = NgramMaxDfFrac).repartition(col("hsh")).persist())
+        maxDfFrac = NgramMaxDfFrac).repartition(col("hsh")))
 
   /** Inverted-index Jaccard pairs over a postings frame (doc_id, hsh):
     * per-doc sizes recomputed from the (possibly capped) postings so the
@@ -260,13 +257,11 @@ object Dedup {
     */
   private def minhashSigs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"minhash-sigs:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "minhash-sigs")(
       shingled(s, d)
         .select(col("doc_id") +: col("hs") +:
           minhashExprs.map { case (j, spark, _) =>
-            expr(spark).as(f"mh$j%02d") }: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            expr(spark).as(f"mh$j%02d") }: _*))
 
   /** Exploded LSH band keys over the memoized signature frame, persisted
     * pre-partitioned on (g, k): the LSH pair query self-joins this frame
@@ -276,11 +271,9 @@ object Dedup {
     */
   private def minhashBands(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"minhash-bands:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "minhash-bands")(
       bandsFromSig(minhashSigs(s, d).where(size(col("hs")) > 0))
-        .repartition(col("g"), col("k"))
-        .persist())
+        .repartition(col("g"), col("k")))
 
   /** Delegate-only band keys, pre-partitioned on (g, k) — the candidate
     * source for the PAIR-shaped MinHash queries (see dupGroups: identical
@@ -292,12 +285,10 @@ object Dedup {
     */
   private def minhashBandsDelegates(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"minhash-bands-delegates:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "minhash-bands-delegates")(
       bandsFromSig(minhashSigs(s, d).where(size(col("hs")) > 0)
           .join(delegateIds(s, d), Seq("doc_id"), "left_semi"))
-        .repartition(col("g"), col("k"))
-        .persist())
+        .repartition(col("g"), col("k")))
 
   /** Exact-duplicate collapse membership over the shingle-bearing corpus:
     * (doc_id, gid), gid = min doc_id among documents with an IDENTICAL
@@ -319,13 +310,11 @@ object Dedup {
     */
   private[graft] def dupGroups(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"dup-groups:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "dup-groups")(
       shingled(s, d).where(size(col("hs")) > 0)
         .select(col("doc_id"), col("th"))
         .withColumn("gid", min("doc_id").over(Window.partitionBy("th")))
-        .select("doc_id", "gid")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("doc_id", "gid"))
 
   /** Delegate doc_ids (one per exact-dup group) — the population every
     * quadratic pair stage runs over.
@@ -393,25 +382,24 @@ object Dedup {
     // shared prefix would emit the same JSON key twice (abs + frac caps)
     val pfx = maxDf.fold(_ => "capped-dpostings-abs", _ => "capped-dpostings-frac")
     val key = maxDf.fold(c => s"abs:$c", f => s"frac:$f")
-    val ex = graft.Caches.getOrElseUpdate(
-      s"$pfx:$d:${graft.Caches.fingerprint(s, d)}:$key", {
-        val ex0 = shingled(s, d).where(size(col("hs")) > 0)
-          .join(delegateIds(s, d), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), explode(col("hs")).as("hsh"))
-        val dfs = ex0
-          .join(gsizes.select(col("gid").as("doc_id"), col("m")), Seq("doc_id"))
-          .groupBy("hsh").agg(sum("m").as("df"))
-        val hot = maxDf match {
-          case Left(cap) => dfs.where(col("df") > cap).select("hsh")
-          case Right(frac) =>
-            val n = gsizes.agg(sum("m").as("n_docs"))
-            dfs.crossJoin(broadcast(n))
-              .where(col("df") > ceil(lit(frac) * col("n_docs")).cast("long"))
-              .select("hsh")
-        }
-        ex0.join(broadcast(hot), Seq("hsh"), "left_anti")
-          .repartition(col("hsh")).persist()
-      })
+    val ex = graft.Caches.frame(s, d, s"$pfx:$key") {
+      val ex0 = shingled(s, d).where(size(col("hs")) > 0)
+        .join(delegateIds(s, d), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), explode(col("hs")).as("hsh"))
+      val dfs = ex0
+        .join(gsizes.select(col("gid").as("doc_id"), col("m")), Seq("doc_id"))
+        .groupBy("hsh").agg(sum("m").as("df"))
+      val hot = maxDf match {
+        case Left(cap) => dfs.where(col("df") > cap).select("hsh")
+        case Right(frac) =>
+          val n = gsizes.agg(sum("m").as("n_docs"))
+          dfs.crossJoin(broadcast(n))
+            .where(col("df") > ceil(lit(frac) * col("n_docs")).cast("long"))
+            .select("hsh")
+      }
+      ex0.join(broadcast(hot), Seq("hsh"), "left_anti")
+        .repartition(col("hsh"))
+    }
     val dpairs = ngramJaccardPairsUnordered(ex, threshold = 0.5)
     val eligible = ex.select(col("doc_id").as("gid")).distinct()
       .withColumn("jaccard", lit(1.0))
@@ -429,10 +417,7 @@ object Dedup {
     // PageRank builds) each re-ran the postings self-join otherwise —
     // the pair frame itself is tiny (bounded by true near-dups), so the
     // persist costs nothing and saves the quadratic-half of each query
-    graft.Caches.getOrElseUpdate(
-      s"ngram-pairs:$d:${graft.Caches.fingerprint(s, d)}",
-      ngramPairsUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.Caches.frame(s, d, "ngram-pairs")(ngramPairsUncached(s, d))
 
   private def ngramPairsUncached(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     // The quadratic half (postings self-join) runs over DELEGATES only —
@@ -476,8 +461,7 @@ object Dedup {
     */
   private[operators] def clusterLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"dup-cluster-labels:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "dup-cluster-labels")(
       GraphOps.connectedComponents(ngramPairs(s, d), "a_id", "b_id"))
 
   /** Exploded (doc_id, hsh) shingle postings — shared by the decon join
@@ -608,10 +592,7 @@ object Dedup {
     // memoized + persisted: the calibration report and the threshold
     // sweep read the identical pair frame — the banded-signature build
     // is the expensive half of both queries
-    graft.Caches.getOrElseUpdate(
-      s"minhash-cal:$d:${graft.Caches.fingerprint(s, d)}",
-      calibrationPairsUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.Caches.frame(s, d, "minhash-cal")(calibrationPairsUncached(s, d))
 
   private def calibrationPairsUncached(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
@@ -851,10 +832,8 @@ object Dedup {
       // naive per-doc form re-pairs every clone family m² times; see
       // dupGroups). key carries the Jaccard threshold too (ADVICE r8):
       // a caller at a different threshold must not be served these pairs
-      graft.Caches.getOrElseUpdate(
-        s"capped-pairs:$d:${graft.Caches.fingerprint(s, d)}:$NgramMaxDf:0.5",
-        cappedNgramPairsCollapsed(s, d, Left(NgramMaxDf.toLong))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.Caches.frame(s, d, s"capped-pairs:$NgramMaxDf:0.5")(
+        cappedNgramPairsCollapsed(s, d, Left(NgramMaxDf.toLong)))
         .orderBy("a_id", "b_id")
     },
 
@@ -892,10 +871,8 @@ object Dedup {
       // the naive self-join inherits the full m² blowup (measured fatal
       // at the ×100 replica rung). threshold in the key for the same
       // reason as capped-pairs above
-      graft.Caches.getOrElseUpdate(
-        s"fcapped-pairs:$d:${graft.Caches.fingerprint(s, d)}:$NgramMaxDfFrac:0.5",
-        cappedNgramPairsCollapsed(s, d, Right(NgramMaxDfFrac))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      graft.Caches.frame(s, d, s"fcapped-pairs:$NgramMaxDfFrac:0.5")(
+        cappedNgramPairsCollapsed(s, d, Right(NgramMaxDfFrac)))
         .orderBy("a_id", "b_id")
     },
 
@@ -1153,21 +1130,19 @@ object Dedup {
       // i.e. Σ n_spans rows, which under ×m multiplicity is m²·|sh| per
       // family (billions at the ×100 rung); collapsed, each expanded pair
       // is emitted exactly once with its n_spans carried.
-      graft.Caches.getOrElseUpdate(
-        s"span-pairs:$d:${graft.Caches.fingerprint(s, d)}", {
-          val mem = dupGroups(s, d)
-          val dsh = shingled(s, d)
-            .join(delegateIds(s, d), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), expr(spanSparkExpr).as("sh"))
-            .where(size(col("sh")) > 0)
-          val ex = dsh.select(col("doc_id"), explode(col("sh")).as("hsh"))
-          val dpairs = pairCounts(ex).withColumnRenamed("n_shared", "n_spans")
-          val eligible = dsh.select(col("doc_id").as("gid"),
-            size(col("sh")).cast("long").as("n_spans"))
-          expandDelegatePairs(dpairs, mem)
-            .unionByName(withinGroupPairs(mem, eligible))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        })
+      graft.Caches.frame(s, d, "span-pairs") {
+        val mem = dupGroups(s, d)
+        val dsh = shingled(s, d)
+          .join(delegateIds(s, d), Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), expr(spanSparkExpr).as("sh"))
+          .where(size(col("sh")) > 0)
+        val ex = dsh.select(col("doc_id"), explode(col("sh")).as("hsh"))
+        val dpairs = pairCounts(ex).withColumnRenamed("n_shared", "n_spans")
+        val eligible = dsh.select(col("doc_id").as("gid"),
+          size(col("sh")).cast("long").as("n_spans"))
+        expandDelegatePairs(dpairs, mem)
+          .unionByName(withinGroupPairs(mem, eligible))
+      }
         .orderBy("a_id", "b_id")
     },
 
@@ -1371,13 +1346,11 @@ object Dedup {
       // front makes the collapse and the join agree (latent on the test
       // data, which has no NULL labels, but semantics must not depend on
       // that).
-      val mem = graft.Caches.getOrElseUpdate(
-        s"vec-groups:$d:${graft.Caches.fingerprint(s, d)}",
+      val mem = graft.Caches.frame(s, d, "vec-groups")(
         e.where(col("label").isNotNull)
           .withColumn("gid",
             min("vec_id").over(Window.partitionBy("label", "v")))
-          .select(col("vec_id").as("doc_id"), col("gid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("vec_id").as("doc_id"), col("gid")))
       val del = e.join(mem.where(col("doc_id") === col("gid"))
         .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
       val a = del.select(col("vec_id").as("a_id"), col("label"),
@@ -1455,9 +1428,8 @@ object Dedup {
          |SELECT r.node AS doc_id, d.deg, CAST(r.r AS BIGINT) AS pr_scaled
          |FROM r6 r JOIN deg d ON d.u = r.node
          |ORDER BY pr_scaled DESC, doc_id""".stripMargin) { (s, d) =>
-      graft.Caches.getOrElseUpdate(
-          s"pagerank:$d:${graft.Caches.fingerprint(s, d)}",
-          GraphOps.pageRank(ngramPairs(s, d), "a_id", "b_id"))
+      graft.Caches.frame(s, d, "pagerank")(
+        GraphOps.pageRank(ngramPairs(s, d), "a_id", "b_id"))
         .select(col("node").as("doc_id"), col("deg"), col("pr_scaled"))
         .orderBy(desc("pr_scaled"), asc("doc_id"))
     }

@@ -84,14 +84,7 @@ object GraphOps {
       i += 1
     }
     und.unpersist()
-    // The returned frame is registered in graft.Caches by both callers, and
-    // the registry contract (Caches.scala:36-38) is that the builder hands
-    // over an ALREADY-persisted frame: the checkpoint blocks underneath are
-    // disk-tiered, but the top-of-plan join/aggregate above them would
-    // re-run on every consumer read, and Caches.bytes()/levels() would
-    // report a zero-byte NONE-level entry. MEMORY_AND_DISK matches every
-    // other registry frame (eviction degrades to disk reads, never drops).
-    labels.persist(StorageLevel.MEMORY_AND_DISK)
+    labels
   }
 
   /** Fixed-iteration PageRank in 64-bit FIXED-POINT arithmetic over an
@@ -124,7 +117,6 @@ object GraphOps {
       und.unpersist(); deg.unpersist()
       return deg.select(col("u").as("node"), col("deg"),
           col("deg").as("pr_scaled"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // registry contract, as below
     }
     val base = (15L * scale) / (100L * n)
     var r = deg.select(col("u").as("node"), lit(scale / n).as("r"))
@@ -140,9 +132,6 @@ object GraphOps {
     val out = r.join(deg, r("node") === deg("u"))
       .select(col("node"), col("deg"), col("r").as("pr_scaled"))
       .localCheckpoint(true)
-      // registry contract: callers register this frame, so it must arrive
-      // persisted (same reasoning as connectedComponents' return).
-      .persist(StorageLevel.MEMORY_AND_DISK)
     und.unpersist()
     deg.unpersist()
     out

@@ -28,8 +28,7 @@ object Multimodal {
   private def chunkHashes(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import graft.functions.TextHash
-    graft.Caches.getOrElseUpdate(
-      s"mm-chunks:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "mm-chunks")(
       Tables.documents(s, d)
         .where(length(col("text")) > 0)
         .select(col("doc_id"), col("text"),
@@ -40,8 +39,7 @@ object Multimodal {
           "substring(text, cast((chunk_idx - 1) * 64 + 1 AS int), 64)"))
         .select(col("doc_id"), col("chunk_idx"),
           length(col("chunk")).cast("long").as("n_units"),
-          expr(TextHash.polySpark("chunk")).as("chunk_hash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          expr(TextHash.polySpark("chunk")).as("chunk_hash")))
   }
 
   /** Exact-duplicate collapse membership over the chunk-bearing corpus:
@@ -63,15 +61,13 @@ object Multimodal {
     */
   private[graft] def mmDupGroups(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"mm-dup-groups:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "mm-dup-groups")(
       chunkHashes(s, d)
         .groupBy("doc_id")
         .agg(sort_array(collect_set(col("chunk_hash"))).as("hs"))
         .withColumn("gid", min("doc_id").over(
           org.apache.spark.sql.expressions.Window.partitionBy("hs")))
-        .select("doc_id", "gid")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("doc_id", "gid"))
 
   /** Distinct (doc_id, h) chunk-hash postings of the DELEGATES only — the
     * input of both pairwise mm-dedup stages, hash-partitioned on the chunk
@@ -80,14 +76,12 @@ object Multimodal {
     */
   private def mmDelegatePostings(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"mm-dpostings:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "mm-dpostings")(
       chunkHashes(s, d)
         .select(col("doc_id"), col("chunk_hash").as("h")).distinct()
         .join(mmDupGroups(s, d).where(col("doc_id") === col("gid"))
           .select("doc_id"), Seq("doc_id"), "left_semi")
-        .repartition(col("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("h")))
 
   /** Delegate-level shared-chunk pair stage + output-bound expansion,
     * shared by the uncapped and df-capped mm dedup queries. `ex` is a

@@ -36,14 +36,12 @@ object Similarity {
     * both the query and candidate side.
     */
   private[operators] def vecs(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"vecs:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "vecs")(
       Tables.embeddings(s, d)
         .repartition(col("vec_id"))
         .select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> cast(x AS double))").as("v"))
-        .withColumn("nrm", sqrt(ArrayOps.dotDouble(col("v"), col("v"))))
-        .persist())
+        .withColumn("nrm", sqrt(ArrayOps.dotDouble(col("v"), col("v")))))
 
   private val duckVecs =
     """e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -70,8 +68,7 @@ object Similarity {
     * k-means trainer.
     */
   private[graft] def quantizedVecs(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"quantized-vecs:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "quantized-vecs")(
       Tables.embeddings(s, d)
         .repartition(col("vec_id"))
         .select(col("vec_id"),
@@ -82,8 +79,7 @@ object Similarity {
           expr("transform(v, x -> cast(round(x * (127.0 / _amax)) AS bigint))"))
         .withColumn("qn",
           sqrt(ArrayOps.dotLong(col("qv"), col("qv")).cast("double")))
-        .select("vec_id", "qv", "qn")
-        .persist())
+        .select("vec_id", "qv", "qn"))
 
   // ------------------------------------------------- product quantization
 
@@ -162,23 +158,19 @@ object Similarity {
     * code table the searches read).
     */
   private def pqCode(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"pq-code:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "pq-code")(
       pqEnc0(s, d).groupBy("vec_id", "j")
         .agg(min(struct(col("dist"), col("c"))).as("m"))
-        .select(col("vec_id"), col("j"), col("m.c").as("c"))
-        .persist())
+        .select(col("vec_id"), col("j"), col("m.c").as("c")))
 
   /** Asymmetric-distance tables for the query set (vec_id < 10): 8×4
     * exact subvector-to-codeword distances per query — m·K-bounded, the
     * broadcast side of every ADC join.
     */
   private def pqQueryTables(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"pq-qt:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "pq-qt")(
       pqEnc0(s, d).where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("j"), col("c"), col("dist"))
-        .persist())
+        .select(col("vec_id").as("q_id"), col("j"), col("c"), col("dist")))
 
   /** Cell-pruned ADC top-3 `(q_id, rnk, nn_id, adist)` — the IVF-PQ
     * serve path, shared by q_ann_ivfpq and q_ivfpq_recall. All inputs
@@ -262,9 +254,7 @@ object Similarity {
     * rows.
     */
   private[graft] def lshTop3(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"lsh-top3:$d:${graft.Caches.fingerprint(s, d)}",
-      lshTop3Uncached(s, d).persist())
+    graft.Caches.frame(s, d, "lsh-top3")(lshTop3Uncached(s, d))
 
   private def lshTop3Uncached(s: SparkSession, d: String): DataFrame = {
     val n = quantizedVecs(s, d)
@@ -352,9 +342,7 @@ object Similarity {
     * pay it three times per suite pass.
     */
   private[graft] def ivfTrainedTop3(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"ivf-top3:$d:${graft.Caches.fingerprint(s, d)}",
-      ivfTrainedTop3Uncached(s, d).persist())
+    graft.Caches.frame(s, d, "ivf-top3")(ivfTrainedTop3Uncached(s, d))
 
   private def ivfTrainedTop3Uncached(s: SparkSession, d: String): DataFrame = {
     val n8t = kmeansAssign(s, d)
@@ -391,9 +379,7 @@ object Similarity {
     // memoized + persisted like ivfTrainedTop3: FOUR consumers (the
     // quantized search dump, recall@3, nDCG@3, and the IVF eval's ground
     // truth) each re-ran the brute-force scoring join otherwise
-    graft.Caches.getOrElseUpdate(
-      s"quant-top3:$d:${graft.Caches.fingerprint(s, d)}",
-      quantTop3Uncached(s, d).persist())
+    graft.Caches.frame(s, d, "quant-top3")(quantTop3Uncached(s, d))
 
   private def quantTop3Uncached(s: SparkSession, d: String): DataFrame = {
     // quantized corpus feeds both the query and candidate sides —
@@ -487,23 +473,20 @@ object Similarity {
     * deployment writes out and broadcasts).
     */
   private[graft] def kmeansCentroids(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"ivf-centroids:$d:${graft.Caches.fingerprint(s, d)}", {
-        val n8 = quantizedVecs(s, d).select("vec_id", "qv")
-        val seeds = n8.orderBy("vec_id").limit(4)
-          .select(col("vec_id").as("cid"), col("qv").as("cv"))
-        val u1 = kmeansUpdate(kmAssignPass(n8, seeds, kmDistInt))
-        u1.select(col("cid"),
-          expr(KmDims.map(i => s"cast(s$i AS double) / cnt")
-            .mkString("array(", ", ", ")")).as("cv"))
-          .persist()
-      })
+    graft.Caches.frame(s, d, "ivf-centroids") {
+      val n8 = quantizedVecs(s, d).select("vec_id", "qv")
+      val seeds = n8.orderBy("vec_id").limit(4)
+        .select(col("vec_id").as("cid"), col("qv").as("cv"))
+      val u1 = kmeansUpdate(kmAssignPass(n8, seeds, kmDistInt))
+      u1.select(col("cid"),
+        expr(KmDims.map(i => s"cast(s$i AS double) / cnt")
+          .mkString("array(", ", ", ")")).as("cv"))
+    }
 
   private[graft] def kmeansAssign(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"ivf-assign:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "ivf-assign")(
       kmAssignPass(quantizedVecs(s, d).select("vec_id", "qv"),
-        kmeansCentroids(s, d), kmDistDbl).persist())
+        kmeansCentroids(s, d), kmDistDbl))
 
   /** Per-cluster count + 64 per-dimension integer sums (map-side partial
     * aggregation; exact at any scale).
@@ -533,8 +516,7 @@ object Similarity {
     * one window pass, partitioned by the canonical vector string).
     */
   private[graft] def semDedupGrouped(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"semdedup-grouped:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "semdedup-grouped")(
       kmeansAssign(s, d)
         .withColumn("qn",
           sqrt(ArrayOps.dotLong(col("qv"), col("qv")).cast("double")))
@@ -542,8 +524,7 @@ object Similarity {
           // partition directly by the array column (Spark arrays are
           // group-comparable): same grouping as the oracle's injective
           // array_to_string key, minus a 64-element string build per row
-          Window.partitionBy(col("cid"), col("qv"))))
-        .persist())
+          Window.partitionBy(col("cid"), col("qv")))))
 
   /** One delegate row per DISTINCT quantized vector per cell:
     * (mid, cid, qv, qn). THIS is what makes SemDeDup scale-safe against
@@ -879,12 +860,10 @@ object Similarity {
       // re-aggregating the 64 per-dim sums per run cost a 64-wide Catalyst
       // plan (planning alone ~0.3 s) plus a 32-task stage; the table IS
       // the train artifact (at 100 TB it's the written coarse quantizer)
-      val u2a = graft.Caches.getOrElseUpdate(
-        s"ivf-centroid-sums:$d:${graft.Caches.fingerprint(s, d)}",
+      val u2a = graft.Caches.frame(s, d, "ivf-centroid-sums")(
         kmeansUpdate(a2).select(col("cid"), col("cnt"),
           expr(KmDims.map(i => s"s$i").mkString(" + ")).as("sum_components"),
-          expr(KmDims.map(i => s"s$i").mkString("array(", ", ", ")")).as("sv"))
-          .persist())
+          expr(KmDims.map(i => s"s$i").mkString("array(", ", ", ")")).as("sv")))
       // Σᵢ (qvᵢ·cnt − svᵢ)² expanded to cnt²·⟨qv,qv⟩ − 2·cnt·⟨qv,sv⟩ +
       // ⟨sv,sv⟩ — three codegen'd integer dot kernels instead of the
       // 64-term interpreted HOF fold; exact BIGINT arithmetic, identical
@@ -1383,22 +1362,20 @@ object Similarity {
       // TWICE below (centroid pairs + the final report join) — memoized +
       // persisted, or the full embedding scan + 66-column aggregate runs
       // twice per execution (measured: the whole query halves at sf0.1)
-      val u = graft.Caches.getOrElseUpdate(
-        s"label-scatter-u:$d:${graft.Caches.fingerprint(s, d)}", {
-          val v = quantizedVecs(s, d)
-            .join(Tables.embeddings(s, d).select("vec_id", "label"),
-              Seq("vec_id"))
-          val aggCols = count(lit(1)).as("cnt") +:
-            sum(ArrayOps.dotLong(col("qv"), col("qv"))).cast("long").as("ssq") +:
-            dims.map(i => sum(expr(s"element_at(qv, $i)")).as(s"s$i"))
-          v.groupBy("label").agg(aggCols.head, aggCols.tail: _*)
-            .select(col("label"), col("cnt"), col("ssq"),
-              (col("cnt") * col("ssq") -
-                expr(dims.map(i => s"s$i * s$i").mkString(" + ")))
-                .cast("long").as("within_num"),
-              expr(dims.map(i => s"s$i").mkString("array(", ", ", ")")).as("sv"))
-            .persist()
-        })
+      val u = graft.Caches.frame(s, d, "label-scatter-u") {
+        val v = quantizedVecs(s, d)
+          .join(Tables.embeddings(s, d).select("vec_id", "label"),
+            Seq("vec_id"))
+        val aggCols = count(lit(1)).as("cnt") +:
+          sum(ArrayOps.dotLong(col("qv"), col("qv"))).cast("long").as("ssq") +:
+          dims.map(i => sum(expr(s"element_at(qv, $i)")).as(s"s$i"))
+        v.groupBy("label").agg(aggCols.head, aggCols.tail: _*)
+          .select(col("label"), col("cnt"), col("ssq"),
+            (col("cnt") * col("ssq") -
+              expr(dims.map(i => s"s$i * s$i").mkString(" + ")))
+              .cast("long").as("within_num"),
+            expr(dims.map(i => s"s$i").mkString("array(", ", ", ")")).as("sv"))
+      }
       val cent = u.select(col("label"), col("sv"), col("cnt"))
         .withColumn("cv", expr("transform(sv, x -> cast(x AS double) / cnt)"))
       val p = cent.select(col("label"), col("cv"))

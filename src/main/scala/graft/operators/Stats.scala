@@ -303,9 +303,8 @@ object Stats {
     * lineitem pass for identical numbers.
     */
   private def heatModelBetas(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"heat-betas:$d:${graft.Caches.fingerprint(s, d)}",
-      heatBetas(heatStats(heatProxyFrame(s, d))).persist())
+    graft.Caches.frame(s, d, "heat-betas")(
+      heatBetas(heatStats(heatProxyFrame(s, d))))
 
   /** Per-run heat attribution (heat_adjustment.py:99-115): heat_cost =
     * β_heat · hinge, neutral = raw − heat_cost. The 1-row betas side is

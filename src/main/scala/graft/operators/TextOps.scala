@@ -144,17 +144,15 @@ object TextOps {
     * reference.
     */
   private def tokenized(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"rep-toks:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "rep-toks")(
+      // text/lang/n_chars deliberately dropped before caching: the
+      // four consumers (repetition, vocab, OOV, KL) need only
+      // (doc_id, source, toks), and text is the corpus's widest column —
+      // caching it here would double the frame's memory for nothing
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           expr(tokensSpark("text")).as("toks"))
-        .repartition(col("doc_id"))
-        .persist())
-        // text/lang/n_chars deliberately dropped before the persist: the
-        // four consumers (repetition, vocab, OOV, KL) need only
-        // (doc_id, source, toks), and text is the corpus's widest column —
-        // caching it here would double the frame's memory for nothing
+        .repartition(col("doc_id")))
 
   /** (source, tok, c) token counts per source — vocab-bounded (≤ |sources|
     * × |vocab| rows), memoized + persisted: the KL drift report and the
@@ -162,12 +160,10 @@ object TextOps {
     * the exploded token stream, which is the row-bounded half of both.
     */
   private def sourceTokenCounts(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"src-tok-counts:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "src-tok-counts")(
       tokenized(s, d)
         .select(col("source"), explode(col("toks")).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("source", "tok").agg(count(lit(1)).as("c")))
 
   /** Exploded positional bigrams (doc_id, pos, w1, w2), persisted per dir:
     * THREE plan branches consume them in each LM query (counts c and u,
@@ -175,8 +171,7 @@ object TextOps {
     * tokenize+explode runs 3× (measured 2.3 s → 1.0 s at sf0.1).
     */
   private def bigrams(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"lm-bigrams:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "lm-bigrams")(
       Tables.documents(s, d)
         .withColumn("toks", expr(tokensSpark("text")))
         .repartition(col("doc_id"))
@@ -186,8 +181,7 @@ object TextOps {
             "i -> struct(i AS pos, element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
           .as("bg"))
         .select(col("doc_id"), col("bg.pos").as("pos"),
-          col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .persist())
+          col("bg.w1").as("w1"), col("bg.w2").as("w2")))
 
   /** DuckDB CTE chain ending in `b(doc_id, pos, w1, w2)` — oracle twin of
     * [[bigrams]].
@@ -217,19 +211,17 @@ object TextOps {
     // left join folded onto it ONCE (with the unigram counts + vocab row),
     // and each serve pays a single broadcast build from one cached frame
     // instead of re-running the orderBy-limit cut + two joins per run
-    val model = graft.Caches.getOrElseUpdate(
-      s"lm-topk-model:$d:${graft.Caches.fingerprint(s, d)}:$k", {
-        val c = lmModelC(s, d)
-        val topk = c.orderBy(desc("n2"), asc("w1"), asc("w2")).limit(k)
-          .select(col("w1"), col("w2"), lit(1).as("kept"))
-        c.join(lmModelU(s, d), Seq("w1"))
-          .join(topk, Seq("w1", "w2"), "left_outer")
-          .crossJoin(lmModelU(s, d).agg(count(lit(1)).as("vocab")))
-          .select(col("w1"), col("w2"),
-            when(col("kept").isNotNull, col("n2")).as("n2k"),
-            col("n1"), col("vocab"))
-          .persist()
-      })
+    val model = graft.Caches.frame(s, d, s"lm-topk-model:$k") {
+      val c = lmModelC(s, d)
+      val topk = c.orderBy(desc("n2"), asc("w1"), asc("w2")).limit(k)
+        .select(col("w1"), col("w2"), lit(1).as("kept"))
+      c.join(lmModelU(s, d), Seq("w1"))
+        .join(topk, Seq("w1", "w2"), "left_outer")
+        .crossJoin(lmModelU(s, d).agg(count(lit(1)).as("vocab")))
+        .select(col("w1"), col("w2"),
+          when(col("kept").isNotNull, col("n2")).as("n2k"),
+          col("n1"), col("vocab"))
+    }
     b.join(broadcast(model), Seq("w1", "w2"))
       .select(col("doc_id"), col("pos"),
         expr("ln((coalesce(n2k, 0L) + 1.0) / (n1 + vocab))").as("logp"),
@@ -261,14 +253,12 @@ object TextOps {
     * broadcast-able on the serve side.
     */
   private def lmModelC(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"lm-model-c:$d:${graft.Caches.fingerprint(s, d)}",
-      bigrams(s, d).groupBy("w1", "w2").agg(count(lit(1)).as("n2")).persist())
+    graft.Caches.frame(s, d, "lm-model-c")(
+      bigrams(s, d).groupBy("w1", "w2").agg(count(lit(1)).as("n2")))
 
   private def lmModelU(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"lm-model-u:$d:${graft.Caches.fingerprint(s, d)}",
-      bigrams(s, d).groupBy("w1").agg(count(lit(1)).as("n1")).persist())
+    graft.Caches.frame(s, d, "lm-model-u")(
+      bigrams(s, d).groupBy("w1").agg(count(lit(1)).as("n1")))
 
   /** Target-slice ('src0') model tables for DSIR — trained once and
     * persisted with the same discipline as the corpus tables they ratio
@@ -278,16 +268,14 @@ object TextOps {
     * query at sf0.1. Both tables are target-vocab-bounded → broadcast.
     */
   private def dsirTargetC(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"dsir-target-c:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "dsir-target-c")(
       dsirTargetBigrams(s, d)
-        .groupBy("w1", "w2").agg(count(lit(1)).as("t2")).persist())
+        .groupBy("w1", "w2").agg(count(lit(1)).as("t2")))
 
   private def dsirTargetU(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"dsir-target-u:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "dsir-target-u")(
       dsirTargetBigrams(s, d)
-        .groupBy("w1").agg(count(lit(1)).as("t1")).persist())
+        .groupBy("w1").agg(count(lit(1)).as("t1")))
 
   private def dsirTargetBigrams(s: SparkSession, d: String): DataFrame =
     bigrams(s, d).join(
@@ -303,14 +291,12 @@ object TextOps {
     * one cached |V|²-bounded frame per serve.
     */
   private def dsirModel(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"dsir-model:$d:${graft.Caches.fingerprint(s, d)}",
+    graft.Caches.frame(s, d, "dsir-model")(
       lmModelC(s, d)
         .join(lmModelU(s, d), Seq("w1"))
         .join(dsirTargetC(s, d), Seq("w1", "w2"), "left_outer")
         .join(dsirTargetU(s, d), Seq("w1"), "left_outer")
-        .crossJoin(lmModelU(s, d).agg(count(lit(1)).as("vocab")))
-        .persist())
+        .crossJoin(lmModelU(s, d).agg(count(lit(1)).as("vocab"))))
 
   /** Full-model bigram LM scores (doc_id, n_bigrams, avg_logp) — the
     * q_text_lm_score result frame, factored out so the curriculum
@@ -322,10 +308,7 @@ object TextOps {
     * without the persist those would each re-run the model serve.
     */
   private def lmScores(s: SparkSession, d: String): DataFrame =
-    graft.Caches.getOrElseUpdate(
-      s"lm-scores:$d:${graft.Caches.fingerprint(s, d)}",
-      lmScoresUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.Caches.frame(s, d, "lm-scores")(lmScoresUncached(s, d))
 
   private def lmScoresUncached(s: SparkSession, d: String): DataFrame = {
     val b = bigrams(s, d)
@@ -523,12 +506,10 @@ object TextOps {
       // once partitions outgrow the boundary sample, silently corrupting
       // the prefix-sum ranks. The persist pins ONE shuffle output that
       // both jobs observe. (Same fix as q_budget_select's offsets frame.)
-      val parts = graft.Caches.getOrElseUpdate(
-        s"curriculum-parts:$d:${graft.Caches.fingerprint(s, d)}",
+      val parts = graft.Caches.frame(s, d, "curriculum-parts")(
         lmScores(s, d)
           .repartitionByRange(8, desc("avg_logp"), asc("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .withColumn("pid", spark_partition_id()))
       // per-partition counts: ≤ #partitions rows — the licensed tiny
       // driver collect (same pattern as q_budget_select's offsets)
       val counts = parts.groupBy("pid").agg(count(lit(1)).as("pc"))

@@ -334,7 +334,7 @@ class IngestPlanSpec extends SparkSpec {
   }
 
   test("performance_trends agrees with the joined per-activity aggregates") {
-    val rows = assertAgrees(SilverTables.performanceTrends(spark, splits),
+    val rows = assertAgrees(SilverTables.performanceTrends(splits),
       joinedPerformanceTrends(splits), "activity_id")
     assert(rows.length === bronze.length)
     val byId = rows.map(r => r.getAs[Long]("activity_id") - Base -> r).toMap
@@ -359,7 +359,7 @@ class IngestPlanSpec extends SparkSpec {
   }
 
   test("estimated intensity agrees with the joined estimate, column order kept") {
-    val rows = assertAgrees(SplitsEnrich.withEstimatedIntensity(spark, splits),
+    val rows = assertAgrees(SplitsEnrich.withEstimatedIntensity(splits),
       joinedEstimatedIntensity(splits), "activity_id", "split_index")
     def labels(k: Long) = rows.filter(_.getAs[Long]("activity_id") == Base + k)
       .map(r => Option(r.getAs[String]("intensity_type")))
@@ -369,16 +369,16 @@ class IngestPlanSpec extends SparkSpec {
     assert(labels(8L) === Seq(Some("ACTIVE"), None, Some("INTERVAL"), None,
       Some("RECOVERY")))
     val bronzeSplits = GarminJson.readSplits(spark, bronzeRoot)
-    assert(SplitsEnrich.withEstimatedIntensity(spark, bronzeSplits).columns.toSeq ===
+    assert(SplitsEnrich.withEstimatedIntensity(bronzeSplits).columns.toSeq ===
       joinedEstimatedIntensity(bronzeSplits).columns.toSeq)
   }
 
   test("each derivation runs at most 2 jobs and 1 shuffle exchange") {
     val derivations: Seq[(String, () => DataFrame)] = Seq(
-      ("performanceTrends", () => SilverTables.performanceTrends(spark, splits)),
+      ("performanceTrends", () => SilverTables.performanceTrends(splits)),
       ("formEfficiency", () => SilverTables.formEfficiency(splits)),
       ("withEstimatedIntensity",
-        () => SplitsEnrich.withEstimatedIntensity(spark, splits)))
+        () => SplitsEnrich.withEstimatedIntensity(splits)))
     derivations.foreach(_._2().collect()) // warm
     derivations.foreach { case (name, mk) =>
       val df = mk()

@@ -122,7 +122,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("end-to-end enrich: zones, ratings, terrain, environment") {
-    val enriched = SplitsEnrich.enrich(spark,
+    val enriched = SplitsEnrich.enrich(
       GarminJson.readSplits(spark, root),
       GarminJson.readHrZones(spark, root),
       GarminJson.readWeather(spark, root),

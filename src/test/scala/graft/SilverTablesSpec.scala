@@ -25,7 +25,7 @@ class SilverTablesSpec extends SparkSpec {
         col("pace_seconds_per_km") * col("distance") / 1000.0)
       .withColumn("cadence", lit(170.0))
       .withColumn("power", lit(null).cast("double"))
-    val pt = SilverTables.performanceTrends(spark, splits)
+    val pt = SilverTables.performanceTrends(splits)
       .collect().map(r => r.getAs[Long]("activity_id") -> r).toMap
     assert(pt(1L).getAs[String]("workout_structure") === "interval")
     assert(pt(2L).getAs[String]("workout_structure") === "steady")
@@ -33,7 +33,7 @@ class SilverTablesSpec extends SparkSpec {
     assert(pt(1L).getAs[Double]("hr_drift_percentage") > 0)
     // schema conformance: exact silver contract
     // nullability is data-dependent; the contract is names + types
-    assert(SilverTables.performanceTrends(spark, splits).schema
+    assert(SilverTables.performanceTrends(splits).schema
       .map(f => (f.name, f.dataType))
       === Schemas.performanceTrends.map(f => (f.name, f.dataType)))
     // robust CV excludes the fragment, full CV includes it
@@ -137,7 +137,7 @@ class SilverTablesSpec extends SparkSpec {
       .withColumn("duration_seconds",
         col("pace_seconds_per_km") * col("distance") / 1000.0)
       .withColumn("power", lit(null).cast("double"))
-    val r = SilverTables.performanceTrends(spark, splits).head()
+    val r = SilverTables.performanceTrends(splits).head()
     assert(r.getAs[String]("warmup_splits") === "1")
     assert(r.getAs[String]("run_splits") === "2,3,4")
     assert(r.getAs[String]("cooldown_splits") === "5")
@@ -174,7 +174,7 @@ class SilverTablesSpec extends SparkSpec {
       .withColumn("duration_seconds", lit(300.0))
       .withColumn("cadence", lit(null).cast("double"))
       .withColumn("power", lit(null).cast("double"))
-    val pt = SilverTables.performanceTrends(spark, splits)
+    val pt = SilverTables.performanceTrends(splits)
       .collect().map(r => r.getAs[Long]("activity_id") -> r).toMap
     // fallback: CV over (300, 420)
     val mean = 360.0
