@@ -225,8 +225,8 @@ object Bench {
         obj(okResults.map { case (k, r) => k -> v(r) })
       // cache_warm: per-shared-frame scan seconds measured at the cache
       // barrier (post-build, pre-timing) — near-zero values are the proof
-      // the timed passes never paid a shared build. Keys are truncated to
-      // the logical name (the slot's :dir suffix is session noise).
+      // the timed passes never paid a shared build. Every slot is
+      // `name:dir` over the one data dir of the run, so the key is `name`.
       val cacheQs = obj(cacheWarm.map { case (k, v) =>
         k.takeWhile(_ != ':') -> f3(v) })
       // cache_bytes: each shared frame's materialized storage footprint

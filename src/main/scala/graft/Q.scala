@@ -13,28 +13,24 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
-  /** Prepared-statement reuse (r16, guide §1.2 "per-task work" applied to
-    * the DRIVER): a query's ANALYZED PLAN for a given (session, dir,
-    * content fingerprint, analysis conf) is a deterministic value, but
-    * re-building it per execution re-runs constructor Scala + full Catalyst
-    * ANALYSIS — measured 9.2 s across one pass of the 165-query suite
-    * (ANN/minhash family worst at 0.1-0.34 s each), paid again by every
-    * bench pass. Only the analyzed LogicalPlan is memoized; every call
-    * wraps it in a fresh Dataset (fresh QueryExecution), so optimization,
-    * physical planning, AQE and the full execution from parquet re-run per
-    * invocation under the caller's current conf — memoizing the Dataset
-    * itself froze executedPlan at first forcing and made plan audits
-    * order/conf-dependent (r16 ADVICE, fixed r17). Analysis itself bakes
-    * some conf into the plan (the session time zone is stamped into every
-    * time-zone-aware expression; ANSI mode and case sensitivity shape
-    * resolution and casts), so those keys are part of the plan's version:
-    * a change to one re-analyzes. Other conf read only during analysis is
-    * still frozen at first build. No data, plan statistics or results are
-    * reused; rewritten inputs re-analyze via the fingerprint in the version
-    * (same staleness contract as [[Caches]]). The slot is
-    * `q:<name>:<sessionUUID>:<dir>` and keeps only the latest version; it
-    * uses sessionUUID (unique per session — identityHashCode could collide
-    * after GC and serve a frame bound to a stopped context).
+  /** Prepared-statement reuse (guide §1.2 "per-task work" applied to the
+    * DRIVER): a query's ANALYZED PLAN for a given (session, dir, dir
+    * stamp, analysis conf) is a deterministic value, but re-building it
+    * per execution re-runs constructor Scala + full Catalyst ANALYSIS —
+    * measured 9.2 s across one pass of the 165-query suite (ANN/minhash
+    * family worst at 0.1-0.34 s each), paid again by every bench pass.
+    * Only the analyzed LogicalPlan is memoized ([[Caches.preparedPlan]]);
+    * every call wraps it in a fresh Dataset (fresh QueryExecution), so
+    * optimization, physical planning, AQE and the full execution from
+    * parquet re-run per invocation under the caller's current conf.
+    * Analysis itself bakes some conf into the plan (the session time zone
+    * is stamped into every time-zone-aware expression; ANSI mode and case
+    * sensitivity shape resolution and casts), so those keys are part of
+    * the plan's version: a change to one re-analyzes. Other conf read only
+    * during analysis is still frozen at first build. No data, plan
+    * statistics or results are reused; a rewritten input dir re-analyzes
+    * through the dir's stamp, the version [[Caches]] gives every shared
+    * frame.
     */
   private val analysisConf = Seq("spark.sql.session.timeZone",
     "spark.sql.ansi.enabled", "spark.sql.caseSensitive")
@@ -42,9 +38,7 @@ object Q {
   private def memoized(name: String,
       fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, d) => org.apache.spark.sql.GraftBridge.ofRows(s, Caches.preparedPlan(
-      s"q:$name:${org.apache.spark.sql.GraftBridge.sessionUUID(s)}:$d",
-      s"${Caches.fingerprintCached(s, d)}:${analysisConf.map(s.conf.get).mkString(",")}")(
-      fn(s, d)))
+      s, d, name, analysisConf.map(s.conf.get).mkString(","))(fn(s, d)))
 
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =

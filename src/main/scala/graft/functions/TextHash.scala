@@ -46,9 +46,6 @@ object TextHash {
     s"CASE WHEN size($tok) < 3 THEN array() ELSE " +
       s"array_distinct(transform(sequence(1, size($tok)-2), " +
       s"i -> concat_ws(' ', element_at($tok,i), element_at($tok,i+1), element_at($tok,i+2)))) END"
-  def shinglesDuck(tok: String): String =
-    s"list_distinct(list_transform(generate_series(1, len($tok)-2), " +
-      s"i -> $tok[i] || ' ' || $tok[i+1] || ' ' || $tok[i+2]))"
 
   // ---- hash every element of a string-array column ----
   def hashArraySpark(arr: String): String =

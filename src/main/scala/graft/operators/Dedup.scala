@@ -192,15 +192,6 @@ object Dedup {
     ex0.join(broadcast(hot), Seq("hsh"), "left_anti")
   }
 
-  /** Exploded LSH band keys (doc_id, g, k) from a shingled frame: 16
-    * MinHash values folded into 4 bands of 4, one output row per (doc,
-    * band) — the bucketed layout every banded join in this module keys on.
-    */
-  def bandedKeys(base: DataFrame): DataFrame =
-    bandsFromSig(base.select(
-      col("doc_id") +:
-        minhashExprs.map { case (j, spark, _) => expr(spark).as(f"mh$j%02d") }: _*))
-
   /** Band explosion over a frame that ALREADY carries mh00..mh15 — lets
     * consumers of the memoized signature frame band without re-running
     * the 16 array folds. `carry` columns ride along unchanged (the

@@ -69,17 +69,24 @@ object Similarity {
     */
   private[graft] def quantizedVecs(s: SparkSession, d: String): DataFrame =
     graft.Caches.frame(s, d, "quantized-vecs")(
-      Tables.embeddings(s, d)
-        .repartition(col("vec_id"))
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x AS double))").as("v"))
-        .withColumn("_amax", expr("array_max(transform(v, x -> abs(x)))"))
-        .where(col("_amax") =!= 0.0)
-        .withColumn("qv",
-          expr("transform(v, x -> cast(round(x * (127.0 / _amax)) AS bigint))"))
+      quantizeInt8(Tables.embeddings(s, d).repartition(col("vec_id")))
         .withColumn("qn",
-          sqrt(ArrayOps.dotLong(col("qv"), col("qv")).cast("double")))
-        .select("vec_id", "qv", "qn"))
+          sqrt(ArrayOps.dotLong(col("qv"), col("qv")).cast("double"))))
+
+  /** Symmetric int8 quantization of a (vec_id, embedding) frame to
+    * (vec_id, qv): each component scaled by 127 / max |x| and rounded.
+    * Zero vectors are unindexable and dropped. The batch corpus
+    * ([[quantizedVecs]]) and the streaming encoders share it, so a
+    * streamed vector quantizes bit-identically to its batch row.
+    */
+  private[graft] def quantizeInt8(vecs: DataFrame): DataFrame = vecs
+    .select(col("vec_id"),
+      expr("transform(embedding, x -> cast(x AS double))").as("v"))
+    .withColumn("_amax", expr("array_max(transform(v, x -> abs(x)))"))
+    .where(col("_amax") =!= 0.0)
+    .select(col("vec_id"),
+      expr("transform(v, x -> cast(round(x * (127.0 / _amax)) AS bigint))")
+        .as("qv"))
 
   // ------------------------------------------------- product quantization
 

@@ -475,33 +475,6 @@ object Streams {
     * its bands verdicts dup (the consumer's 1-line rollup — kept
     * per-band here so the collision evidence stays inspectable).
     */
-  /** Streaming IVF-PQ index MAINTENANCE: new vectors stream through the
-    * TRAINED serve path — coarse-cell assignment (argmin over the K
-    * trained centroids) and PQ encoding (per-subspace argmin over the
-    * m×K codebook) — producing append-ready index rows
-    * `(vec_id, cid, codes BIGINT[8])` without retraining or touching the
-    * existing index. Both model artifacts arrive as driver-side values
-    * (K- and m·K-bounded — the broadcast-model discipline) and are
-    * compiled INTO the expressions, so the whole operator is stateless
-    * map-side work: no shuffle, no state store, append mode, and the
-    * arithmetic is the SAME ArrayOps folds the batch encoder runs —
-    * `min(struct(dist, id))` becomes `array_min` over literal-candidate
-    * structs with identical (dist, id) tie-breaks, so a streamed vector
-    * gets bit-identically the row a full batch rebuild would give it
-    * (the parity invariant IvfPqStreamSpec pins).
-    */
-  /** Symmetric int8 quantization of an `embedding` column — the exact
-    * quantizedVecs expressions (zero vectors are unindexable there and
-    * are filtered here too). Shared by the two streaming encoders.
-    */
-  private def quantizeArrivals(vecs: DataFrame): DataFrame = vecs
-    .select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    .withColumn("_amax", expr("array_max(transform(v, x -> abs(x)))"))
-    .where(col("_amax") =!= 0.0)
-    .withColumn("qv",
-      expr("transform(v, x -> cast(round(x * (127.0 / _amax)) AS bigint))"))
-
   /** Coarse-cell argmin over the broadcast-shape trained centroids as a
     * column over `qv`: `min(struct(dist, cid))` becomes `array_min` over
     * literal-candidate structs with identical (dist, cid) tie-breaks, so
@@ -521,13 +494,28 @@ object Streams {
     array_min(array(cands: _*)).getField("cid")
   }
 
+  /** Streaming IVF-PQ index MAINTENANCE: new vectors stream through the
+    * TRAINED serve path — coarse-cell assignment (argmin over the K
+    * trained centroids) and PQ encoding (per-subspace argmin over the
+    * m×K codebook) — producing append-ready index rows
+    * `(vec_id, cid, codes BIGINT[8])` without retraining or touching the
+    * existing index. Both model artifacts arrive as driver-side values
+    * (K- and m·K-bounded — the broadcast-model discipline) and are
+    * compiled INTO the expressions, so the whole operator is stateless
+    * map-side work: no shuffle, no state store, append mode, and the
+    * arithmetic is the SAME ArrayOps folds the batch encoder runs —
+    * `min(struct(dist, id))` becomes `array_min` over literal-candidate
+    * structs with identical (dist, id) tie-breaks, so a streamed vector
+    * gets bit-identically the row a full batch rebuild would give it
+    * (the parity invariant IvfPqStreamSpec pins).
+    */
   def ivfPqEncodeStream(vecs: DataFrame,
       centroids: Seq[(Long, Seq[Double])],
       codebook: Seq[(Int, Long, Seq[Long])]): DataFrame = {
     import graft.functions.ArrayOps
     require(centroids.nonEmpty && codebook.nonEmpty,
       "ivfPqEncodeStream: empty model — train the quantizer/codebook first")
-    val q = quantizeArrivals(vecs)
+    val q = graft.operators.Similarity.quantizeInt8(vecs)
     val cell = cellCol(centroids)
     val codeCols = (0 until 8).map { j =>
       val sv = expr(
@@ -613,7 +601,7 @@ object Streams {
     val oooAcc = vecs.sparkSession.sparkContext
       .longAccumulator("graft.semDedupStream.outOfOrderArrivals")
     semDedupOutOfOrder = Some(oooAcc)
-    quantizeArrivals(vecs)
+    graft.operators.Similarity.quantizeInt8(vecs)
       .select(col("vec_id"), cellCol(centroids).as("cid"), col("qv"))
       .as[SemArrival]
       .groupByKey(_.cid)

@@ -91,6 +91,20 @@ class AggregatesSpec extends SparkSpec {
     assert(row.getAs[Double]("avg_v") === 42.0)
   }
 
+  test("profile over a path that Spark overwrites returns the new median") {
+    val path = java.nio.file.Files.createTempDirectory("graft-profile")
+      .resolve("t.parquet").toString
+    def profiled(): org.apache.spark.sql.Row =
+      Aggregates.profile(spark.read.parquet(path), Seq("x")).head()
+    Seq(1.0, 2.0, 3.0).toDF("x").write.parquet(path)
+    assert(profiled().getAs[Double]("median_v") === 2.0)
+    Seq(10.0, 20.0, 30.0).toDF("x").write.mode("overwrite").parquet(path)
+    val r = profiled()
+    assert(r.getAs[Double]("avg_v") === 20.0)
+    assert(r.getAs[Double]("max_v") === 30.0)
+    assert(r.getAs[Double]("median_v") === 20.0)
+  }
+
   test("statsBlock medians agree with Spark's exact median aggregate") {
     val df = Tables.lineitem(spark, sfDir)
     val got = Aggregates.statsBlock(df, Seq("l_returnflag"),

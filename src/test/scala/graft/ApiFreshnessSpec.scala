@@ -46,6 +46,21 @@ class ApiFreshnessSpec extends SparkSpec {
     assert(g.table("splits").select("activity_id").distinct().count() === 3L)
   }
 
+  test("repeated statistics_only reads leave the shared-frame registry as it was") {
+    val root = newRoot()
+    SilverWriter.upsertByPartition(splitRows(Seq(1L, 2L, 3L), 140.0),
+      s"$root/splits")
+    val g = new Graft(spark, root)
+    val before = Caches.levels()
+    for (_ <- 1 to 2; id <- Seq(1L, 2L, 3L)) {
+      assert(g.splits.paceHr(id, statisticsOnly = true)
+        .head().getAs[Double]("median_heart_rate") === 142.0)
+      assert(g.splits.formMetrics(id, statisticsOnly = true)
+        .head().getAs[Long]("n_rows") === 3L)
+    }
+    assert(Caches.levels() === before)
+  }
+
   test("profile: a missing table, then its first write, then an overwrite") {
     val g = new Graft(spark, newRoot())
     val s = spark

@@ -47,6 +47,10 @@ class CachesSpec extends SparkSpec {
       assert(memoryOnly.isEmpty,
         s"frames that would be DROPPED (not spilled) under pressure: " +
           memoryOnly.mkString("; "))
+      // one key form: every slot is `<name>:<data dir>`
+      val offForm = levels.map(_._1).filterNot(k =>
+        k.endsWith(s":$sfDir") && k.length > sfDir.length + 1)
+      assert(offForm.isEmpty, s"slots not keyed <name>:$sfDir: $offForm")
     } finally Caches.clear()
   }
 

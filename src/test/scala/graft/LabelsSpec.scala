@@ -92,6 +92,38 @@ class LabelsSpec extends SparkSpec {
     assert(flags(None, None, None) === ((false, false, false)))
   }
 
+  test("trendHeadline: last-two delta gated on n >= 2, build streak, signal flags per key") {
+    // loads per key, listed out of week order; the expected values are the
+    // component cases above: periodDeltaPct 110 vs 100 -> 10.0 and 95 vs
+    // 100 -> -5.0 (a zero prior -> null), buildWeeks' strict-increase
+    // streak, and the fusion-flag combinations
+    val weekly = Seq(
+      ("a", 2, 110.0), ("a", 0, 90.0), ("a", 1, 100.0),
+      ("b", 1, 100.0), ("b", 2, 95.0), ("b", 0, 50.0),
+      ("c", 0, 100.0),
+      ("d", 1, 10.0), ("d", 0, 0.0))
+      .toDF("k", "w", "load")
+    val signals = Seq[(String, Option[String], Option[String], Option[Double])](
+      ("a", Some("caution"), Some("under_recovery"), None),
+      ("b", Some("high_risk"), None, Some(-2.0)),
+      ("d", None, Some("under_recovery"), Some(-3.5)),
+      ("z", Some("caution"), Some("under_recovery"), Some(-5.0)))
+      .toDF("k", "acwr_status", "hrv_state", "form_delta_pct")
+    val got = Labels.trendHeadline(weekly, signals, "k", "w", "load")
+      .select("k", "load_delta_pct", "build_weeks", "fusion_flags.*")
+      .collect().map { r =>
+        (r.getString(0),
+          if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+          r.getInt(2), (r.getBoolean(3), r.getBoolean(4), r.getBoolean(5)))
+      }.sortBy(_._1).toSeq
+    assert(got === Seq(
+      ("a", Some(10.0), 3, (true, false, false)),
+      ("b", Some(-5.0), 1, (false, true, false)),
+      // one week: no delta; no signals row: every flag false
+      ("c", None, 1, (false, false, false)),
+      ("d", None, 2, (false, false, true))))
+  }
+
   test("phase evaluations pin the reference strings") {
     val df = Seq((1L)).toDF("id")
     def one(c: org.apache.spark.sql.Column): String = df.select(c).head().getString(0)

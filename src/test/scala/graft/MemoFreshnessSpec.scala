@@ -2,26 +2,47 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Freshness of the driver-side memos: the fingerprint behind Q's plan
-  * memo follows a write one level below the data dir, a Q built under one
-  * session time zone re-analyzes under the next, and a rewritten data dir
-  * replaces a Q's plan instead of adding one.
+/** Freshness of the driver-side memos: a shared frame and a Q's plan
+  * memo, both versioned by the data dir's stamp, follow a write one level
+  * below the data dir; a Q built under one session time zone re-analyzes
+  * under the next; and a rewritten data dir replaces a Q's plan instead of
+  * adding one.
   */
 class MemoFreshnessSpec extends SparkSpec {
 
-  test("fingerprintCached re-lists after an append inside a table directory") {
+  test("a shared frame and a Q follow an append inside a table directory") {
     val s = spark
     import s.implicits._
-    val d = Files.createTempDirectory("graft-memo-fp").toString
-    Seq(1, 2, 3).toDF("x").write.parquet(s"$d/t.parquet")
-    val before = Caches.fingerprintCached(spark, d)
-    assert(Caches.fingerprintCached(spark, d) === before)
-    Seq(4).toDF("x").write.mode("append").parquet(s"$d/t.parquet")
-    val after = Caches.fingerprintCached(spark, d)
-    assert(after !== before)
-    assert(after === Caches.fingerprint(spark, d))
+    val d = Files.createTempDirectory("graft-memo-append").toString
+    val table = s"$d/t.parquet"
+    def shared =
+      Caches.frame(spark, d, "test-append")(spark.read.parquet(table))
+    val q = Q.noOracle("q_test_memo_append") { (s, d) =>
+      s.read.parquet(s"$d/t.parquet")
+    }
+    def rows(df: DataFrame): Seq[Int] = df.as[Int].collect().sorted.toSeq
+    def plan = Caches.preparedPlans.collect {
+      case (k, (_, p)) if k.startsWith("q:q_test_memo_append:") => p }.toSeq
+    try {
+      Seq(1, 2, 3).toDF("x").write.parquet(table)
+      val before = shared
+      assert(rows(q.fn(spark, d)) === Seq(1, 2, 3))
+      val analyzed = plan
+      // an unchanged dir keeps its version: the same frame, the same plan
+      assert(shared eq before)
+      assert(rows(q.fn(spark, d)) === Seq(1, 2, 3))
+      assert(analyzed.size === 1 && (plan.head eq analyzed.head))
+      Seq(4).toDF("x").write.mode("append").parquet(table)
+      val after = shared
+      assert(after ne before)
+      assert(rows(after) === rows(spark.read.parquet(table)))
+      assert(rows(after) === Seq(1, 2, 3, 4))
+      assert(rows(q.fn(spark, d)) === Seq(1, 2, 3, 4))
+      assert(plan.size === 1 && !(plan.head eq analyzed.head))
+    } finally Caches.clear()
   }
 
   test("a Q re-analyzes when the session time zone changes") {

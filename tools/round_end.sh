@@ -26,6 +26,10 @@ for cpus in 4 32; do
   # equality of decimals cannot prove driver-hash equality (r11 q_ivf_train).
   GRAFT_ORACLE_STRICT=1 python3 tools/check_oracle.py /root/testdata/sf0.01 "$out"
 done
+# The oracle's 1e-6 tolerance cannot see a last-bit difference between the
+# two core counts: compare the two dumps row for row, in order, exactly.
+python3 tools/compare_dumps.py "${OUT:-/tmp/verify_round_end}_c4" \
+  "${OUT:-/tmp/verify_round_end}_c32"
 
 echo "== 3/5 contract bench at sf0.1 (refreshes the committed BENCH_FULL.json)"
 # Refreshing the committed artifact is an EXPLICIT act: Bench's default
