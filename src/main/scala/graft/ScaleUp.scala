@@ -187,16 +187,14 @@ object ScaleUp {
         }
       }.reduce(_ unionAll _)
       // Events is the stream table, and a 100 TB stream table IS
-      // date-partitioned — so the replicas are too, BY DEFAULT: every
-      // date-range query at every scale rung exercises partition pruning
+      // date-partitioned — so the replicas are too: every date-range
+      // query at every scale rung exercises partition pruning
       // (PlanAuditSpec pins the pruning and the flat-layout parity).
       // Tables presents the identical flat schema either way, and
       // eventsInRange derives the PartitionFilters. One repartition(date)
       // shuffle for this table only — one file per day dir, tight ts
-      // row-group stats via the within-partition sort. SCALEUP_FLAT_EVENTS
-      // =1 keeps the old flat layout (layout A/B runs).
-      if (t == "events" &&
-          !sys.env.get("SCALEUP_FLAT_EVENTS").exists(_ == "1")) {
+      // row-group stats via the within-partition sort.
+      if (t == "events") {
         replicated
           .withColumn(Tables.EventsPartCol, to_date(col("ts")))
           .repartition(col(Tables.EventsPartCol))

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Plans.{onePartition, sortedInOne}
 import graft.domain._
 import graft.ingest.SilverWriter
 import graft.operators.Aggregates
@@ -39,13 +40,13 @@ import scala.collection.concurrent.TrieMap
   * inputs are bounded by one athlete (the `activities` table, one row per
   * run) or by one activity (that activity's `splits` or
   * `time_series_metrics` partition). At that size the fixed cost of a job
-  * and an exchange outweighs any parallelism, so [[onePartition]] reads
-  * such an input in a single partition: the aggregate, window, join or
-  * sort above it then needs no exchange and the call runs as one task per
-  * stage, usually in one job. `timeSeries.formAnomalySummary` (every
-  * activity's samples at once) and the `events` and `pipeline` tiers
-  * (corpus-sized inputs, the registered queries' own plans) do not take
-  * this path.
+  * and an exchange outweighs any parallelism, so
+  * [[graft.Plans.onePartition]] reads such an input in a single partition:
+  * the aggregate, window, join or sort above it then needs no exchange and
+  * the call runs as one task per stage, usually in one job.
+  * `timeSeries.formAnomalySummary` (every activity's samples at once) and
+  * the `events` and `pipeline` tiers (corpus-sized inputs, the registered
+  * queries' own plans) do not take this path.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
@@ -72,15 +73,6 @@ final class Graft(val spark: SparkSession, root: String) {
       }
     }
   }
-
-  /** An athlete-sized input in a single partition (see "Plan shape"). */
-  private def onePartition(df: DataFrame): DataFrame = df.coalesce(1)
-
-  /** `df` in one partition sorted by `cols`: a total order with no range
-    * exchange.
-    */
-  private def sortedInOne(df: DataFrame, cols: String*): DataFrame =
-    onePartition(df).sortWithinPartitions(cols.map(col): _*)
 
   /** Collects `df` and sorts it on the driver by `key`, ascending with
     * nulls first as `orderBy` does: a read that collects every row anyway

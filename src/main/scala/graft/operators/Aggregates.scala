@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Plans, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,7 +32,7 @@ object Aggregates {
     * cumulative window), NOT Spark's exact `median` aggregate: `median` is a
     * typed-imperative aggregate that buffers every value per group on the
     * executors, which neither scales nor amortizes (measured 1.4 s at sf0.1
-    * vs DuckDB 0.06 s, VERDICT r1). The remaining moments are a plain
+    * vs DuckDB 0.06 s). The remaining moments are a plain
     * partial+final hash aggregate over the raw rows.
     */
   def statsBlock(df: DataFrame, groupCols: Seq[String], metrics: Seq[String]): DataFrame =
@@ -159,14 +159,11 @@ object Aggregates {
     */
   def conditionalHalves(df: DataFrame, partCol: String, tsCol: String,
       valueCol: String): DataFrame = {
-    // Per-key bounds as a window over the SAME clustering the conditional
-    // aggregate needs (r17, guide §2.4): the former per-key bounds
-    // aggregate + broadcast join re-scanned the input and broadcast a
-    // KEY-cardinality frame — at 100 TB a per-user bounds relation does
-    // not broadcast. One exchange on partCol now serves bounds, the
-    // halves aggregate and (when the caller pre-range-partitions) the
-    // final sort; mid = (min+max)/2.0 is the identical expression over
-    // identical rows.
+    // Per-key bounds as a window over the clustering the conditional
+    // aggregate needs, not a bounds aggregate + broadcast join: that
+    // re-scans the input and broadcasts a key-cardinality frame. One
+    // exchange on partCol serves bounds, halves aggregate and, under
+    // Plans.clusteredBy, the final sort.
     val secs = unix_timestamp(col(tsCol))
     val w = Window.partitionBy(col(partCol))
     df.withColumn("mid", (min(secs).over(w) + max(secs).over(w)) / 2.0)
@@ -217,12 +214,12 @@ object Aggregates {
   }
 
   /** Exact interpolated median of a (v, cnt) value histogram WITHOUT a
-    * global sort or a single-partition window (VERDICT r1 "What's wrong" #2:
-    * the distinct-value count of a continuous column grows ~linearly with
-    * data, so an unpartitioned cumulative window is a one-core sort at
-    * scale). This is the classic distributed selection: each round buckets
-    * the surviving candidate range into `buckets` equi-width cells with ONE
-    * hash aggregate over the histogram, walks the tiny per-cell summary on
+    * global sort or a single-partition window (the distinct-value count
+    * of a continuous column grows ~linearly with data, so an unpartitioned
+    * cumulative window is a one-core sort at scale). This is the classic
+    * distributed selection: each round buckets the surviving candidate
+    * range into `buckets` equi-width cells with ONE hash aggregate over
+    * the histogram, walks the tiny per-cell summary on
     * the driver to find the cell holding the target rank, and descends into
     * it; a cell with few distinct values is fetched and resolved exactly.
     * Rounds are O(log_buckets(distinct)): 583k distinct values resolve in
@@ -308,7 +305,7 @@ object Aggregates {
     * hash_match failure was FP summation-order noise, ~9e-14). Columns
     * without a scale use two-pass central moments (exact mean first, then
     * Σ(v−mean)²·cnt) — the numerically sound form; raw-moment
-    * Σv² − (Σv)²/n cancellation is what VERDICT r1 flagged.
+    * Σv² − (Σv)²/n cancels catastrophically.
     *
     * Medians use [[histogramMedian]] (distributed selection, no global
     * window); they enter the result as literals.
@@ -560,10 +557,9 @@ object Aggregates {
         |  CASE WHEN prev = 0 THEN NULL
         |       ELSE CAST(n_users AS DOUBLE) / prev END AS conversion
         |FROM st ORDER BY stage""".stripMargin) { (s, d) =>
-      // Single-pass funnel (r17, guide §1.2/§2.4): the CTE form scanned
-      // events four times (s1/s2/s3/tot — the optimizer's per-branch
-      // pruning defeats exchange reuse) and joined the stages back —
-      // measured 15 sequential jobs / 7 exchanges. The stage times are
+      // Single-pass funnel: the CTE form scans events four times
+      // (s1/s2/s3/tot — the optimizer's per-branch pruning defeats
+      // exchange reuse) and joins the stages back. The stage times are
       // per-user scalars over ONE clustering: t1 = min view-time, t2 =
       // min click-time after t1 (a null t1 nulls the comparison, so
       // non-s1 users get null t2 — exactly the inner join's semantics),
@@ -624,23 +620,20 @@ object Aggregates {
         |  CAST(g.n_users AS DOUBLE) / cs.cohort_size AS retention
         |FROM g JOIN cs USING (cohort)
         |ORDER BY cohort, week_offset""".stripMargin) { (s, d) =>
-      // Single-scan cohorts (r17, guide §1.2/§2.4): the two-aggregate +
-      // join form scanned events twice (f and a — per-branch pruning
-      // defeats exchange reuse) and re-shuffled a by user for the join.
+      // Single-scan cohorts: the two-aggregate + join form scans events
+      // twice (f and a — per-branch pruning defeats exchange reuse).
       // date_trunc('week', ·) is monotone, so trunc(min ts) = min(trunc
       // ts): the cohort is a per-user window min over the SAME distinct
       // (user, week) frame, and the user's cohort week is always in that
-      // frame, so cohort_size = count of week==cohort rows. One range
-      // exchange on user_id serves the dedup, the window and (via
-      // ReuseExchange) both aggregate branches — events is scanned once.
-      // Dedup FIRST so the map-side partial aggregate still shrinks the
-      // shuffle (guide §2.3); the narrow range exchange of the deduped
-      // pairs then feeds the cohort window and both branches.
+      // frame, so cohort_size = count of week==cohort rows. The range
+      // exchange also feeds (via ReuseExchange) both aggregate branches,
+      // so events is scanned once. Dedup first, so the map-side partial
+      // aggregate still shrinks the shuffle.
       val a = Tables.events(s, d)
         .select(col("user_id"),
           to_date(date_trunc("week", col("ts"))).as("week"))
         .dropDuplicates("user_id", "week")
-        .repartitionByRange(col("user_id"))
+        .transform(Plans.clusteredBy(_, "user_id"))
         .withColumn("cohort",
           min("week").over(Window.partitionBy("user_id")))
       val cs = a.where(col("week") === col("cohort"))
@@ -704,14 +697,11 @@ object Aggregates {
         |SELECT user_id, CAST(len(vs) AS BIGINT) AS n_events,
         |  round(list_reduce(vs, (a, x) -> a * 0.5 + x * 0.5), 6) AS ewma
         |FROM l ORDER BY user_id""".stripMargin) { (s, d) =>
-      // Range partition shared by the collect aggregate and the final
-      // sort (r17, guide §2.4): collect_list has no map-side reduction,
-      // so pre-range-partitioning loses nothing, and the ORDER BY
-      // user_id then needs no exchange — which also stops the range
-      // sampler re-running the per-user fold.
+      // collect_list has no map-side reduction, so clustering first
+      // loses nothing
       Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .repartitionByRange(col("user_id"))
+        .transform(Plans.clusteredBy(_, "user_id"))
         .groupBy("user_id")
         .agg(sort_array(collect_list(struct(
           unix_micros(col("ts")).as("us"), col("event_id"), col("value"))))
@@ -750,7 +740,7 @@ object Aggregates {
         |FROM days d JOIN dau ON d.day = dau.day
         |JOIN wau ON d.day = wau.day
         |ORDER BY d.day""".stripMargin) { (s, d) =>
-      // Single-scan DAU/WAU (r17, guide §2.4): `days` as a distinct over
+      // Single-scan DAU/WAU: `days` as a distinct over
       // ud collapsed (optimizer pruning) into a SEPARATE events scan, and
       // the days ⋈ dau join was an identity (dau's key set IS days — a
       // per-day aggregate over ud emits exactly ud's distinct days).
@@ -787,14 +777,14 @@ object Aggregates {
         |  CAST(sum(1 - is_new) AS BIGINT) AS n_returning,
         |  CAST(sum(is_new) AS DOUBLE) / count(*) AS new_share
         |FROM j GROUP BY 1 ORDER BY day""".stripMargin) { (s, d) =>
-      // Single-scan new/returning (r17): first_day is a per-user window
-      // min over the same distinct (user, day) frame the join rebuilt —
-      // one range exchange serves dedup + window, no second scan, no join
-      // (same equivalence argument as q_retention_cohorts).
+      // Single-scan new/returning: first_day is a per-user window min
+      // over the same distinct (user, day) frame the join rebuilt — no
+      // second scan, no join (same equivalence argument as
+      // q_retention_cohorts).
       Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("date").as("day"))
         .dropDuplicates("user_id", "day") // partial dedup before shuffle
-        .repartitionByRange(col("user_id"))
+        .transform(Plans.clusteredBy(_, "user_id"))
         .withColumn("first_day",
           min("day").over(Window.partitionBy("user_id")))
         .select(col("day"),
@@ -904,9 +894,7 @@ object Aggregates {
         |       THEN e.value END) - 1.0) * 100.0 AS decoupling_pct
         |FROM events e JOIN b USING (user_id)
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      // range partition on user_id: one exchange for bounds window +
-      // halves aggregate + final sort (see conditionalHalves)
-      conditionalHalves(Tables.events(s, d).repartitionByRange(col("user_id")),
+      conditionalHalves(Plans.clusteredBy(Tables.events(s, d), "user_id"),
         "user_id", "ts", "value")
         .orderBy("user_id")
     },
@@ -1008,7 +996,7 @@ object Aggregates {
     // outliers rather than a divide-by-zero. Shape: the two exact medians
     // run as WINDOW aggregates over the SAME user_id partitioning, so the
     // whole chain (median → abs-dev → MAD → flag-count) rides ONE
-    // Exchange + one sort — the r4 join formulation paid ~4 exchanges for
+    // Exchange + one sort, where a join formulation pays ~4 exchanges for
     // the two grouped medians plus their joins. The final groupBy's
     // (user_id, med, mad) clustering is satisfied by the window's
     // hash(user_id) partitioning, so no further shuffle; at 100 TB the
@@ -1060,7 +1048,7 @@ object Aggregates {
         .orderBy("l_returnflag")
     },
 
-    // Oracle parity design (VERDICT r1 "What's wrong" #1): both engines fold
+    // Oracle parity design: both engines fold
     // the SAME (value, count) histogram into EXACT integer sufficient
     // statistics (the columns carry 2 decimals, so round(v*100) is an exact
     // integer and int128 sums are order-independent), then apply the
@@ -1393,12 +1381,11 @@ object Aggregates {
         |FROM wk a LEFT JOIN wk b
         |  ON b.user_id = a.user_id AND b.week_idx = a.week_idx + 1
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      // (r17 A/B: a lead()-window rewrite over a range exchange on
-      // user_id regressed this query 0.385 -> 0.459 s — range-partitioning
-      // the RAW pairs forfeits the distinct's map-side partial dedup,
-      // which shrinks this shuffle ~10×. The self-join form keeps the
-      // partial dedup and its broadcast is planner-chosen, not forced, so
-      // at scale it degrades to a co-keyed sort-merge join. Left as-is.)
+      // A self-join, not a lead() window over a range exchange on user_id:
+      // range-partitioning the raw pairs forfeits the distinct's map-side
+      // partial dedup, which shrinks this shuffle ~10× (the window form
+      // measured slower). The broadcast is planner-chosen, so at scale it
+      // degrades to a co-keyed sort-merge join.
       val wk = Tables.events(s, d)
         .select(col("user_id"),
           expr("unix_timestamp(ts) div 604800").as("week_idx"))

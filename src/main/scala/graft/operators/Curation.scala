@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Plans, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -167,14 +167,9 @@ object Curation {
     // best documents — rank by lexical diversity (distinct-token count,
     // integer → exact cross-engine), take docs while the running token
     // total stays inside the budget. The running sum over a GLOBAL order
-    // is the classic single-partition-window trap; here it is a
-    // DISTRIBUTED PREFIX SUM: range-partition by the rank key (pid order
-    // = global rank order), per-partition token totals (one tiny
-    // #partitions-row aggregate) prefix-summed on the driver and
-    // broadcast back as offsets, then each partition's cumsum is a LOCAL
-    // window + its offset. No partition ever holds more than its share
-    // of rows — the same plan runs a 500-doc gate and a 100 TB corpus.
-    // (The oracle states the semantics directly as one ordered window.)
+    // is a distributed prefix sum (Plans.runningSum), so the same plan
+    // runs a 500-doc gate and a 100 TB corpus. (The oracle states the
+    // semantics directly as one ordered window.)
     Q("q_budget_select",
       s"""WITH t AS (SELECT doc_id,
          |    ${graft.functions.TextHash.tokensDuck("text")} AS toks
@@ -188,40 +183,15 @@ object Curation {
          |SELECT doc_id, diversity, n_tokens, cum_tokens
          |FROM c WHERE cum_tokens <= $TokenBudget
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val m = Tables.documents(s, d)
         .select(col("doc_id"),
           expr(graft.functions.TextHash.tokensSpark("text")).as("toks"))
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("n_tokens"),
           size(array_distinct(col("toks"))).cast("long").as("diversity"))
-      // pid order = global (diversity DESC, doc_id) order by construction.
-      // PERSISTED (lifecycle registry): the offsets collect and the final
-      // cumsum are two jobs, and repartitionByRange re-samples its range
-      // boundaries per execution — without this barrier the jobs can
-      // disagree on boundary-row placement once partitions outgrow the
-      // boundary sample, corrupting the prefix offsets. One materialized
-      // shuffle output serves both jobs. (Twin of q_curriculum's parts.)
-      val parts = graft.Caches.frame(s, d, "budget-parts")(
-        m.repartitionByRange(8, desc("diversity"), asc("doc_id"))
-          .withColumn("pid", spark_partition_id()))
-      // per-partition totals: ≤ #partitions rows — the licensed tiny
-      // driver collect (same pattern as the profiler bounds)
-      val sums = parts.groupBy("pid").agg(sum("n_tokens").as("psum"))
-        .orderBy("pid").collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[Long]("psum")))
-      val offsets = sums.scanLeft((0, 0L)) { case ((_, acc), (pid, ps)) =>
-        (pid, acc + ps)
-      }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }
-        .toSeq
-      val offDf = s.createDataFrame(offsets).toDF("pid", "offset")
-      val w = Window.partitionBy("pid")
-        .orderBy(desc("diversity"), asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      parts.join(broadcast(offDf), Seq("pid"))
-        .withColumn("cum_tokens",
-          (sum("n_tokens").over(w) + col("offset")).cast("long"))
-        .where(col("cum_tokens") <= TokenBudget)
+      val (cum, _) = Plans.runningSum(s, d, "budget-parts", m,
+        Seq(desc("diversity"), asc("doc_id")), col("n_tokens"), "cum_tokens")
+      cum.where(col("cum_tokens") <= TokenBudget)
         .select("doc_id", "diversity", "n_tokens", "cum_tokens")
         .orderBy("doc_id")
     },

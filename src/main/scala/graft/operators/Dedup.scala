@@ -789,7 +789,7 @@ object Dedup {
     },
 
     // Same inverted-index join with the HOT-SHINGLE FREQUENCY CAP the plain
-    // variant only documents (VERDICT r1 next-round #9): shingles appearing
+    // variant only documents: shingles appearing
     // in more than maxDf documents are dropped BEFORE the self-join, and
     // set sizes are recomputed over the surviving postings so Jaccard stays
     // well-defined on the filtered shingle space. At 100 TB a single
@@ -821,7 +821,7 @@ object Dedup {
       // only), while its build is the quadratic half of the query.
       // Collapsed build: postings/df/self-join at delegate scale (the
       // naive per-doc form re-pairs every clone family m² times; see
-      // dupGroups). key carries the Jaccard threshold too (ADVICE r8):
+      // dupGroups). key carries the Jaccard threshold too:
       // a caller at a different threshold must not be served these pairs
       graft.Caches.frame(s, d, s"capped-pairs:$NgramMaxDf:0.5")(
         cappedNgramPairsCollapsed(s, d, Left(NgramMaxDf.toLong)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Plans, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scalar-function operators (SURVEY.md §2.8, §2.9): date/duration
@@ -64,20 +64,10 @@ object Scalars {
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
         |FROM events ORDER BY event_id""".stripMargin) { (s, d) =>
-      // Narrow hash repartition between the parse and the global sort
-      // (r17, guide §2.3/§2.4): a final range sort SAMPLES its child to
-      // compute partition bounds, so the whole scan+parse subtree ran
-      // TWICE (measured: two ~0.3 s stages, srecs=0). Materializing the
-      // parsed 2-column rows behind a hash exchange makes the sampler
-      // read shuffle output instead of re-parsing 100% of props; the
-      // exchange carries (event_id, k) — 12 bytes/row — while the parse
-      // reads the props blob, so at 100 TB one extra narrow shuffle is
-      // orders cheaper than a second full-payload parse pass.
       Tables.events(s, d)
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .repartition(col("event_id"))
-        .orderBy("event_id")
+        .transform(Plans.sortedOutput(_, "event_id"))
     },
 
     Q("q_unit_conv",

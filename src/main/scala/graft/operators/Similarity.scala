@@ -894,7 +894,7 @@ object Similarity {
       // still needed, int64 overflows at the ×100 rung) but is NOT emitted:
       // the driver's hash is type-sensitive and Spark's Decimal(38,0) and
       // DuckDB's HUGEINT-cast-to-DECIMAL render differently at the hash
-      // layer even when bit-identical in value (r11 regression). The
+      // layer even when bit-identical in value. The
       // `distortion` double divides the identically-rounded exact numerator
       // in both engines and carries the full signal.
       u2a.join(dn, Seq("cid"))

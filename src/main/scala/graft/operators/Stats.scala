@@ -110,7 +110,7 @@ object Stats {
       // value EXACTLY (string equality in the checker), while raw t carries
       // per-engine corr-formulation ulps — rounding first makes the
       // classifier's input identical cross-engine (repo float-parity
-      // convention; ADVICE r4).
+      // convention).
       "ELSE round(r * sqrt((n - 2) / (1.0 - r * r)), 6) END"
 
   /** Trend classification CASE over columns (slope, r, n, t_stat):
@@ -668,7 +668,7 @@ object Stats {
     // Everything the inference chain computes EXCEPT the p-value is plain
     // arithmetic over one covariance row — so it gets a full oracle:
     // betas (Cramer), residual sigma², standard errors from the inverted
-    // 2×2 normal matrix, t statistics, and VIF = 1/(1−r12²). Only the
+    // 2×2 normal matrix, t statistics, and VIF = 1/(1−corr(x1, x2)²). Only the
     // t→p step needs the t-CDF DuckDB lacks (q_ols_inference above stays
     // rows-only for exactly that column; TrendClassSpec-style critical
     // values would classify, but the reference's deliverable here IS the

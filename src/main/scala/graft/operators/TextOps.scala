@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Plans, Q, Tables}
 import graft.functions.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -476,11 +476,9 @@ object TextOps {
     // token mass, and the score envelope. The tier cut is ntile(5) over
     // (avg_logp DESC, doc_id) — avg_logp is already round(·, 6) so the
     // ordering (and thus the cut) is cross-engine deterministic. The
-    // Spark side computes it WITHOUT a global window: range-partition by
-    // the sort key, per-partition row_number plus a driver prefix over
-    // the ≤|partitions| counts gives the global rank, and ntile's bucket
-    // function is a closed-form expression of (rank, n) — the same
-    // distributed-prefix-sum shape q_budget_select pins, so the plan
+    // Spark side computes it WITHOUT a global window: the global rank is
+    // a distributed running count (Plans.runningSum), and ntile's bucket
+    // function is a closed-form expression of (rank, n), so the plan
     // scales to any corpus while the oracle keeps the literal ntile.
     Q("q_curriculum",
       s"""WITH $bigramsDuck,
@@ -496,40 +494,14 @@ object TextOps {
          |SELECT tier, n_docs, total_bigrams, easiest, hardest,
          |  round(list_sum(lps) / len(lps), 6) AS mean_logp
          |FROM agg ORDER BY tier""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      // pid order = global (avg_logp DESC, doc_id) order by construction.
-      // PERSISTED (lifecycle registry), not just composed: the counts
-      // collect below and the tier aggregation are two separate jobs over
-      // this frame, and repartitionByRange samples its range boundaries
-      // per physical execution — without a materialization barrier the
-      // two jobs can disagree on which partition a boundary row lands in
-      // once partitions outgrow the boundary sample, silently corrupting
-      // the prefix-sum ranks. The persist pins ONE shuffle output that
-      // both jobs observe. (Same fix as q_budget_select's offsets frame.)
-      val parts = graft.Caches.frame(s, d, "curriculum-parts")(
-        lmScores(s, d)
-          .repartitionByRange(8, desc("avg_logp"), asc("doc_id"))
-          .withColumn("pid", spark_partition_id()))
-      // per-partition counts: ≤ #partitions rows — the licensed tiny
-      // driver collect (same pattern as q_budget_select's offsets)
-      val counts = parts.groupBy("pid").agg(count(lit(1)).as("pc"))
-        .orderBy("pid").collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[Long]("pc")))
-      val n = counts.map(_._2).sum
-      val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, pc)) =>
-        (pid, acc + pc)
-      }.sliding(2).collect { case Array((_, acc), (pid, _)) => (pid, acc) }
-        .toSeq
-      val offDf = s.createDataFrame(offsets).toDF("pid", "offset")
+      val (ranked, n) = Plans.runningSum(s, d, "curriculum-parts",
+        lmScores(s, d), Seq(desc("avg_logp"), asc("doc_id")), lit(1L), "rn")
       // ntile(5) in closed form over the global rank rn: the first
       // n%5 buckets carry ceil(n/5) rows, the rest floor(n/5)
       val size5 = n / 5
       val rem = n % 5
       val cut = rem * (size5 + 1)
-      val wp = Window.partitionBy("pid")
-        .orderBy(desc("avg_logp"), asc("doc_id"))
-      val tiers = parts.join(broadcast(offDf), Seq("pid"))
-        .withColumn("rn", row_number().over(wp) + col("offset"))
+      val tiers = ranked
         .withColumn("tier", expr(
           s"CAST(CASE WHEN rn <= $cut THEN (rn - 1) div ${size5 + 1} + 1 " +
             s"ELSE $rem + (rn - $cut - 1) div ${math.max(size5, 1L)} + 1 " +
@@ -633,10 +605,7 @@ object TextOps {
           size(col("plrs")).cast("long").as("n_bigrams"),
           expr("round(aggregate(plrs, cast(0 AS double), (a, x) -> a + x.lr) / size(plrs), 6)")
             .as("dsir_weight"))
-        // narrow repartition: the range sampler re-ran the model probe +
-        // per-doc fold (1.1 s CPU) — see q_doc_chunks
-        .repartition(col("doc_id"))
-        .orderBy("doc_id")
+        .transform(Plans.sortedOutput(_, "doc_id"))
     },
 
     Q("q_text_tokens",
@@ -913,10 +882,7 @@ object TextOps {
           (col("top_w").cast("double") / col("n_toks") > 0.2 ||
             coalesce(col("top_b").cast("double") / col("n_bg"), lit(0.0)) > 0.18)
             .as("is_repetitive"))
-        // narrow repartition: the range sampler re-ran both max-run folds
-        // (word + bigram, 1.1 s CPU) — see q_doc_chunks
-        .repartition(col("doc_id"))
-        .orderBy("doc_id")
+        .transform(Plans.sortedOutput(_, "doc_id"))
     },
 
     // Corpus vocabulary / Zipf report: top-50 tokens by frequency with
@@ -1138,11 +1104,7 @@ object TextOps {
         .select(col("doc_id"), col("n_tokens"), col("w_sum"),
           (col("w_sum").cast("double") / col("n_tokens")).as("score"),
           (col("w_sum") > 0).as("keep"))
-        // narrow repartition: the range sampler re-ran the whole hashed
-        // scoring pass (1.9 s CPU, the map-only model serve) — see
-        // q_doc_chunks
-        .repartition(col("doc_id"))
-        .orderBy("doc_id")
+        .transform(Plans.sortedOutput(_, "doc_id"))
     },
 
     // PER-SOURCE QUALITY CAP — the per-domain rate limit a web-scale
@@ -1213,11 +1175,7 @@ object TextOps {
             .as("n_chunk_tokens"),
           expr(s"aggregate(slice(th, start, 32), 0L, " +
             s"(a, x) -> (a * 8191 + x) % $P)").as("chunk_hash"))
-        // narrow repartition: the range sampler re-ran the per-token hash
-        // + chunk fold (1.8 s CPU); materialize it behind a hash exchange
-        // of the 5 output columns (r17, same fix as q_json_extract)
-        .repartition(col("doc_id"))
-        .orderBy("doc_id", "start")
+        .transform(Plans.sortedOutput(_, "doc_id", "start"))
     },
 
     // Sensitive-pattern scrubbing with an audit count — the PII-masking
@@ -1237,13 +1195,8 @@ object TextOps {
           regexp_replace(col("props"), "[0-9]+", "<NUM>").as("masked"),
           size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long")
             .as("n_masked"))
-        // hash exchange under the sort, so the range sampler does not
-        // re-run both regexes over the props blob. The exchanged rows carry
-        // the full masked string: this trades the regex re-run for shuffle
-        // bytes, a trade measured as a win at sf0.1 only — see
-        // q_doc_chunks / q_json_extract
-        .repartition(col("event_id"))
-        .orderBy("event_id")
+        // a full-width exchange: see Plans.sortedOutput
+        .transform(Plans.sortedOutput(_, "event_id"))
     },
 
     // DISTINCTIVE TERMS per source (TF-IDF with sources as the document

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Plans, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,15 +89,7 @@ object Windows {
         |QUALIFY row_number() OVER (PARTITION BY o_custkey
         |  ORDER BY o_orderdate DESC, o_orderkey DESC) = 1
         |ORDER BY o_custkey""".stripMargin) { (s, d) =>
-      // One range exchange shared by the window and the final sort (r17,
-      // guide §2.4): the window needs rows clustered by o_custkey and the
-      // output is ordered by o_custkey, so range-partitioning up front
-      // satisfies BOTH — the hash exchange + final range exchange (whose
-      // sampler re-ran the whole window, the measured double-compute)
-      // collapse to one exchange whose sampler reads only the raw scan.
-      // Equal keys land in one range partition, so window semantics are
-      // unchanged; skew behavior matches hash (neither splits one key).
-      latestVersion(Tables.orders(s, d).repartitionByRange(col("o_custkey")),
+      latestVersion(Plans.clusteredBy(Tables.orders(s, d), "o_custkey"),
         "o_custkey", "o_orderdate", "o_orderkey")
         .select("o_custkey", "o_orderkey", "o_orderdate")
         .orderBy("o_custkey")
@@ -115,18 +107,9 @@ object Windows {
         |ORDER BY event_id""".stripMargin) { (s, d) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("tsec")).rangeBetween(-259200L, 259199L)
-      // explicit numbered repartition: the sliding range frame recomputes
-      // its aggregates per frame move (CPU-bound per row), but the shuffle
-      // BYTES are small enough that AQE coalesces the window to one task
-      // — bytes-based coalescing is the wrong signal for compute-bound
-      // windows, so pin the user-group parallelism explicitly
+      // a numbered exchange: AQE would coalesce the few shuffle bytes of
+      // this compute-bound window into one task
       val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-      // Narrow hash repartition before the final sort (r17, guide §2.3/
-      // §2.4): the range sampler re-ran the ENTIRE sliding window — the
-      // most expensive operator in the suite (measured 2× window CPU,
-      // 8.3 s total). The exchange carries the 4 output columns only;
-      // the sampler now reads that shuffle instead of re-evaluating
-      // every frame.
       Tables.events(s, d)
         .withColumn("tsec", unix_timestamp(col("ts")))
         .repartition(n, col("user_id"))
@@ -134,8 +117,7 @@ object Windows {
           avg("value").over(w).as("roll_avg"),
           stddev("value").over(w).as("roll_std"),
           count("value").over(w).as("n_in_frame"))
-        .repartition(col("event_id"))
-        .orderBy("event_id")
+        .transform(Plans.sortedOutput(_, "event_id"))
     },
 
     Q("q_trailing_max_90d",
@@ -147,10 +129,7 @@ object Windows {
         |  FROM orders) t ORDER BY o_orderkey""".stripMargin) { (s, d) =>
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("day_idx")).rangeBetween(-90L, 0L)
-      // (r17 A/B: a narrow repartition before the sort — the
-      // q_rolling_center sampler fix — REGRESSED this query 0.455->0.68 s;
-      // the sliding max is cheap enough that re-running it under the range
-      // sampler beats paying an extra exchange. Left as-is.)
+      // no Plans.sortedOutput: the sliding max is cheaper to re-run
       Tables.orders(s, d)
         .withColumn("day_idx",
           datediff(col("o_orderdate"), lit("1990-01-01")).cast("long"))
@@ -176,9 +155,7 @@ object Windows {
             |ELSE (arr[size(arr) div 2 - 1] + arr[size(arr) div 2]) / 2.0
             |END""".stripMargin))
         .select("event_id", "med7")
-        // (r17 A/B: the narrow-repartition sampler fix regressed this
-        // query 0.485->0.60 s — ≤7-row frames are cheap to re-run; see
-        // q_trailing_max_90d)
+        // no Plans.sortedOutput: 7-row frames are cheaper to re-run
         .orderBy("event_id")
     },
 
@@ -199,16 +176,13 @@ object Windows {
         |  WINDOW w AS (PARTITION BY user_id ORDER BY day_idx
         |    RANGE BETWEEN 30 PRECEDING AND 1 PRECEDING)) t
         |WHERE n_base >= 3 ORDER BY user_id, day""".stripMargin) { (s, d) =>
-      // Daily pre-agg keeps its map-side partial sum; the narrow range
-      // exchange of the DAILY rows then serves the baseline window AND
-      // the (user_id, day) sort — one exchange fewer, and the range
-      // sampler reads shuffle output instead of re-running the window
-      // (r17, guide §2.4; dedup-first shape as q_retention_cohorts).
+      // clustered after the daily aggregate, which keeps its map-side
+      // partial sum
       val daily = Tables.events(s, d)
         .groupBy(col("user_id"), col("ts").cast("date").as("day"))
         .agg(sum("value").as("daily_v"))
         .withColumn("day_idx", datediff(col("day"), lit("1990-01-01")).cast("long"))
-        .repartitionByRange(col("user_id"))
+        .transform(Plans.clusteredBy(_, "user_id"))
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("day_idx")).rangeBetween(-30L, -1L)
       daily
@@ -251,13 +225,10 @@ object Windows {
         |FROM s ORDER BY user_id, day""".stripMargin) { (s, d) =>
       val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
       val wRows = wOrd.rowsBetween(Window.unboundedPreceding, 0)
-      // daily partial agg kept; range exchange of daily rows shared by
-      // the streak windows and the (user_id, day) sort (see
-      // q_baseline_band)
       val daily = Tables.events(s, d)
         .groupBy(col("user_id"), col("ts").cast("date").as("day"))
         .agg(sum("value").as("daily_v"))
-        .repartitionByRange(col("user_id"))
+        .transform(Plans.clusteredBy(_, "user_id"))
       daily.withColumn("inc",
           when(lag(col("daily_v"), 1).over(wOrd).isNull ||
             col("daily_v") <= lag(col("daily_v"), 1).over(wOrd), 0).otherwise(1))
@@ -299,12 +270,7 @@ object Windows {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      // Range partitioning shared by the window AND the final sort (r17,
-      // guide §2.4): clustering by user_id serves the window, and the
-      // ORDER BY (user_id, ...) prefix means the final Sort needs no
-      // exchange — which also removes the range sampler that re-ran the
-      // whole window subtree (the measured per-query double-compute).
-      Tables.events(s, d).repartitionByRange(col("user_id"))
+      Plans.clusteredBy(Tables.events(s, d), "user_id")
         .select(col("user_id"), col("event_id"), col("value"),
           max("value").over(w).as("prev_best"))
         .where(col("prev_best").isNull || col("value") > col("prev_best"))
@@ -323,10 +289,7 @@ object Windows {
         |ORDER BY user_id, event_id""".stripMargin) { (s, d) =>
       val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val wAll = Window.partitionBy(col("user_id"))
-      // range partition shared by both windows and the ORDER BY
-      // (user_id, ...) — one exchange, no sampler re-run (see
-      // q_record_events)
-      Tables.events(s, d).repartitionByRange(col("user_id"))
+      Plans.clusteredBy(Tables.events(s, d), "user_id")
         .withColumn("rn", row_number().over(wOrd).cast("long"))
         .withColumn("n", count(lit(1)).over(wAll))
         .withColumn("step",
@@ -355,11 +318,7 @@ object Windows {
         .orderBy(col("value").asc, col("ts").asc, col("event_id").asc)
       val wDesc = Window.partitionBy(col("event_type"))
         .orderBy(col("value").desc, col("ts").desc, col("event_id").desc)
-      // range partition on event_type serves both rank windows, the
-      // per-type aggregate AND the ORDER BY — one exchange, no sampler
-      // re-run (see q_record_events); parallelism is |event_type| either
-      // way (hash clustered identically)
-      Tables.events(s, d).repartitionByRange(col("event_type"))
+      Plans.clusteredBy(Tables.events(s, d), "event_type")
         .withColumn("rn_asc", row_number().over(wAsc))
         .withColumn("rn_desc", row_number().over(wDesc))
         .groupBy("event_type")
@@ -387,10 +346,7 @@ object Windows {
         |SELECT user_id, session_id, count(*) AS n_events,
         |  epoch_ms(max(ts))//1000 - epoch_ms(min(ts))//1000 AS duration_s
         |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      // range partition on user_id serves the session window, the
-      // (user_id, session_id) aggregate (same-key rows are colocated) AND
-      // the final sort — one exchange, no sampler re-run (q_record_events)
-      sessionize(Tables.events(s, d).repartitionByRange(col("user_id")),
+      sessionize(Plans.clusteredBy(Tables.events(s, d), "user_id"),
         "user_id", "ts", "event_id", 3600L)
         .groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"),
@@ -414,11 +370,8 @@ object Windows {
         |  FROM m WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, CAST(sum(brk) AS BIGINT) AS n_events
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      // range partition on user_id serves the z-score window, the gap
-      // window, the per-user aggregate AND the final sort — one exchange,
-      // no sampler re-run (see q_record_events)
       val material = zscoreOutliers(
-        Tables.events(s, d).repartitionByRange(col("user_id")),
+        Plans.clusteredBy(Tables.events(s, d), "user_id"),
         "user_id", "value", 1.5)
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       material

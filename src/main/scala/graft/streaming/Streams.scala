@@ -452,29 +452,6 @@ object Streams {
   final case class BandVerdict(doc_id: Long, g: Int, k: String,
       dup: Boolean, first_doc: Long)
 
-  /** STREAMING LSH NEAR-DUP DETECTION — dedup-at-ingest against all
-    * history: each arriving document runs the batch MinHash chain
-    * map-side (tokenize → shingle → 16 permutations → 4 band keys;
-    * operators.Dedup.bandKeysFor — the exact q_dedup_minhash_pairs
-    * banding), then each (band, key) BUCKET keeps one scalar of state:
-    * the doc that first claimed it. A later arrival into an occupied
-    * bucket is a near-dup candidate (same candidate semantics as the
-    * batch LSH pair join — band collision, before any exact verify).
-    *
-    * Shape: the feature chain is stateless per micro-batch; the only
-    * shuffle is groupByKey on the band key, and the sufficient state is
-    * ONE doc id per occupied bucket — the streaming form of the batch
-    * side's banded inverted index, which is exactly what "have I seen
-    * something like this before" costs at 100 TB (the batch twin
-    * q_dedup_incremental probes the same index as a static frame).
-    * Arrivals inside a micro-batch are processed in (micros, doc_id)
-    * order — the batch referee's total order — so stream and batch agree
-    * on who claimed each bucket, ties included; across micro-batches
-    * arrival order is authoritative, as in every twin above.
-    * Emits one verdict per (doc, band); a doc is a near-dup iff ANY of
-    * its bands verdicts dup (the consumer's 1-line rollup — kept
-    * per-band here so the collision evidence stays inspectable).
-    */
   /** Coarse-cell argmin over the broadcast-shape trained centroids as a
     * column over `qv`: `min(struct(dist, cid))` becomes `array_min` over
     * literal-candidate structs with identical (dist, cid) tie-breaks, so
@@ -678,6 +655,29 @@ object Streams {
       }
   }
 
+  /** STREAMING LSH NEAR-DUP DETECTION — dedup-at-ingest against all
+    * history: each arriving document runs the batch MinHash chain
+    * map-side (tokenize → shingle → 16 permutations → 4 band keys;
+    * operators.Dedup.bandKeysFor — the exact q_dedup_minhash_pairs
+    * banding), then each (band, key) BUCKET keeps one scalar of state:
+    * the doc that first claimed it. A later arrival into an occupied
+    * bucket is a near-dup candidate (same candidate semantics as the
+    * batch LSH pair join — band collision, before any exact verify).
+    *
+    * Shape: the feature chain is stateless per micro-batch; the only
+    * shuffle is groupByKey on the band key, and the sufficient state is
+    * ONE doc id per occupied bucket — the streaming form of the batch
+    * side's banded inverted index, which is exactly what "have I seen
+    * something like this before" costs at 100 TB (the batch twin
+    * q_dedup_incremental probes the same index as a static frame).
+    * Arrivals inside a micro-batch are processed in (micros, doc_id)
+    * order — the batch referee's total order — so stream and batch agree
+    * on who claimed each bucket, ties included; across micro-batches
+    * arrival order is authoritative, as in every twin above.
+    * Emits one verdict per (doc, band); a doc is a near-dup iff ANY of
+    * its bands verdicts dup (the consumer's 1-line rollup — kept
+    * per-band here so the collision evidence stays inspectable).
+    */
   def lshDedupStream(docs: DataFrame)
       : org.apache.spark.sql.Dataset[BandVerdict] = {
     import docs.sparkSession.implicits._
