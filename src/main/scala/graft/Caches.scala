@@ -5,65 +5,47 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for session-scoped persisted frames: the shingle, vector,
-  * model, pair and histogram frames that several queries or passes read,
-  * and the analyzed plans [[Q]] re-wraps per call. One rule covers every
-  * shared frame.
+/** The one registry of driver-side memos over data dirs, one per live
+  * `SparkSession`. It holds two kinds of memo under one rule: persisted
+  * frames (the shingle, vector, model, pair and histogram frames that
+  * several queries or passes read) and values that hold no storage (the
+  * analyzed plans [[Q]] re-wraps per call, the schemas [[Tables]] infers,
+  * the silver tables the façade resolves).
   *
-  *  - Slot: `name:dir`, one per logical frame over one data dir. Builder
-  *    parameters (a cap, a `k`) belong in `name`.
-  *  - Version: the dir's [[stamp]], listed on every access. Q's prepared
-  *    plans take the same version, so frames and plans go stale together.
-  *    Staleness contract: the stamp's. A table file replaced in `dir`, or
-  *    a file or partition added, removed or replaced inside a table
-  *    directory one level down, is a new version. A rewrite inside a
-  *    partition of a partitioned table (two levels down) is not, and such
-  *    a caller must invalidate via [[clear]].
-  *  - Level: `MEMORY_AND_DISK`, applied here once. Under memory pressure
-  *    Spark spills such a frame to disk instead of dropping it.
-  *  - Replacement: a slot holds one frame. A new version first unpersists
-  *    the superseded frame and only then builds and persists the new one.
-  *    Spark's cache matches plans by path, not by file contents, so the
-  *    old entry must go before a rebuilt plan over a rewritten dir can
-  *    read the new files.
+  *  - Slot: `name:dir`, one per logical memo over one dir in one session.
+  *    Builder parameters (a cap, a `k`) belong in `name`.
+  *  - Version: the dir's [[stamp]], listed on every access and before a
+  *    build (a write racing the build leaves the memo at an older
+  *    version), plus any conf a value bakes in. A table file replaced in
+  *    `dir`, or a file or partition added, removed or replaced inside a
+  *    table directory one level down, is a new version. A rewrite two levels down is not, and
+  *    such a caller must invalidate via [[clear]]. A dir that cannot be
+  *    listed versions a frame as `missing`; a value is then neither built
+  *    nor kept.
+  *  - Session: a session's memos serve that session only, so a frame or
+  *    plan built in one session is never handed to another. Once a
+  *    session's `SparkContext` has stopped, its registry is dropped at the
+  *    next access; nothing is unpersisted on a stopped context.
+  *  - Level: a frame persists at `MEMORY_AND_DISK`, so under memory
+  *    pressure Spark spills it to disk instead of dropping it.
+  *  - Replacement: a slot holds one memo. A new version first unpersists a
+  *    superseded frame and only then builds the new memo. Spark's cache
+  *    matches plans by path, not by file contents, so the old entry must go
+  *    before a rebuilt plan over a rewritten dir can read the new files.
   *
-  * [[clear]] unpersists everything.
+  * [[clear]] unpersists and forgets everything.
   */
 object Caches {
 
-  private val frames = TrieMap.empty[String, (String, DataFrame)]
-  private[graft] val preparedPlans = TrieMap.empty[String,
-    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]
+  /** A frame the registry persisted, and unpersists on replacement. */
+  private final case class Persisted(df: DataFrame)
 
-  /** The version of everything the registry keeps over `dir`. */
-  private def version(s: SparkSession, dir: String): String =
-    stamp(s, dir).getOrElse("missing")
+  private type Slots = TrieMap[String, (String, AnyRef)]
 
-  /** Memoize the ANALYZED LOGICAL PLAN of query `name` over `dir` — the
-    * prepared-statement registry Q uses. Only the plan is kept, never a
-    * Dataset: a Dataset freezes its lazy QueryExecution/executedPlan at
-    * first forcing, which made plan inspection order- and conf-dependent.
-    * Callers re-wrap the plan per invocation (GraftBridge.ofRows), so
-    * every call gets a fresh QueryExecution — optimization, physical
-    * planning, AQE and execution re-run under the current conf. The slot
-    * is `q:name:<sessionUUID>:dir` and holds one plan, for one version: the
-    * dir's stamp plus `conf`, the conf values analysis bakes into the
-    * plan. A new version replaces the old plan in place, so the map is
-    * bounded by the slots in use. Entries hold no storage: dropping one
-    * loses only analysis work.
-    */
-  def preparedPlan(s: SparkSession, dir: String, name: String, conf: String)(
-      mk: => DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val slot = s"q:$name:${org.apache.spark.sql.GraftBridge.sessionUUID(s)}:$dir"
-    val v = s"${version(s, dir)}:$conf"
-    preparedPlans.get(slot) match {
-      case Some((seen, plan)) if seen == v => plan
-      case _ =>
-        val plan = mk.queryExecution.analyzed
-        preparedPlans.put(slot, (v, plan))
-        plan
-    }
-  }
+  private val sessions = TrieMap.empty[SparkSession, Slots]
+
+  private def dropStopped(): Unit =
+    sessions.filterInPlace { case (s, _) => !s.sparkContext.isStopped }
 
   /** Test seam: the storage level [[frame]] persists at instead of
     * `MEMORY_AND_DISK`. CachesSpec sets DISK_ONLY to replay the worst
@@ -72,59 +54,82 @@ object Caches {
     */
   @volatile private[graft] var levelOverride: Option[StorageLevel] = None
 
-  /** The shared frame `name` over data dir `dir`, built and persisted on a
-    * miss after the slot's superseded frame is unpersisted. `build`
-    * returns the frame unpersisted. Synchronized so a replacement never
-    * races a build; builders that read other slots re-enter on the same
-    * thread.
+  /** The memo in `slot` of `s`'s registry at version `v`, built on a miss
+    * after the slot's superseded memo is released. Synchronized so a
+    * replacement never races a build; builders that read other slots
+    * re-enter on the same thread.
     */
-  def frame(s: SparkSession, dir: String, name: String)(build: => DataFrame)
-      : DataFrame = {
-    val slot = s"$name:$dir"
-    val v = version(s, dir)
-    synchronized {
-      frames.get(slot) match {
-        case Some((seen, df)) if seen == v => df
-        case old =>
-          old.foreach { case (_, df) => df.unpersist() }
-          frames.remove(slot)
-          val df = build.persist(
-            levelOverride.getOrElse(StorageLevel.MEMORY_AND_DISK))
-          frames.put(slot, (v, df))
-          df
-      }
+  private def memo[T <: AnyRef](s: SparkSession, slot: String, v: String)(
+      build: => T): T = synchronized {
+    dropStopped()
+    val slots = sessions.getOrElseUpdate(s, TrieMap.empty)
+    slots.get(slot) match {
+      case Some((seen, x)) if seen == v => x.asInstanceOf[T]
+      case old =>
+        old.foreach { case (_, x) => release(x) }
+        slots.remove(slot)
+        val x = build
+        slots.put(slot, (v, x))
+        x
     }
   }
 
-  /** Force-materialize every registered frame (full scan via count) and
-    * return per-key wall seconds, key-sorted. Bench calls this between its
-    * untimed warm-up pass and the timed passes so a shared frame's build
-    * cost can never land on whichever timed consumer happens to run first
-    * — the attribution-stability guard the round-7 review asked for. On an
-    * already-warm registry each entry is a cache scan (~tens of ms), and
-    * the returned timings document exactly that in BENCH_FULL.json.
-    */
-  def warm(): Seq[(String, Double)] = frames.toSeq.sortBy(_._1).map {
-    case (k, (_, df)) =>
-      val t0 = System.nanoTime()
-      try df.count() catch { case _: Exception => () }
-      k -> (System.nanoTime() - t0) / 1e9
+  private def release(x: AnyRef): Unit = x match {
+    case Persisted(df) => df.unpersist()
+    case _ =>
   }
 
-  /** Per-frame materialized cache size in bytes, key-sorted — the root
-    * InMemoryRelation's post-materialization stats (call after [[warm]];
-    * 0 for a frame whose cache lookup missed). This is the registry's
-    * actual executor-storage footprint, answering the 100 TB memory
-    * question ("what do the shared frames HOLD?") with a measured number
-    * in the bench artifact instead of a plan-reading argument.
+  /** The shared frame `name` over data dir `dir`. `build` returns the frame
+    * unpersisted; the registry persists it.
     */
-  def bytes(): Seq[(String, Long)] = frames.toSeq.sortBy(_._1).map {
-    case (k, (_, df)) =>
-      val b = df.queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          r.stats.sizeInBytes.toLong
-      }.getOrElse(0L)
-      k -> b
+  def frame(s: SparkSession, dir: String, name: String)(build: => DataFrame)
+      : DataFrame = {
+    val v = stamp(s, dir).getOrElse("missing")
+    memo(s, s"$name:$dir", v)(Persisted(build.persist(
+      levelOverride.getOrElse(StorageLevel.MEMORY_AND_DISK)))).df
+  }
+
+  /** The value `name` over `dir` (a plan, a schema, a resolved table),
+    * versioned by the dir's stamp and `conf`, or `None` when `dir` cannot
+    * be listed.
+    */
+  private[graft] def value[T <: AnyRef](s: SparkSession, dir: String,
+      name: String, conf: String = "")(build: => T): Option[T] =
+    stamp(s, dir).map(st => memo(s, s"$name:$dir", s"$st:$conf")(build))
+
+  /** Every memo of every live session as (session, slot, value). */
+  private[graft] def memos(): Seq[(SparkSession, String, AnyRef)] =
+    synchronized {
+      dropStopped()
+      sessions.toSeq.flatMap { case (s, slots) =>
+        slots.toSeq.map { case (k, (_, x)) => (s, k, x) } }
+    }
+
+  private def frames(): Seq[(String, DataFrame)] =
+    memos().collect { case (_, k, Persisted(df)) => k -> df }.sortBy(_._1)
+
+  /** Force-materialize every registered frame (full scan via count) and
+    * return per-key wall seconds, key-sorted. Bench calls this between its
+    * untimed warm-up pass and the timed passes, so a shared frame's build
+    * cost never lands on whichever timed consumer runs first. A frame that
+    * cannot be built raises here.
+    */
+  def warm(): Seq[(String, Double)] = frames().map { case (k, df) =>
+    val t0 = System.nanoTime()
+    df.count()
+    k -> (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Per-frame materialized cache size in bytes, key-sorted: the root
+    * InMemoryRelation's post-materialization stats (call after [[warm]];
+    * 0 for a frame whose cache lookup missed), the executor storage the
+    * shared frames hold.
+    */
+  def bytes(): Seq[(String, Long)] = frames().map { case (k, df) =>
+    k -> df.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.stats.sizeInBytes.toLong
+    }.getOrElse(0L)
   }
 
   /** Per-frame storage level, key-sorted — the eviction-safety audit
@@ -133,18 +138,15 @@ object Caches {
     * disk reads. CachesSpec pins useDisk across the registry.
     */
   def levels(): Seq[(String, StorageLevel)] =
-    frames.toSeq.sortBy(_._1).map { case (k, (_, df)) => k -> df.storageLevel }
+    frames().map { case (k, df) => k -> df.storageLevel }
 
-  /** Unpersist and forget every registered frame and plan (idempotent;
-    * safe while queries are not running). Call between runs or before
-    * session stop.
+  /** Unpersist and forget every memo of every session (idempotent; safe
+    * while queries are not running).
     */
   def clear(): Unit = synchronized {
-    frames.foreach { case (_, (_, df)) =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
-    frames.clear()
-    preparedPlans.clear()
+    dropStopped()
+    sessions.values.foreach(_.values.foreach { case (_, x) => release(x) })
+    sessions.clear()
   }
 
   /** First-level stamp of a path: one driver-side `listStatus` giving the

@@ -13,32 +13,27 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
-  /** Prepared-statement reuse (guide §1.2 "per-task work" applied to the
-    * DRIVER): a query's ANALYZED PLAN for a given (session, dir, dir
-    * stamp, analysis conf) is a deterministic value, but re-building it
-    * per execution re-runs constructor Scala + full Catalyst ANALYSIS —
-    * measured 9.2 s across one pass of the 165-query suite (ANN/minhash
-    * family worst at 0.1-0.34 s each), paid again by every bench pass.
-    * Only the analyzed LogicalPlan is memoized ([[Caches.preparedPlan]]);
-    * every call wraps it in a fresh Dataset (fresh QueryExecution), so
-    * optimization, physical planning, AQE and the full execution from
-    * parquet re-run per invocation under the caller's current conf.
-    * Analysis itself bakes some conf into the plan (the session time zone
-    * is stamped into every time-zone-aware expression; ANSI mode and case
-    * sensitivity shape resolution and casts), so those keys are part of
-    * the plan's version: a change to one re-analyzes. Other conf read only
-    * during analysis is still frozen at first build. No data, plan
-    * statistics or results are reused; a rewritten input dir re-analyzes
-    * through the dir's stamp, the version [[Caches]] gives every shared
-    * frame.
+  /** Prepared-statement reuse: a query's ANALYZED PLAN is a memo in
+    * [[Caches]] (slot `q:name:dir`), so a call skips the constructor Scala
+    * and Catalyst analysis, measured at 9.2 s across one pass of the
+    * 165-query suite. Only the plan is kept, never a Dataset: every call
+    * wraps it in a fresh Dataset, so optimization, physical planning, AQE
+    * and execution re-run under the caller's current conf. Analysis bakes
+    * some conf into the plan (the session time zone in every
+    * time-zone-aware expression; ANSI mode and case sensitivity in
+    * resolution and casts), so those keys join the plan's version. Other
+    * conf read only during analysis is frozen at first build.
     */
   private val analysisConf = Seq("spark.sql.session.timeZone",
     "spark.sql.ansi.enabled", "spark.sql.caseSensitive")
 
   private def memoized(name: String,
       fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => org.apache.spark.sql.GraftBridge.ofRows(s, Caches.preparedPlan(
-      s, d, name, analysisConf.map(s.conf.get).mkString(","))(fn(s, d)))
+    (s, d) => {
+      def analyzed = fn(s, d).queryExecution.analyzed
+      org.apache.spark.sql.GraftBridge.ofRows(s, Caches.value(s, d, s"q:$name",
+        analysisConf.map(s.conf.get).mkString(","))(analyzed).getOrElse(analyzed))
+    }
 
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =

@@ -14,36 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Inferred-schema memo: every `spark.read.parquet(path)` without an
-    * explicit schema runs a driver JOB to read footers for inference —
-    * measured 25-35 ms per table per query construction (r16 profile:
-    * 2-5 such jobs per query = a fixed ~0.1 s tax on all 165 bench
-    * queries). A table's schema is a property of its files, so it is
-    * inferred ONCE per (app, path, [[Caches.stamp]]) and passed back
-    * explicitly; the stamp re-infers when a path is rewritten in-session.
-    * Staleness contract: the stamp's. A single-file table is its own stamp
-    * (name, mtime, length); a directory table re-infers when a file or
-    * partition directory is added, removed or replaced directly in it, or
-    * when a file inside one of its partition directories is. A change two
-    * levels below the table path is not seen; a session that makes one must
-    * call Caches.clear() and use a fresh path or app. One `listStatus`
-    * replaces one job.
+  /** A table's schema is a property of its files, so it is inferred once
+    * per version of the path (a [[Caches]] value) and passed back
+    * explicitly: `spark.read.parquet(path)` without a schema runs a
+    * footer-reading job, 25-35 ms per table per query construction. A
+    * path that cannot be listed falls through to the plain read, so the
+    * caller sees Spark's PATH_NOT_FOUND.
     */
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    Caches.stamp(spark, path) match {
-      // missing/unlistable path: fall through to the plain read so the
-      // caller sees the standard PATH_NOT_FOUND, not a memo artifact
-      case None => spark.read.parquet(path)
-      case Some(st) =>
-        val schema = schemaMemo.getOrElseUpdate(
-          s"${spark.sparkContext.applicationId}:$path:$st",
-          spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
-    }
+    Caches.value(spark, path, "schema")(spark.read.parquet(path).schema)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
   /** Normalize `events.ts` to session-zoned TimestampType. The testdata

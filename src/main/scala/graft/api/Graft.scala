@@ -8,8 +8,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.collection.concurrent.TrieMap
-
 /** Typed façade mirroring the reference's tool surface
   * (docs/mcp-tools-reference.md) over the silver tables: one method per
   * analytical tool family, each a thin shaping layer over the operator /
@@ -24,17 +22,11 @@ import scala.collection.concurrent.TrieMap
   * streaming.Streams.catchUp; save/get profile + reviews -> plain
   * SilverWriter.upsertByPartition round trips; export -> SilverWriter.export.
   *
-  * Table resolution: [[table]] resolves each `root/<table>` once per façade
-  * instance and hands the same DataFrame back while the table's
-  * [[graft.Caches.stamp]] (one `listStatus` of its direct children, no
-  * Spark job) is unchanged, so a hot read neither re-lists partitions nor
-  * re-infers the schema. The stamp catches any write that adds, removes or
-  * replaces a direct child or a file inside one: a rewritten or new
-  * `activity_id` partition, an overwrite or an append. It does not catch a
-  * change two or more levels below the table root. A DataFrame a caller
-  * built before a write keeps the files it resolved and is not refreshed;
-  * only the next [[table]] call sees the write. The map lives and dies with
-  * this instance: two façades over one root resolve independently.
+  * Table resolution: each `root/<table>` is a [[graft.Caches]] value of
+  * this session, so a hot read neither re-lists partitions nor re-infers
+  * the schema, and the next read after a write sees it (the registry's
+  * version rule). A DataFrame a caller built before a write keeps the
+  * files it resolved and is not refreshed.
   *
   * Plan shape: the façade serves one athlete's store, so its analytical
   * inputs are bounded by one athlete (the `activities` table, one row per
@@ -50,29 +42,16 @@ import scala.collection.concurrent.TrieMap
   */
 final class Graft(val spark: SparkSession, root: String) {
 
-  private val resolved = TrieMap.empty[String, (String, DataFrame)]
-
   // missing path: the plain read raises Spark's AnalysisException
   def table(name: String): DataFrame =
     optionalTable(name).getOrElse(spark.read.parquet(s"$root/$name"))
 
-  /** The table, or `None` when its path is missing: the stamp already
-    * answers that, so an optional table costs no failed read.
+  /** The table, or `None` when its path is missing: the registry's stamp
+    * already answers that, so an optional table costs no failed read.
     */
-  private def optionalTable(name: String): Option[DataFrame] = {
-    val path = s"$root/$name"
-    graft.Caches.stamp(spark, path).map { st =>
-      resolved.get(name) match {
-        case Some((seen, df)) if seen == st => df
-        case _ =>
-          // stamped before the read: a write racing it leaves the entry
-          // with an older stamp, so the next call re-resolves
-          val df = spark.read.parquet(path)
-          resolved.put(name, (st, df))
-          df
-      }
-    }
-  }
+  private def optionalTable(name: String): Option[DataFrame] =
+    graft.Caches.value(spark, s"$root/$name", "silver")(
+      spark.read.parquet(s"$root/$name"))
 
   /** Collects `df` and sorts it on the driver by `key`, ascending with
     * nulls first as `orderBy` does: a read that collects every row anyway
@@ -128,7 +107,8 @@ final class Graft(val spark: SparkSession, root: String) {
         statisticsOnly: Boolean): DataFrame = {
       val df = splitsOf(activityId).select(cols.map(col): _*)
       if (!statisticsOnly) sortedInOne(df, "split_index")
-      else Aggregates.statsBlock(df.drop("split_index"), Seq.empty,
+      else Aggregates.statsBlock(onePartition(df.drop("split_index")),
+        Seq.empty,
         cols.filterNot(c => c == "split_index" || c == "hr_zone" || c == "terrain_type"))
     }
 
@@ -422,19 +402,14 @@ final class Graft(val spark: SparkSession, root: String) {
       * MIN_FIT_ACTIVITIES gate (heat_adjustment.py:147): below `minN`
       * complete observations the reference returns insufficient_data and
       * emits NO points, so this frame is empty. The gate is the fit's own
-      * `n`, filtered on the same broadcast 1-row frame that carries b_heat.
+      * `n`; the fit and the points come from one read of the observations.
       */
     def heatCostPoints(startDate: String, endDate: String,
-        refTempC: Double = 15.0, minN: Int = 10): DataFrame = {
-      val f = observations(startDate, endDate, refTempC)
-      val betas = graft.operators.Stats.heatBetas(
-          graft.operators.Stats.heatStats(f.select("y", "x1", "x2", "x3")))
-        .where(col("n") >= minN)
-        .select("b_heat")
-      sortedInOne(graft.operators.Stats.heatCost(f, betas)
+        refTempC: Double = 15.0, minN: Int = 10): DataFrame =
+      sortedInOne(graft.operators.Stats.heatCostSelfFit(
+          observations(startDate, endDate, refTempC), minN)
         .select(col("activity_date").as("date"), col("temp_c"),
           col("y").as("raw_hr"), col("heat_cost"), col("neutral_hr")), "date")
-    }
   }
 
   /** Time-series tools (z-anomalies come from domain.FormAnomaly over the

@@ -604,8 +604,11 @@ object Dedup {
       .select(col("doc_id"), explode(col("bands")).as("band"))
       .select(col("doc_id"), col("band.g").as("g"), col("band.k").as("k"))
       .repartition(col("g"), col("k"))
+    // both sides are one stage, so AQE's build side would follow whichever
+    // copy it sized first; the hint fixes it, and with it the frame's plan
     val cand = exploded.select(col("doc_id").as("a_id"), col("g"), col("k"))
-      .join(exploded.select(col("doc_id").as("b_id"), col("g"), col("k")),
+      .join(broadcast(
+        exploded.select(col("doc_id").as("b_id"), col("g"), col("k"))),
         Seq("g", "k"))
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")

@@ -311,8 +311,21 @@ object Stats {
     * broadcast; the per-run side is map-only — no second shuffle.
     */
   def heatCost(f: DataFrame, betas: DataFrame): DataFrame =
-    f.crossJoin(broadcast(betas))
-      .withColumn("heat_cost", col("b_heat") * col("x2"))
+    attributed(f.crossJoin(broadcast(betas)))
+
+  /** [[heatCost]] with the betas fitted on `f` itself and the fit's
+    * `n >= minN` gate (no rows below it). One aggregate gathers the fit's
+    * sufficient statistics and `f`'s rows, so `f` is evaluated once.
+    */
+  def heatCostSelfFit(f: DataFrame, minN: Int): DataFrame =
+    attributed(f.agg(heatStatsCols.head, heatStatsCols.tail :+
+        collect_list(struct(f.columns.map(col): _*)).as("runs"): _*)
+      .where(col("n") >= minN)
+      .select(explode(col("runs")).as("run"), expr(hBHeat).as("b_heat"))
+      .select("run.*", "b_heat"))
+
+  private def attributed(df: DataFrame): DataFrame =
+    df.withColumn("heat_cost", col("b_heat") * col("x2"))
       .withColumn("neutral_hr", col("y") - col("heat_cost"))
 
   /** Full heat chain with the reference's n ≥ minN gate

@@ -26,12 +26,6 @@ object GraftBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 
-  /** Stable unique id of a session (`private[sql]` in 4.x) — the memo-key
-    * component that replaces identityHashCode, which can collide after GC.
-    */
-  def sessionUUID(session: SparkSession): String =
-    session.asInstanceOf[classic.SparkSession].sessionUUID
-
   /** Wait until every listener has seen every event posted so far; throws
     * `TimeoutException` after `timeoutMs`.
     */

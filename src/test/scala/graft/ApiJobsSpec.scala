@@ -56,7 +56,9 @@ class ApiJobsSpec extends SparkSpec {
       ("durability.longRuns", 2, () => a.durability.longRuns(from, to).collect()),
       ("durability.durabilityTrend", 2,
         () => a.durability.durabilityTrend(from, to).collect()),
-      ("heat.heatCostPoints", 4, () => a.heat.heatCostPoints(from, to).collect()))
+      ("heat.heatCostPoints", 2, () => a.heat.heatCostPoints(from, to).collect()),
+      ("splits.paceHr statisticsOnly", 2,
+        () => a.splits.paceHr(3L, statisticsOnly = true).collect()))
   }
 
   test("api_serve calls at their job floor over an activity-partitioned root") {

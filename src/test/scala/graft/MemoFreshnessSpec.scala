@@ -24,8 +24,8 @@ class MemoFreshnessSpec extends SparkSpec {
       s.read.parquet(s"$d/t.parquet")
     }
     def rows(df: DataFrame): Seq[Int] = df.as[Int].collect().sorted.toSeq
-    def plan = Caches.preparedPlans.collect {
-      case (k, (_, p)) if k.startsWith("q:q_test_memo_append:") => p }.toSeq
+    def plan = Caches.memos().collect {
+      case (_, k, p) if k.startsWith("q:q_test_memo_append:") => p }
     try {
       Seq(1, 2, 3).toDF("x").write.parquet(table)
       val before = shared
@@ -71,7 +71,7 @@ class MemoFreshnessSpec extends SparkSpec {
     }
     val d = Files.createTempDirectory("graft-memo-slot").toString
     def slots =
-      Caches.preparedPlans.keys.filter(_.startsWith("q:q_test_memo_rewrite:"))
+      Caches.memos().map(_._2).filter(_.startsWith("q:q_test_memo_rewrite:"))
     Seq(1, 2, 3).toDF("x").write.parquet(s"$d/t.parquet")
     assert(q.fn(spark, d).count() === 3L)
     Seq(4, 5, 6, 7, 8).toDF("x").write.mode("overwrite")
