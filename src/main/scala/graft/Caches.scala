@@ -8,9 +8,10 @@ import org.apache.spark.storage.StorageLevel
 /** The one registry of driver-side memos over data dirs, one per live
   * `SparkSession`. It holds two kinds of memo under one rule: persisted
   * frames (the shingle, vector, model, pair and histogram frames that
-  * several queries or passes read) and values that hold no storage (the
-  * analyzed plans [[Q]] re-wraps per call, the schemas [[Tables]] infers,
-  * the silver tables the façade resolves).
+  * several queries or passes read, and the athlete-sized silver tables
+  * the façade serves) and values that hold no storage (the analyzed plans
+  * [[Q]] re-wraps per call, the schemas [[Tables]] infers, the façade's
+  * per-second series table).
   *
   *  - Slot: `name:dir`, one per logical memo over one dir in one session.
   *    Builder parameters (a cap, a `k`) belong in `name`.
@@ -83,11 +84,20 @@ object Caches {
     * unpersisted; the registry persists it.
     */
   def frame(s: SparkSession, dir: String, name: String)(build: => DataFrame)
-      : DataFrame = {
-    val v = stamp(s, dir).getOrElse("missing")
+      : DataFrame =
+    persisted(s, dir, name, stamp(s, dir).getOrElse("missing"))(build)
+
+  /** The shared frame `name` over `dir`, or `None` when `dir` cannot be
+    * listed (nothing is then built or kept): the frame form of [[value]].
+    */
+  private[graft] def optionalFrame(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): Option[DataFrame] =
+    stamp(s, dir).map(persisted(s, dir, name, _)(build))
+
+  private def persisted(s: SparkSession, dir: String, name: String, v: String)(
+      build: => DataFrame): DataFrame =
     memo(s, s"$name:$dir", v)(Persisted(build.persist(
       levelOverride.getOrElse(StorageLevel.MEMORY_AND_DISK)))).df
-  }
 
   /** The value `name` over `dir` (a plan, a schema, a resolved table),
     * versioned by the dir's stamp and `conf`, or `None` when `dir` cannot

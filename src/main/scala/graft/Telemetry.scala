@@ -7,7 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
@@ -21,7 +21,8 @@ object Telemetry {
     * figures sum over every task of the block's stages; `planMs` sums the
     * `QueryPlanningTracker` phases (parsing, analysis, optimization,
     * planning) of its SQL executions; `exchanges` counts the shuffle
-    * exchanges in their final physical plans (see [[shuffleExchanges]]).
+    * exchanges in their final physical plans (see [[shuffleExchanges]]) and
+    * `filesRead` sums the files their scans opened (see [[scannedFiles]]).
     */
   final case class Record(
       wallNs: Long,
@@ -36,7 +37,8 @@ object Telemetry {
       memorySpillBytes: Long,
       sqlExecutions: Int,
       planMs: Long,
-      exchanges: Int) {
+      exchanges: Int,
+      filesRead: Long) {
     def cpuMs: Long = cpuNs / 1000000L
   }
 
@@ -50,6 +52,16 @@ object Telemetry {
   private def shuffleExchanges(plan: SparkPlan): Int =
     PlanWalk.collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }.size
 
+  /** The `numFiles` metric of every file scan in `plan` and its subqueries
+    * (a dynamically pruned scan counts the partitions it kept), summed. A
+    * scan of a cached frame opens no file; the scan that builds the frame
+    * sits in the frame's own plan and is not counted here.
+    */
+  private def scannedFiles(plan: SparkPlan): Long =
+    PlanWalk.collectWithSubqueries(plan) {
+      case s: FileSourceScanExec => s.metrics.get("numFiles").fold(0L)(_.value)
+    }.sum
+
   /** Sums the events of the jobs whose tag set `counts` accepts. A task is
     * attributed through its stage, whose submission carries the job tags;
     * a SQL execution through the tags it started under.
@@ -62,6 +74,7 @@ object Telemetry {
     private var cpuNs, gcMs, shuffleRead, shuffleWrite, diskSpill, memSpill,
       planMs = 0L
     private var exchanges = 0
+    private var filesRead = 0L
 
     // the property SparkContext.addJobTag writes, comma-separated
     private def tagged(p: Properties): Boolean = counts(
@@ -99,8 +112,10 @@ object Telemetry {
             planMs += qe.tracker.phases.values.map(_.durationMs).sum
             // a failed execution may never have planned; planning it here
             // would run on the listener thread
-            if (!GraftBridge.executionFailed(end))
+            if (!GraftBridge.executionFailed(end)) {
               exchanges += shuffleExchanges(qe.executedPlan)
+              filesRead += scannedFiles(qe.executedPlan)
+            }
           }
         case _ =>
       }
@@ -108,7 +123,8 @@ object Telemetry {
 
     def record(wallNs: Long): Record = synchronized {
       Record(wallNs, jobs, stageIds.size, tasks, cpuNs, gcMs, shuffleRead,
-        shuffleWrite, diskSpill, memSpill, executionIds.size, planMs, exchanges)
+        shuffleWrite, diskSpill, memSpill, executionIds.size, planMs, exchanges,
+        filesRead)
     }
   }
 

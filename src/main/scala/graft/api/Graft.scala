@@ -22,23 +22,48 @@ import org.apache.spark.sql.functions._
   * streaming.Streams.catchUp; save/get profile + reviews -> plain
   * SilverWriter.upsertByPartition round trips; export -> SilverWriter.export.
   *
-  * Table resolution: each `root/<table>` is a [[graft.Caches]] value of
-  * this session, so a hot read neither re-lists partitions nor re-infers
-  * the schema, and the next read after a write sees it (the registry's
-  * version rule). A DataFrame a caller built before a write keeps the
-  * files it resolved and is not refreshed.
+  * Table resolution: each `root/<table>` is a [[graft.Caches]] memo of
+  * this session in slot `silver:<root>/<table>`, versioned by the dir's
+  * stamp, so a hot read neither re-lists partitions nor re-infers the
+  * schema, and the next read after a write sees it (the registry's
+  * version rule).
+  *  - Every table bounded by one row per run, lap or day (`activities`,
+  *    `splits`, `daily_wellness`, the profile, goal and review tables) is
+  *    a persisted frame. A warm call reads it from executor memory rather
+  *    than opening one parquet file per activity partition.
+  *  - The frame's read carries the `graft.frame` option, which a plain
+  *    `spark.read.parquet` of the same path lacks. Spark's cache matches a
+  *    plan by its relation, options included, so a plain read in the same
+  *    session never gets the frame and lists the dir afresh. An engine
+  *    write to the path still refreshes the frame (Spark re-caches by
+  *    path).
+  *  - `time_series_metrics` (one row per second) is a resolved plan that
+  *    holds no storage; see Plan shape.
+  *  - A DataFrame a caller built before a write is not guaranteed to see
+  *    it; build a new one.
+  *
+  * Sessions: the registry is per session. Two `Graft` objects over one
+  * root in one session share each frame's slot; a `Graft` over a
+  * `newSession()` gets slots of its own (over the one cached copy Spark's
+  * cache keeps for the context) and the registry holds them, and that
+  * session, until the context stops or [[graft.Caches.clear]] runs. A
+  * server therefore keeps one session per store, not one per request.
   *
   * Plan shape: the façade serves one athlete's store, so its analytical
-  * inputs are bounded by one athlete (the `activities` table, one row per
-  * run) or by one activity (that activity's `splits` or
+  * inputs are bounded by one athlete (the `activities` frame, one row per
+  * run) or by one activity (its rows of the `splits` frame, or its
   * `time_series_metrics` partition). At that size the fixed cost of a job
   * and an exchange outweighs any parallelism, so
   * [[graft.Plans.onePartition]] reads such an input in a single partition:
   * the aggregate, window, join or sort above it then needs no exchange and
-  * the call runs as one task per stage, usually in one job.
-  * `timeSeries.formAnomalySummary` (every activity's samples at once) and
-  * the `events` and `pipeline` tiers (corpus-sized inputs, the registered
-  * queries' own plans) do not take this path.
+  * the call runs as one task per stage, usually in one job. The series is
+  * not held in memory: that would keep every run's 1 Hz samples in
+  * executor storage, and a cached relation has no partition directories,
+  * so a one-activity read would scan every run's samples and the join from
+  * a run window (heat, durability) would lose its dynamic partition
+  * filter. `timeSeries.formAnomalySummary` (every activity's samples at
+  * once) and the `events` and `pipeline` tiers (corpus-sized inputs, the
+  * registered queries' own plans) do not take the one-partition path.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
@@ -49,9 +74,13 @@ final class Graft(val spark: SparkSession, root: String) {
   /** The table, or `None` when its path is missing: the registry's stamp
     * already answers that, so an optional table costs no failed read.
     */
-  private def optionalTable(name: String): Option[DataFrame] =
-    graft.Caches.value(spark, s"$root/$name", "silver")(
-      spark.read.parquet(s"$root/$name"))
+  private def optionalTable(name: String): Option[DataFrame] = {
+    val path = s"$root/$name"
+    if (name == "time_series_metrics")
+      graft.Caches.value(spark, path, "silver")(spark.read.parquet(path))
+    else graft.Caches.optionalFrame(spark, path, "silver")(
+      spark.read.option("graft.frame", "silver").parquet(path))
+  }
 
   /** Collects `df` and sorts it on the driver by `key`, ascending with
     * nulls first as `orderBy` does: a read that collects every row anyway

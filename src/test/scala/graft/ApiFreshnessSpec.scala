@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.api.Graft
 import graft.ingest.SilverWriter
@@ -51,14 +51,69 @@ class ApiFreshnessSpec extends SparkSpec {
     SilverWriter.upsertByPartition(splitRows(Seq(1L, 2L, 3L), 140.0),
       s"$root/splits")
     val g = new Graft(spark, root)
+    val initial = Caches.levels()
+    def paceHr(id: Long) = assert(g.splits.paceHr(id, statisticsOnly = true)
+      .head().getAs[Double]("median_heart_rate") === 142.0)
+    paceHr(1L)
+    // the first read adds the root's splits frame, and only that
     val before = Caches.levels()
+    assert(before.map(_._1).diff(initial.map(_._1)) === Seq(s"silver:$root/splits"))
     for (_ <- 1 to 2; id <- Seq(1L, 2L, 3L)) {
-      assert(g.splits.paceHr(id, statisticsOnly = true)
-        .head().getAs[Double]("median_heart_rate") === 142.0)
+      paceHr(id)
       assert(g.splits.formMetrics(id, statisticsOnly = true)
         .head().getAs[Long]("n_rows") === 3L)
     }
     assert(Caches.levels() === before)
+  }
+
+  private def runRows(ids: Seq[Long], km: Double): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Schemas.conform(ids.map(id => (id,
+      java.sql.Date.valueOf(java.time.LocalDate.of(2026, 6, 1).plusDays(id)), km))
+      .toDF("activity_id", "activity_date", "total_distance_km"), "activities")
+  }
+
+  test("an activities upsert is seen by acwr and weekly volume on the next call") {
+    val root = newRoot()
+    val path = s"$root/activities"
+    SilverWriter.upsertByPartition(runRows(Seq(1L, 2L), 5.0), path)
+    val g = new Graft(spark, root)
+    def acwrKm(): Double =
+      g.trainingLoad.acwr().agg(sum("load_km")).head().getDouble(0)
+    def weeklyKm(): Double =
+      g.trends.weeklyVolume().agg(sum("load_km")).head().getDouble(0)
+    assert(acwrKm() === 10.0)
+    assert(weeklyKm() === 10.0)
+
+    // activity 2 rewritten, activity 3 new
+    SilverWriter.upsertByPartition(runRows(Seq(2L, 3L), 8.0), path)
+    assert(acwrKm() === 21.0)
+    assert(weeklyKm() === 21.0)
+    assert(g.trainingLoad.acwr().count() === 3L)
+    val slots = Caches.levels().filter(_._1 == s"silver:$path")
+    assert(slots.size === 1)
+    assert(slots.head._2.useDisk)
+  }
+
+  test("a plain read of a served table is as fresh as it is without the frame") {
+    val root = newRoot()
+    val path = s"$root/activities"
+    SilverWriter.upsertByPartition(runRows(Seq(1L, 2L), 5.0), path)
+    val g = new Graft(spark, root)
+    assert(g.trainingLoad.acwr().count() === 2L) // builds and fills the frame
+
+    SilverWriter.upsertByPartition(runRows(Seq(3L), 5.0), path)
+    assert(spark.read.parquet(path).count() === 3L)
+    assert(g.trainingLoad.acwr().count() === 3L)
+
+    // a partition copied into place outside Spark, read before any façade call
+    val elsewhere = s"${newRoot()}/activities"
+    SilverWriter.upsertByPartition(runRows(Seq(4L), 5.0), elsewhere)
+    Files.move(Paths.get(s"$elsewhere/activity_id=4"),
+      Paths.get(s"$path/activity_id=4"))
+    assert(spark.read.parquet(path).count() === 4L)
+    assert(g.trainingLoad.acwr().count() === 4L)
   }
 
   test("profile: a missing table, then its first write, then an overwrite") {

@@ -67,6 +67,23 @@ class ApiJobsSpec extends SparkSpec {
     assert(got === athleteCalls.map { case (name, n, _) => name -> n })
   }
 
+  /** Files a warm call opens: the athlete-sized tables are frames, so only
+    * a call that reads one activity's series opens a file, that partition's.
+    */
+  private val warmFiles = Map(
+    "splits.paceHr" -> 0L, "trainingLoad.acwr" -> 0L,
+    "physiology.recoveryStatus" -> 0L, "trends.weeklyVolume" -> 0L,
+    "comparisons.findSimilarWorkouts" -> 0L,
+    "durability.activityDurability" -> 1L, "timeSeries.timeRangeStats" -> 1L)
+
+  test("warm calls read the athlete tables from memory and one series file") {
+    val calls = athleteCalls.filter(c => warmFiles.contains(c._1))
+    calls.foreach(_._3())
+    val got = calls.map { case (name, _, run) =>
+      name -> Telemetry.measure(spark, "api-files")(run()).filesRead }.toMap
+    assert(got === warmFiles)
+  }
+
   test("acwr windows keep their athlete key") {
     val acwr = athlete.trainingLoad.acwr()
     acwr.collect()

@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import graft.api.Graft
+import graft.ingest.SilverWriter
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
+
 /** The memo registry belongs to a session: a frame built in one session is
   * never handed to another, and a stopped session's frames and plans go
   * with it, so the session built after it gets fresh ones.
@@ -29,6 +34,35 @@ class SessionScopeSpec extends SparkSpec {
       assert(shared(other).count() === 3L)
       assert(Caches.levels().count(_._1 == s"test-scope:$d") === 2)
     } finally Caches.clear()
+  }
+
+  test("façade tables: one slot per session, whatever the Graft count") {
+    val root = Files.createTempDirectory("graft-session-silver").toString
+    val path = s"$root/activities"
+    val s = spark
+    import s.implicits._
+    SilverWriter.upsertByPartition(Schemas.conform(
+      Seq((1L, java.sql.Date.valueOf("2026-06-01"), 5.0)).toDF(
+        "activity_id", "activity_date", "total_distance_km"), "activities"),
+      path)
+    val slot = s"silver:$path"
+    def holders(): Seq[SparkSession] =
+      Caches.memos().collect { case (h, `slot`, _) => h }
+    def cached(h: SparkSession): StorageLevel =
+      h.read.option("graft.frame", "silver").parquet(path).storageLevel
+    val other = spark.newSession()
+    try {
+      new Graft(spark, root).trainingLoad.acwr().collect()
+      new Graft(spark, root).trends.weeklyVolume().collect()
+      assert(holders().size === 1 && (holders().head eq spark))
+      new Graft(other, root).trainingLoad.acwr().collect()
+      assert(holders().size === 2 && holders().exists(_ eq other))
+      assert(Caches.levels().count(_._1 == slot) === 2)
+      assert(Seq(spark, other).forall(h => cached(h).useDisk))
+    } finally Caches.clear()
+    assert(holders().isEmpty)
+    assert(!Caches.levels().exists(_._1 == slot))
+    assert(Seq(spark, other).forall(h => cached(h) == StorageLevel.NONE))
   }
 
   test("a stopped session's memos go with it; the rebuilt session builds afresh") {

@@ -47,10 +47,17 @@ python3 perfbench/run.py --workload api_serve --seed 1 --seconds 10 --trace 1 \
   | tail -n 1 | python3 -c '
 import json, sys
 r = json.loads(sys.stdin.read())
-listed = r["metrics"]["api.files_listed_per_call"]["value"]
-jobs = r["metrics"]["api.jobs_per_call"]["value"]
+m = r["metrics"]
+listed = m["api.files_listed_per_call"]["value"]
+jobs = m["api.jobs_per_call"]["value"]
 print("api_serve: correct=%s failed=%s files_listed_per_call=%s jobs_per_call=%s"
       % (r["correct"], r["failed"], listed, jobs))
+# context for the gate line, not gated: executor CPU and per-family p50
+shown = ["exec.cpu_s"] + ["api.%s.p50_ms" % f for f in ("splits",
+    "trainingLoad", "physiology", "trends", "comparisons", "durability",
+    "heat", "timeSeries")]
+print("api_serve: " + " ".join("%s=%s" % (k, m.get(k, {}).get("value"))
+                               for k in shown))
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 and listed == 0
          and jobs <= 1.125 else 1)'
 
