@@ -8,8 +8,9 @@ import org.apache.spark.storage.StorageLevel
 /** The one registry of driver-side memos over data dirs, one per live
   * `SparkSession`. It holds two kinds of memo under one rule: persisted
   * frames (the shingle, vector, model, pair and histogram frames that
-  * several queries or passes read, and the athlete-sized silver tables
-  * the façade serves) and values that hold no storage (the analyzed plans
+  * several queries or passes read, the athlete-sized silver tables the
+  * façade serves, and its per-run summaries of the series) and values
+  * that hold no storage (the analyzed plans
   * [[Q]] re-wraps per call, the schemas [[Tables]] infers, the façade's
   * per-second series table).
   *

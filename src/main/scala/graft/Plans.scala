@@ -102,4 +102,12 @@ object Plans {
     */
   def sortedInOne(df: DataFrame, cols: String*): DataFrame =
     onePartition(df).sortWithinPartitions(cols.map(col): _*)
+
+  /** `left` inner-joined to `right` on `key`, both in one partition. A
+    * sort-merge join of two one-partition children needs no exchange, and
+    * unlike a broadcast join it runs no job to build a side: the join runs
+    * in the task that reads both inputs.
+    */
+  def joinedInOne(left: DataFrame, right: DataFrame, key: String): DataFrame =
+    onePartition(left).hint("merge").join(onePartition(right), Seq(key))
 }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.{SparkListenerDriverAccumUpdates,
+  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Per-block cost records, attributed by Spark job tag rather than by time
   * window, so blocks on different threads are accounted apart.
@@ -52,15 +54,22 @@ object Telemetry {
   private def shuffleExchanges(plan: SparkPlan): Int =
     PlanWalk.collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }.size
 
-  /** The `numFiles` metric of every file scan in `plan` and its subqueries
-    * (a dynamically pruned scan counts the partitions it kept), summed. A
-    * scan of a cached frame opens no file; the scan that builds the frame
-    * sits in the frame's own plan and is not counted here.
+  /** The files the scans of one execution opened, from `posted`, the
+    * driver-side metric updates that execution sent. The scans are those of
+    * `plan`, its subqueries and the plans of the cached frames it reads. A
+    * scan sends its `numFiles` once, when it runs (a dynamically pruned scan
+    * counts the partitions it kept), so a frame's scan counts in the
+    * execution that builds the frame and not in the ones that read it.
     */
-  private def scannedFiles(plan: SparkPlan): Long =
-    PlanWalk.collectWithSubqueries(plan) {
-      case s: FileSourceScanExec => s.metrics.get("numFiles").fold(0L)(_.value)
-    }.sum
+  private def scannedFiles(plan: SparkPlan, posted: collection.Map[Long, Long])
+      : Long = {
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+      PlanWalk.collectWithSubqueries(p) {
+        case s: FileSourceScanExec => Seq(s)
+        case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      }.flatten
+    scans(plan).flatMap(_.metrics.get("numFiles")).flatMap(m => posted.get(m.id)).sum
+  }
 
   /** Sums the events of the jobs whose tag set `counts` accepts. A task is
     * attributed through its stage, whose submission carries the job tags;
@@ -75,6 +84,7 @@ object Telemetry {
       planMs = 0L
     private var exchanges = 0
     private var filesRead = 0L
+    private val driverUpdates = mutable.Map.empty[Long, mutable.Map[Long, Long]]
 
     // the property SparkContext.addJobTag writes, comma-separated
     private def tagged(p: Properties): Boolean = counts(
@@ -107,14 +117,19 @@ object Telemetry {
       e match {
         case s: SparkListenerSQLExecutionStart if counts(s.jobTags) =>
           executionIds += s.executionId
+        case u: SparkListenerDriverAccumUpdates if executionIds(u.executionId) =>
+          driverUpdates.getOrElseUpdate(u.executionId, mutable.Map.empty) ++=
+            u.accumUpdates
         case end: SparkListenerSQLExecutionEnd if executionIds(end.executionId) =>
+          val posted = driverUpdates.remove(end.executionId)
+            .getOrElse(mutable.Map.empty[Long, Long])
           Option(GraftBridge.queryExecution(end)).foreach { qe =>
             planMs += qe.tracker.phases.values.map(_.durationMs).sum
             // a failed execution may never have planned; planning it here
             // would run on the listener thread
             if (!GraftBridge.executionFailed(end)) {
               exchanges += shuffleExchanges(qe.executedPlan)
-              filesRead += scannedFiles(qe.executedPlan)
+              filesRead += scannedFiles(qe.executedPlan, posted)
             }
           }
         case _ =>

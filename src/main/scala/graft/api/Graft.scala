@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.Plans.{onePartition, sortedInOne}
+import graft.Plans.{joinedInOne, onePartition, sortedInOne}
 import graft.domain._
 import graft.ingest.SilverWriter
 import graft.operators.Aggregates
@@ -50,20 +50,27 @@ import org.apache.spark.sql.functions._
   * server therefore keeps one session per store, not one per request.
   *
   * Plan shape: the façade serves one athlete's store, so its analytical
-  * inputs are bounded by one athlete (the `activities` frame, one row per
-  * run) or by one activity (its rows of the `splits` frame, or its
-  * `time_series_metrics` partition). At that size the fixed cost of a job
-  * and an exchange outweighs any parallelism, so
+  * inputs are bounded by one athlete or by one activity. At that size the
+  * fixed cost of a job and an exchange outweighs any parallelism, so
   * [[graft.Plans.onePartition]] reads such an input in a single partition:
   * the aggregate, window, join or sort above it then needs no exchange and
-  * the call runs as one task per stage, usually in one job. The series is
-  * not held in memory: that would keep every run's 1 Hz samples in
-  * executor storage, and a cached relation has no partition directories,
-  * so a one-activity read would scan every run's samples and the join from
-  * a run window (heat, durability) would lose its dynamic partition
-  * filter. `timeSeries.formAnomalySummary` (every activity's samples at
-  * once) and the `events` and `pipeline` tiers (corpus-sized inputs, the
-  * registered queries' own plans) do not take the one-partition path.
+  * the call runs as one task per stage, usually in one job.
+  *  - Frames: the athlete-sized tables above, and two per-run summaries of
+  *    `time_series_metrics`, each in slot `<name>:<root>/time_series_metrics`
+  *    and versioned by that dir's stamp: `durability` (the
+  *    [[graft.domain.Durability.perActivity]] row of every usable run) and
+  *    `heat` (each run's mean air temperature). The durability and heat
+  *    calls read only frames, so a warm call opens no file.
+  *  - The 1 Hz samples are not held: that would keep every run's samples
+  *    in executor storage. Only `timeSeries` reads them, one activity's
+  *    partition (`timeRangeStats`) or every run's (`formAnomalySummary`).
+  *  - The trade: a series write, even of one run, is a new version of the
+  *    dir, so the next durability or heat call rebuilds its summary from
+  *    every run's samples, in one task. The summary is paid for once per
+  *    ingest rather than once per call.
+  *  - `timeSeries.formAnomalySummary` and the `events` and `pipeline`
+  *    tiers (corpus-sized inputs, the registered queries' own plans) do
+  *    not take the one-partition path.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
@@ -119,6 +126,14 @@ final class Graft(val spark: SparkSession, root: String) {
 
   private def seriesOf(activityId: Long): DataFrame =
     table("time_series_metrics").where(col("activity_id") === activityId)
+
+  /** The per-run summary `name` of every run's series, a frame in slot
+    * `name:<root>/time_series_metrics` (see Plan shape).
+    */
+  private def seriesSummary(name: String)(summarize: DataFrame => DataFrame)
+      : DataFrame =
+    graft.Caches.frame(spark, s"$root/time_series_metrics", name)(
+      summarize(onePartition(table("time_series_metrics"))))
 
   /** Splits tools: projection groups with the reference's statistics_only
     * mode (aggregate before collect — the ~80 % output reduction is an API
@@ -344,17 +359,18 @@ final class Graft(val spark: SparkSession, root: String) {
     private val tsCols = Seq("activity_id", "timestamp_s", "heart_rate",
       "speed", "ground_contact_time", "vertical_oscillation", "vertical_ratio")
 
+    /** The durability row of every usable run. */
+    private def perRun: DataFrame = seriesSummary("durability")(ts =>
+      Durability.perActivity(ts.select(tsCols.map(col): _*)))
+
     /** get_activity_durability: 0-or-1-row frame (empty ≙ the reference's
       * None — no usable HR/speed rows or an empty time span).
       */
     def activityDurability(activityId: Long): DataFrame =
-      Durability.perActivity(
-        onePartition(seriesOf(activityId).select(tsCols.map(col): _*)))
+      perRun.where(col("activity_id") === activityId)
 
     /** The qualifying long runs joined to their per-run durability rows,
-      * unordered. On the activity-partitioned layout the broadcast runs side
-      * prunes the series scan to the runs' partitions (dynamic partition
-      * pruning); an unpartitioned series table is read whole.
+      * unordered.
       */
     private def runRows(startDate: String, endDate: String,
         minDistanceKm: Double): DataFrame = {
@@ -363,9 +379,7 @@ final class Graft(val spark: SparkSession, root: String) {
           col("total_distance_km") >= minDistanceKm)
         .select(col("activity_id"), col("activity_date"),
           col("total_distance_km").as("distance_km"))
-      Durability.perActivity(onePartition(
-          table("time_series_metrics").select(tsCols.map(col): _*)))
-        .join(runs, Seq("activity_id"))
+      joinedInOne(perRun, runs, "activity_id")
     }
 
     /** The qualifying long runs with their per-run durability rows, date
@@ -391,7 +405,8 @@ final class Graft(val spark: SparkSession, root: String) {
   /** Heat-adjustment tools (rag/queries/heat_adjustment.py:117-192): the
     * hinge-model fit + climate-neutral trend over a date window. Per-run
     * temperature is the activity's mean air temperature from the time
-    * series, and x3 is the raw day number (days since 1970-01-01): the fit
+    * series (the `heat` summary frame, see Plan shape), and x3 is the raw
+    * day number (days since 1970-01-01): the fit
     * is shift-invariant in x3, so no base-date join is needed.
     * Stats.heatTrend does the fit and the neutral-HR trend as ONE
     * aggregate + 1-row column math, and carries the
@@ -400,16 +415,15 @@ final class Graft(val spark: SparkSession, root: String) {
   object heat {
     private def observations(startDate: String, endDate: String,
         refTempC: Double): DataFrame = {
-      val temps = onePartition(table("time_series_metrics"))
-        .groupBy("activity_id")
-        .agg(avg("air_temperature").as("temp_c"))
+      val temps = seriesSummary("heat")(
+        _.groupBy("activity_id").agg(avg("air_temperature").as("temp_c")))
       val acts = table("activities")
         .where(col("activity_date").between(startDate, endDate) &&
           col("avg_heart_rate").isNotNull && col("average_speed") > 0)
         .select(col("activity_id"), col("activity_date"),
           col("avg_heart_rate").as("y"),
           (lit(1000.0) / col("average_speed")).as("x1"))
-      acts.join(temps, Seq("activity_id"))
+      joinedInOne(acts, temps, "activity_id")
         .where(col("temp_c").isNotNull)
         .withColumn("x2", graft.operators.Stats.heatHinge(col("temp_c"), refTempC))
         .withColumn("x3",

@@ -96,6 +96,44 @@ class ApiFreshnessSpec extends SparkSpec {
     assert(slots.head._2.useDisk)
   }
 
+  test("a series upsert is seen by heat and durability on the next call") {
+    val root = AthleteFixture.copy()
+    val series = s"$root/time_series_metrics"
+    val g = new Graft(spark, root)
+    val (from, to) = ("2026-05-02", "2026-06-15")
+    def trend(g: Graft): Seq[Any] = g.heat.heatTrend(from, to).head().toSeq
+    def decoupling(id: Long): Seq[Double] = g.durability.activityDurability(id)
+      .collect().map(_.getAs[Double]("decoupling_pct")).toSeq
+    def tempOn(id: Long): Double = g.heat.heatCostPoints(from, to)
+      .where(col("date") === AthleteFixture.date(id)).head().getAs[Double]("temp_c")
+    val before = trend(g)
+    assert(decoupling(25L).isEmpty)
+
+    // run 3 rewritten hotter, with 10 % decoupling
+    SilverWriter.upsertByPartition(
+      AthleteFixture.series(spark, 3L, 100.0, 110.0, 35.0), series)
+    assert(decoupling(3L) === Seq(10.0))
+    assert(tempOn(3L) === 35.0)
+    val after = trend(g)
+    assert(after !== before)
+    // as a façade that never saw the old files answers
+    val cold = trend(new Graft(spark, AthleteFixture.copy(root)))
+    after.zip(cold).foreach {
+      case (a: Double, c: Double) => assert(math.abs(a - c) <= 1e-9 * math.abs(c))
+      case (a, c) => assert(a === c)
+    }
+
+    // a new run's partition (run 25 has no activities row: durability only)
+    SilverWriter.upsertByPartition(
+      AthleteFixture.series(spark, 25L, 100.0, 105.0, 20.0), series)
+    assert(decoupling(25L) === Seq(5.0))
+    Seq("heat", "durability").foreach { name =>
+      val slots = Caches.levels().filter(_._1 == s"$name:$series")
+      assert(slots.size === 1, name)
+      assert(slots.head._2.useDisk, name)
+    }
+  }
+
   test("a plain read of a served table is as fresh as it is without the frame") {
     val root = newRoot()
     val path = s"$root/activities"

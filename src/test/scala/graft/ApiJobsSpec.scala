@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import graft.api.Graft
+import graft.ingest.SilverWriter
 import org.apache.spark.sql.functions._
 
 /** The façade's hot calls run in as few Spark jobs as their result needs:
@@ -31,10 +35,11 @@ class ApiJobsSpec extends SparkSpec {
     assert(jobs(g.splits.paceHr(100L).collect()) === 1)
   }
 
-  /** The eight `api_serve` calls (9 jobs: 1.125 per call), then the other
-    * one-partition reads, each at its job count over an activity-partitioned
-    * root. Each count is taken on a freshly built DataFrame: a second action
-    * on one Dataset would reuse its materialized stages.
+  /** The eight `api_serve` calls (8 jobs: 1 per call), then the other
+    * one-partition reads, each at its job count and with no exchange over
+    * an activity-partitioned root. Each count is taken on a freshly built
+    * DataFrame: a second action on one Dataset would reuse its materialized
+    * stages.
     */
   private lazy val athlete = new Graft(spark, AthleteFixture.root)
   private lazy val athleteCalls: Seq[(String, Int, () => Any)] = {
@@ -49,32 +54,37 @@ class ApiJobsSpec extends SparkSpec {
         () => a.comparisons.findSimilarWorkouts(4L).collect()),
       ("durability.activityDurability", 1,
         () => a.durability.activityDurability(3L).collect()),
-      ("heat.heatTrend", 2, () => a.heat.heatTrend(from, to).collect()),
+      ("heat.heatTrend", 1, () => a.heat.heatTrend(from, to).collect()),
       ("timeSeries.timeRangeStats", 1,
         () => a.timeSeries.timeRangeStats(3L, 5, 30, "heart_rate").collect()),
       ("trends.monthlyVolume", 1, () => a.trends.monthlyVolume().collect()),
-      ("durability.longRuns", 2, () => a.durability.longRuns(from, to).collect()),
-      ("durability.durabilityTrend", 2,
+      ("durability.longRuns", 1, () => a.durability.longRuns(from, to).collect()),
+      ("durability.durabilityTrend", 1,
         () => a.durability.durabilityTrend(from, to).collect()),
-      ("heat.heatCostPoints", 2, () => a.heat.heatCostPoints(from, to).collect()),
+      ("heat.heatCostPoints", 1, () => a.heat.heatCostPoints(from, to).collect()),
       ("splits.paceHr statisticsOnly", 2,
         () => a.splits.paceHr(3L, statisticsOnly = true).collect()))
   }
 
   test("api_serve calls at their job floor over an activity-partitioned root") {
     athleteCalls.foreach(_._3()) // resolve every table first
-    val got = athleteCalls.map { case (name, _, run) => name -> jobs(run()) }
-    assert(got === athleteCalls.map { case (name, n, _) => name -> n })
+    val got = athleteCalls.map { case (name, _, run) =>
+      val r = Telemetry.measure(spark, "api-jobs")(run())
+      name -> (r.jobs, r.exchanges)
+    }
+    assert(got === athleteCalls.map { case (name, n, _) => name -> (n, 0) })
   }
 
-  /** Files a warm call opens: the athlete-sized tables are frames, so only
-    * a call that reads one activity's series opens a file, that partition's.
+  /** Files a warm call opens: the athlete-sized tables and the per-run
+    * series summaries are frames, so only a call that reads one activity's
+    * samples opens a file, that partition's.
     */
   private val warmFiles = Map(
     "splits.paceHr" -> 0L, "trainingLoad.acwr" -> 0L,
     "physiology.recoveryStatus" -> 0L, "trends.weeklyVolume" -> 0L,
     "comparisons.findSimilarWorkouts" -> 0L,
-    "durability.activityDurability" -> 1L, "timeSeries.timeRangeStats" -> 1L)
+    "durability.activityDurability" -> 0L, "heat.heatTrend" -> 0L,
+    "timeSeries.timeRangeStats" -> 1L)
 
   test("warm calls read the athlete tables from memory and one series file") {
     val calls = athleteCalls.filter(c => warmFiles.contains(c._1))
@@ -96,14 +106,33 @@ class ApiJobsSpec extends SparkSpec {
     windows.foreach(w => assert(w.partitionSpec.nonEmpty, w.toString))
   }
 
-  test("a one-partition series read keeps its dynamic partition filter") {
-    val (from, to) = ("2026-05-10", "2026-05-20")
-    Seq(athlete.heat.heatTrend(from, to),
-        athlete.durability.durabilityTrend(from, to)).foreach { df =>
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Coalesce 1"), plan)
-      assert(plan.contains("dynamicpruningexpression(activity_id"), plan)
-    }
+  test("heat and durability frames: warm reads no file, a series write one pass") {
+    val root = AthleteFixture.copy()
+    val series = s"$root/time_series_metrics"
+    val g = new Graft(spark, root)
+    val (from, to) = ("2026-05-02", "2026-06-15")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "heat.heatTrend" -> (() => g.heat.heatTrend(from, to).collect()),
+      "durability.activityDurability" ->
+        (() => g.durability.activityDurability(3L).collect()),
+      "heat.heatCostPoints" -> (() => g.heat.heatCostPoints(from, to).collect()),
+      "durability.longRuns" -> (() => g.durability.longRuns(from, to).collect()),
+      "durability.durabilityTrend" ->
+        (() => g.durability.durabilityTrend(from, to).collect()))
+    def files(): Seq[(String, Long)] = calls.map { case (name, run) =>
+      name -> Telemetry.measure(spark, "api-files")(run()).filesRead }
+    calls.foreach(_._2())
+    assert(files() === calls.map(_._1 -> 0L))
+
+    SilverWriter.upsertByPartition(
+      AthleteFixture.series(spark, 3L, 140.0, 150.0, 25.0), series)
+    val seriesFiles = Using.resource(Files.walk(Paths.get(series)))(
+      _.iterator().asScala.count(_.toString.endsWith(".parquet"))).toLong
+    assert(seriesFiles >= AthleteFixture.ids.size)
+    // the first heat and the first durability call each build their frame
+    assert(files() === calls.map(_._1).zip(
+      Seq(seriesFiles, seriesFiles, 0L, 0L, 0L)))
+    assert(files() === calls.map(_._1 -> 0L))
   }
 
   test("recovery status and split reads keep date / split order across files written out of order") {

@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import graft.ingest.SilverWriter
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One athlete's silver root laid out as ingest writes it: activities,
@@ -25,6 +28,28 @@ object AthleteFixture {
 
   def date(id: Long): java.sql.Date =
     java.sql.Date.valueOf(java.time.LocalDate.of(2026, 5, 2).plusDays(2 * (id - 1)))
+
+  /** A copy of the fixture root (or of `src`), for a spec that writes. */
+  def copy(src: String = root): String = {
+    val (from, to) = (Paths.get(src), Files.createTempDirectory("graft-athlete-copy"))
+    Using.resource(Files.walk(from))(_.iterator().asScala.foreach { p =>
+      if (p != from) Files.copy(p, to.resolve(from.relativize(p)))
+    })
+    to.toString
+  }
+
+  /** 40 1 Hz samples of run `id` at constant speed and air temperature
+    * `tempC`, with heart rate `hrFront` before the span's midpoint and
+    * `hrBack` after it: a decoupling of (hrBack / hrFront - 1) * 100 %.
+    */
+  def series(spark: SparkSession, id: Long, hrFront: Double, hrBack: Double,
+      tempC: Double): DataFrame = {
+    import spark.implicits._
+    Schemas.conform((0 until 40).map { t =>
+      (id, t, t.toDouble, if (t < 20) hrFront else hrBack, 3.0, tempC)
+    }.toDF("activity_id", "seq_no", "timestamp_s", "heart_rate", "speed",
+      "air_temperature"), "time_series_metrics")
+  }
 
   private def build(spark: SparkSession): String = {
     import spark.implicits._

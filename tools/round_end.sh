@@ -39,10 +39,10 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_OUT=BENCH_FULL.json \
   sbt -batch "runMain graft.Bench" \
   | grep '"metric"' | sed 's/^\[info\] //'
 
-echo "== 4/5 traced api_serve: correct, no failed op, no file listing on a hot read, job count"
-# The job count per call is deterministic (same calls, same plans), so its
-# ceiling is the measured value, not a noise band: a plan that gains a job
-# on a hot façade call fails here.
+echo "== 4/5 traced api_serve: correct, no failed op, no file listing on a hot read, job and exchange count"
+# The job and exchange counts per call are deterministic (same calls, same
+# plans), so their ceilings are the measured values, not a noise band: a
+# plan that gains a job or an exchange on a hot façade call fails here.
 python3 perfbench/run.py --workload api_serve --seed 1 --seconds 10 --trace 1 \
   | tail -n 1 | python3 -c '
 import json, sys
@@ -50,16 +50,18 @@ r = json.loads(sys.stdin.read())
 m = r["metrics"]
 listed = m["api.files_listed_per_call"]["value"]
 jobs = m["api.jobs_per_call"]["value"]
-print("api_serve: correct=%s failed=%s files_listed_per_call=%s jobs_per_call=%s"
-      % (r["correct"], r["failed"], listed, jobs))
-# context for the gate line, not gated: executor CPU and per-family p50
-shown = ["exec.cpu_s"] + ["api.%s.p50_ms" % f for f in ("splits",
-    "trainingLoad", "physiology", "trends", "comparisons", "durability",
-    "heat", "timeSeries")]
+exchanges = m["plan.exchanges"]["value"]
+print("api_serve: correct=%s failed=%s files_listed_per_call=%s jobs_per_call=%s exchanges=%s"
+      % (r["correct"], r["failed"], listed, jobs, exchanges))
+# context for the gate line, not gated: driver and executor cost, jobs per
+# pass, and the per-family p50
+shown = ["api.driver_ms", "sched.jobs", "exec.cpu_s"] + [
+    "api.%s.p50_ms" % f for f in ("splits", "trainingLoad", "physiology",
+    "trends", "comparisons", "durability", "heat", "timeSeries")]
 print("api_serve: " + " ".join("%s=%s" % (k, m.get(k, {}).get("value"))
                                for k in shown))
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 and listed == 0
-         and jobs <= 1.125 else 1)'
+         and jobs <= 1.0 and exchanges == 0 else 1)'
 
 echo "== 5/5 scale-aware shuffle gates (set SCALE_DIRS to enable)"
 for d in ${SCALE_DIRS:-}; do
